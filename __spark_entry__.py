@@ -681,12 +681,11 @@ def q_mlp_pair_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             "id2",
         )
     )
-    from entity_deduplication_spark.sources.io import aqe_local_checkpoint
+    from entity_deduplication_spark.sources.io import stage
 
-    # one AQE-planned materialization for the two consumers (driver-side
-    # fit + distributed scoring): no cache leak, and the join plan never
-    # executes through the non-adaptive RDD-checkpoint path
-    feat = aqe_local_checkpoint(pair_features(feat))
+    # one materialization for the two consumers (driver-side fit +
+    # distributed scoring)
+    feat = stage(pair_features(feat))
     labeled = feat.withColumn("label", (F.col("jaccard") >= 0.5).cast("double"))
     params = train_mlp_scorer(labeled)
     return score_with_mlp(feat, params).select("id1", "id2", "mlp_score")
@@ -748,12 +747,11 @@ def q_ml_pair_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             "id2",
         )
     )
-    from entity_deduplication_spark.sources.io import aqe_local_checkpoint
+    from entity_deduplication_spark.sources.io import stage
 
-    # one AQE-planned materialization for the two consumers (driver-side
-    # fit + distributed scoring): no cache leak, and the join plan never
-    # executes through the non-adaptive RDD-checkpoint path
-    feat = aqe_local_checkpoint(pair_features(feat))
+    # one materialization for the two consumers (driver-side fit +
+    # distributed scoring)
+    feat = stage(pair_features(feat))
     labeled = feat.withColumn(
         "label", (F.col("jaccard") >= 0.5).cast("double")
     )

@@ -11,8 +11,6 @@ blocking keys are built from.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
@@ -177,16 +175,6 @@ def _batch_shingles(
     return out
 
 
-def audio_shingles_udf(frame_ms: int, hop_ms: int, k: int, levels: int):
-    """Factory: pandas_udf (bytes) -> array<bigint> audio feature shingles."""
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _audio_shingles(raw: pd.Series) -> pd.Series:
-        return pd.Series(_batch_shingles(raw, frame_ms, hop_ms, k, levels))
-
-    return _audio_shingles
-
-
 def audio_signature_udf(
     frame_ms: int,
     hop_ms: int,
@@ -220,22 +208,3 @@ def audio_signature_udf(
         )
 
     return _audio_sig
-
-
-def decode_map_in_pandas_schema() -> str:
-    return "clip_id string, pcm array<float>, sr_hz int"
-
-
-def decode_map_in_pandas(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas variant of decode for pipelines that need PCM + sr."""
-    for pdf in batches:
-        decoded = [decode_wav(b) for b in pdf["bytes"]]
-        yield pd.DataFrame(
-            {
-                "clip_id": pdf["clip_id"].to_numpy(),
-                "pcm": [d[0] for d in decoded],
-                "sr_hz": [d[1] for d in decoded],
-            }
-        )

@@ -7,10 +7,10 @@ Usage (cluster):
         --input  <parquet-or-iceberg-table-of-clips> \
         --output <dir-or-table-prefix> \
         --checkpoint-dir <durable-path> \
-        [--resume] [--match-threshold 0.75] [--block-size-limit 1000]
+        [--resume] [--match-threshold 0.75]
 
 Replays the reference CLI surface (reference run.py:24-43: --input,
---output-dir, --block-size-limit, thresholds) on the Spark engine.
+--output-dir, thresholds) on the Spark engine.
 Every stage checkpoint lands under --checkpoint-dir; rerunning with
 --resume continues from the last completed stage.
 """
@@ -32,7 +32,6 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
                    help="reuse existing stage checkpoints")
     p.add_argument("--match-threshold", type=float, default=0.75)
     p.add_argument("--jaccard-threshold", type=float, default=0.8)
-    p.add_argument("--block-size-limit", type=int, default=1000)
     p.add_argument("--min-run-chars", type=int, default=20)
     p.add_argument("--cores", type=int, default=None,
                    help="local-mode parallelism (ignored under a cluster master)")
@@ -64,7 +63,6 @@ def main(argv: list[str] | None = None) -> int:
     cfg = DedupConfig(
         match_threshold=args.match_threshold,
         jaccard_threshold=args.jaccard_threshold,
-        block_size_limit=args.block_size_limit,
         min_run_chars=args.min_run_chars,
         checkpoint_dir=args.checkpoint_dir,
     )

@@ -16,7 +16,6 @@ from dataclasses import dataclass, field
 class DedupConfig:
     # --- transcript shingling ---
     shingle_k: int = 3            # words per shingle
-    char_shingle_k: int = 8       # chars per shingle (short-text fallback)
 
     # --- MinHash / LSH ---
     minhash_k: int = 128          # signature length
@@ -25,9 +24,7 @@ class DedupConfig:
     minhash_seed: int = 42
 
     # --- SimHash ---
-    simhash_bits: int = 64
     simhash_hamming_max: int = 3  # near-dup Hamming radius
-    simhash_block_bits: int = 16  # prefix width (legacy prefix helpers only)
     # Hamming blocking splits the signature into n_blocks contiguous
     # blocks and bands on every (n_blocks - hamming_max)-subset of them
     # (guaranteed complete for the radius — Manku et al., WWW'07). The
@@ -108,10 +105,8 @@ class DedupConfig:
         default_factory=lambda: {
             # evidence weights, shaped after the reference's feature-weight
             # table (deterministic_feature.py:80-102) re-targeted to audio:
-            "exact_bytes": 1.0,
             "transcript_jaccard": 0.9,
             "audio_jaccard": 0.8,
-            "simhash": 0.7,
             "substring_run": 0.8,
         }
     )

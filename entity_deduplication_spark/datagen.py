@@ -190,15 +190,22 @@ def generate_clips(
 # scale (125 groups at 8k clips; still only ~8 B/row of footer overhead).
 CLIPS_ROW_GROUP_SIZE = 64
 
+# cached generated inputs live next to the package, in <repo>/.data
+DATA_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".data"
+)
+
 
 def ensure_clips_parquet(
-    n_clips: int, seed: int = 42, data_dir: str = "/root/repo/.data"
+    n_clips: int, seed: int = 42, data_dir: str = DATA_DIR
 ) -> tuple[str, str]:
     """Materialize (and cache) the deterministic clips + truth parquet.
 
-    A cached clips file written with the old oversized row groups is
-    regenerated in place (layout-only change; the rows are deterministic
-    from (n_clips, seed) either way).
+    A cached clips file with any row group larger than
+    ``CLIPS_ROW_GROUP_SIZE`` is regenerated (layout-only change; the rows
+    are deterministic from (n_clips, seed) either way). Each file is
+    written to ``<path>.tmp`` and renamed into place, so an interrupted
+    write never leaves a truncated file under the cached name.
     """
     os.makedirs(data_dir, exist_ok=True)
     clips_path = os.path.join(data_dir, f"clips_n{n_clips}_s{seed}.parquet")
@@ -209,14 +216,19 @@ def ensure_clips_parquet(
             import pyarrow.parquet as pq
 
             meta = pq.ParquetFile(clips_path).metadata
-            rows_per_group = meta.num_rows / max(meta.num_row_groups, 1)
-            stale = rows_per_group > CLIPS_ROW_GROUP_SIZE
+            biggest = max(
+                (meta.row_group(i).num_rows for i in range(meta.num_row_groups)),
+                default=0,
+            )
+            stale = biggest > CLIPS_ROW_GROUP_SIZE
         except Exception:
             stale = True
     if stale or not (os.path.exists(clips_path) and os.path.exists(truth_path)):
         clips, truth = generate_clips(n_clips, seed=seed)
-        clips.to_parquet(
-            clips_path, index=False, row_group_size=CLIPS_ROW_GROUP_SIZE
-        )
-        truth.to_parquet(truth_path, index=False, row_group_size=65536)
+        for df, path, group_rows in (
+            (clips, clips_path, CLIPS_ROW_GROUP_SIZE),
+            (truth, truth_path, 65536),
+        ):
+            df.to_parquet(path + ".tmp", index=False, row_group_size=group_rows)
+            os.replace(path + ".tmp", path)
     return clips_path, truth_path

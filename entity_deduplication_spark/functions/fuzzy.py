@@ -176,11 +176,6 @@ def levenshtein_udf():
     return _pair_udf(batch_levenshtein, T.LongType())
 
 
-def ratio_udf():
-    """pandas_udf (s1, s2) -> double fuzz.ratio in [0, 100]."""
-    return _pair_udf(batch_ratio, T.DoubleType())
-
-
 def token_sort_ratio_udf():
     """pandas_udf (s1, s2) -> double token_sort_ratio in [0, 100]."""
     return _pair_udf(batch_token_sort_ratio, T.DoubleType())

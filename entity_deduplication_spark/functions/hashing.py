@@ -205,21 +205,6 @@ def band_keys(minhash_col: Column, bands: int, rows: int) -> Column:
     )
 
 
-def hamming64(a: Column, b: Column) -> Column:
-    """Hamming distance between two 64-bit SimHash signatures (JVM-side)."""
-    return F.bit_count(a.bitwiseXOR(b))
-
-
-def simhash_prefix(simhash_col: Column, prefix_bits: int) -> Column:
-    """Top ``prefix_bits`` of the signature — a Hamming-LSH block key.
-
-    Shifting arithmetic on the raw long; near-duplicates within the
-    Hamming radius that differ only in low bits share the block. (For
-    full radius coverage the blocking stage unions several bit-rotations.)
-    """
-    return F.shiftrightunsigned(simhash_col, 64 - prefix_bits)
-
-
 def simhash_hamming_blocks(n_blocks: int, radius: int, bits: int = 64):
     """Block layout + key subsets for guaranteed Hamming-radius blocking.
 

@@ -80,18 +80,6 @@ def doc_fingerprint(col: Column) -> Column:
     return F.md5(col)
 
 
-def rolling_fingerprint(col: Column, k: int = 16) -> Column:
-    """xxhash64 of each k-char window, min-aggregated — a cheap locality
-    fingerprint (64-bit) stable under suffix/prefix addition shorter
-    than k."""
-    n = F.length(col)
-    hashes = F.transform(
-        F.sequence(F.lit(1), F.greatest(n - k + 1, F.lit(1))),
-        lambda i: F.xxhash64(col.substr(i, F.lit(k))),
-    )
-    return F.array_min(hashes)
-
-
 def lang_id_udf(extra_profiles: dict[str, list[str]] | None = None):
     """pandas_udf returning the best-matching language code by trigram
     profile hit-rate, or 'und' when nothing matches."""

@@ -18,6 +18,7 @@ from pyspark.sql.window import Window
 
 from entity_deduplication_spark.config import DedupConfig
 from entity_deduplication_spark.operators.pairs import block_self_join_pairs
+from entity_deduplication_spark.sources.io import stage
 
 
 def lsh_band_pairs(
@@ -206,13 +207,8 @@ def _global_rank(
     by_range = src.repartitionByRange(F.col(sort_col), F.col(id_col)).withColumn(
         "_pid", F.spark_partition_id()
     )
-    # localCheckpoint, NOT persist: persist() is keyed in the CacheManager
-    # and lives until an explicit unpersist (which no caller can place —
-    # the consumer materializes at an unknown later point), so it would
-    # leak a full ranked copy per call for the session lifetime. A
-    # checkpointed RDD is released by the ContextCleaner as soon as the
-    # DataFrame is garbage collected.
-    by_range = by_range.localCheckpoint(eager=True)
+    # read twice: the per-partition counts below and the offset projection
+    by_range = stage(by_range)
     counts = dict(
         by_range.groupBy("_pid").count().collect()
     )  # tiny: one row per partition; partition count is bounded by

@@ -15,8 +15,10 @@ member id — deterministic and stable under any parallelism.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+
+from entity_deduplication_spark.sources.io import stage
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -48,13 +50,17 @@ def _small_star(e: DataFrame) -> DataFrame:
     return part1.unionByName(part2).distinct()
 
 
-def _signature(e: DataFrame) -> tuple[int, int]:
+def _signature_aggs() -> list[Column]:
     # bit_xor is order-insensitive and overflow-free (ANSI-safe); the edge
     # set is distinct so xor cancellation of repeated rows cannot occur.
-    row = e.agg(
+    return [
         F.count(F.lit(1)).alias("n"),
         F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
-    ).first()
+    ]
+
+
+def _signature(e: DataFrame) -> tuple[int, int]:
+    row = e.agg(*_signature_aggs()).first()
     return int(row["n"]), int(row["h"])
 
 
@@ -126,25 +132,16 @@ def connected_components(
     round costs. The rounds between checks chain as lazy localCheckpoints
     inside ONE job.
     """
-    from pyspark import StorageLevel
-
-    # Materialize the (possibly very heavy) upstream edge plan through a
-    # normal SQL action FIRST, then checkpoint from the cache. The
-    # RDD/localCheckpoint path compiles the plan WITHOUT adaptive
-    # execution — no runtime broadcast demotion, no coalescing — and on
-    # a big verify plan that non-AQE execution wrote tens of GB of
-    # shuffle where the AQE plan needs a fraction of it (measured at
-    # 300k clips: the same candidate plan counted in 28 s under AQE but
-    # ran >12 min and spilled the disk full under .localCheckpoint()).
-    base = (
+    # the initial signature is observed by the materializing action itself,
+    # not by a second aggregate job over the staged edges
+    observed = Observation()
+    e = stage(
         edges.select(F.col(id1).alias("u"), F.col(id2).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .observe(observed, *_signature_aggs())
     )
-    prev = _signature(base)  # AQE execution; fills the cache
-    e = base.localCheckpoint(eager=True)  # copies cached rows, no re-plan
-    base.unpersist()
+    prev = int(observed.get["n"]), int(observed.get["h"])
 
     if 0 < prev[0] <= small_graph_edges:
         labels = _union_find_labels(e, node_id)

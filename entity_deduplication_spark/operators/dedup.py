@@ -30,6 +30,7 @@ from entity_deduplication_spark.operators.connected_components import (
     connected_components,
 )
 from entity_deduplication_spark.operators.pairs import block_self_join_pairs
+from entity_deduplication_spark.sources.io import spread_partitions, stage
 
 
 def exact_dedup(df: DataFrame, id_col: str, key: Column) -> DataFrame:
@@ -82,8 +83,6 @@ def ngram_jaccard_pairs(
     tighter exact guarantee at scale use minhash_lsh_dedup. MinHash-LSH is
     the intended 100-TB path; this operator is the exact oracle-able form.
     """
-    from entity_deduplication_spark.sources.io import spread_partitions
-
     words = F.split(F.col(text_col), " ")
     gram_arr = F.array_distinct(
         F.transform(
@@ -163,8 +162,6 @@ def minhash_lsh_dedup(
 ) -> DataFrame:
     """(id, cluster_id) via shingle -> MinHash -> LSH bands -> Jaccard
     verify -> connected components. The scale path for text dedup."""
-    from entity_deduplication_spark.sources.io import spread_partitions
-
     cfg = cfg or DedupConfig()
     # a small documents table is one parquet split -> the MinHash kernel
     # would run on ONE core; spread first (no-op on well-split inputs)
@@ -175,10 +172,8 @@ def minhash_lsh_dedup(
     sig = sig.withColumn(
         "minhash", minhash_udf(cfg.minhash_k, cfg.minhash_seed)(F.col("shingles"))
     ).withColumn("bands", band_keys(F.col("minhash"), cfg.lsh_bands, cfg.lsh_rows))
-    # localCheckpoint, not persist: sig feeds the banding branch, two
-    # feature joins, and the CC node table — one materialization, no
-    # session-lifetime CacheManager entry left behind
-    sig = sig.localCheckpoint(eager=True)
+    # sig feeds the banding branch, two feature joins, and the CC node table
+    sig = stage(sig)
     banded = sig.select(
         "clip_id", F.posexplode("bands").alias("band_idx", "band_key")
     )
@@ -209,7 +204,6 @@ def simhash_pairs(
 ) -> DataFrame:
     """(id1, id2, hamming_sim) pairs within the SimHash Hamming radius."""
     from entity_deduplication_spark.operators.blocking import simhash_block_pairs
-    from entity_deduplication_spark.sources.io import spread_partitions
 
     cfg = cfg or DedupConfig()
     # spread the (possibly single-split) scan so the SimHash kernel
@@ -218,8 +212,7 @@ def simhash_pairs(
         F.col(id_col).alias("clip_id"),
         word_shingles(F.col(text_col), cfg.shingle_k).alias("shingles"),
     ).withColumn("simhash", simhash_udf(F.col("shingles")))
-    # localCheckpoint, not persist (CacheManager-leak rationale above)
-    sig = sig.localCheckpoint(eager=True)
+    sig = stage(sig)
     cand = simhash_block_pairs(sig, cfg)
     feat = cand.join(
         sig.select(F.col("clip_id").alias("id1"), F.col("simhash").alias("h1")), "id1"
@@ -305,14 +298,11 @@ def embedding_cosine_pairs(
         return _embedding_pairs_grid(
             df, id_col, vec_col, threshold, grid_chunks
         )
-    # localCheckpoint, not persist (same CacheManager-leak rationale);
     # spread first: a small embeddings table is 1-2 scan splits, which
     # would serialize the RHP matmul kernel onto one core
-    from entity_deduplication_spark.sources.io import spread_partitions
-
-    keyed = rhp_band_keys(
-        spread_partitions(df, key=id_col), id_col, vec_col, r, b, seed
-    ).localCheckpoint(eager=True)
+    keyed = stage(
+        rhp_band_keys(spread_partitions(df, key=id_col), id_col, vec_col, r, b, seed)
+    )
     banded = keyed.select(
         F.col(id_col).alias("clip_id"),
         F.posexplode("band_keys").alias("band_idx", "band_key"),

@@ -166,14 +166,11 @@ def louvain_split_oversized(
     )
 
     # giant-component guard: count edges per component FIRST; components
-    # above the cap never reach the single-task kernel.
-    # aqe_local_checkpoint (not bare persist/localCheckpoint): one
-    # AQE-planned materialization for the multiple consumers below, no
-    # session-lifetime CacheManager entry, and the join plan above never
-    # executes through the non-adaptive RDD path.
-    from entity_deduplication_spark.sources.io import aqe_local_checkpoint
+    # above the cap never reach the single-task kernel. Materialized once
+    # for the several consumers below.
+    from entity_deduplication_spark.sources.io import stage
 
-    e = aqe_local_checkpoint(e)
+    e = stage(e)
     giant_ids = (
         e.groupBy("_grp")
         .agg(F.count(F.lit(1)).alias("_ne"))

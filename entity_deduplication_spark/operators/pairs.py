@@ -12,6 +12,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from entity_deduplication_spark.sources.io import stage
+
 
 def canonicalize_pairs(df: DataFrame, id1: str = "id1", id2: str = "id2") -> DataFrame:
     """Enforce id1 < id2 and drop duplicates/self-pairs."""
@@ -99,11 +101,9 @@ def block_self_join_pairs(
     # join a/b), and Spark re-evaluates the whole upstream banding chain
     # (posexplode + shuffle + sort + window[s]) per subtree — the "before"
     # plans show 4 copies of the Generate/Window chain per pair query.
-    # One eager localCheckpoint turns those into block scans. The plan up
-    # to here is narrow-on-top-of-one-exchange (no joins), so non-AQE
-    # compilation is harmless, and the table is linear in the band rows
-    # the window pass already shuffles — no new scale cost.
-    sized = sized.localCheckpoint(eager=True)
+    # The table is linear in the band rows the window pass already
+    # shuffles — no new scale cost.
+    sized = stage(sized)
     chain_pairs: DataFrame | None = None
     if isinstance(block_size_limit, Column) or isinstance(on_oversize, Column):
         # per-row cap/policy (both may be Columns derived from key_cols):

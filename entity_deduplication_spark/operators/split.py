@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from entity_deduplication_spark.operators.connected_components import (
     connected_components,
 )
+from entity_deduplication_spark.sources.io import stage
 
 _THRESHOLD_LADDER = [0.8, 0.85, 0.9, 0.95, 1.0]
 
@@ -44,13 +45,11 @@ def split_oversized_clusters(
     if big_nodes.isEmpty():
         return clusters
 
-    big_edges = (
+    # consumed once per ladder rung
+    big_edges = stage(
         edges.join(big_nodes.withColumnRenamed(node_id, "id1"), "id1")
         .join(big_nodes.withColumnRenamed(node_id, "id2"), "id2")
         .select("id1", "id2", "score")
-        # localCheckpoint, not persist: consumed once per ladder rung,
-        # with no unpersist point before return (CacheManager leak)
-        .localCheckpoint(eager=True)
     )
     result = None
     for thr in _THRESHOLD_LADDER:

@@ -59,7 +59,7 @@ def pair_confusion(
     ss = sum C(n_ij,2); sd = sum C(a_i,2) - ss; ds = sum C(b_j,2) - ss;
     dd = C(n,2) - ss - sd - ds.
     """
-    from entity_deduplication_spark.sources.io import aqe_local_checkpoint
+    from entity_deduplication_spark.sources.io import stage
 
     j = assign_a.select(
         F.col(id_col).alias("_id"), F.col(cluster_col).alias("_ca")
@@ -74,7 +74,7 @@ def pair_confusion(
     # full clusterings — previously the three aggregate consumers below
     # each re-executed that join + groupBy (the "before" plan carries the
     # whole subtree three times under the scalar cross-joins).
-    cont = aqe_local_checkpoint(
+    cont = stage(
         j.groupBy("_ca", "_cb").agg(F.count(F.lit(1)).alias("nij"))
     )
 

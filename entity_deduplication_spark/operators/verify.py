@@ -105,7 +105,7 @@ def score_pairs(
     # happen in the plan shape, not the expression (two-phase verify).
     if "transcript_norm_1" in feat.columns:
         from entity_deduplication_spark.operators.suffix import run_verify_udf
-        from entity_deduplication_spark.sources.io import aqe_local_checkpoint
+        from entity_deduplication_spark.sources.io import stage
 
         # Slim + materialize BEFORE the easy/hard split: a union's two
         # branches each re-evaluate their common input subtree, so with
@@ -121,7 +121,7 @@ def score_pairs(
         # GC collapse: stage tasks ran 45+ min with every stack in
         # MemoryStore.putIterator / SQLOpenHashSet. The hard minority
         # re-joins transcripts below instead.
-        scored = aqe_local_checkpoint(
+        scored = stage(
             scored.select(
                 "id1",
                 "id2",

@@ -263,13 +263,7 @@ class DedupPipeline:
 
         src = spread_partitions(clips, key="clip_id")
         sig = self.ckpt.get_or_compute(
-            "signatures",
-            lambda: build_signatures(src, cfg),
-            resume=resume,
-            # scan + UDF projections (+ at most one repartition): no join
-            # for AQE to re-plan — a direct localCheckpoint serializes the
-            # signatures once instead of cache-write + checkpoint-copy
-            narrow=True,
+            "signatures", lambda: build_signatures(src, cfg), resume=resume
         )
         return self.run_from_signatures(sig, resume=resume)
 
@@ -284,28 +278,18 @@ class DedupPipeline:
         whose signature stage is checkpointed elsewhere.
         """
         cfg = self.cfg
-        # eager=False: the pair plan already reads from the materialized
-        # sized-block table (block_self_join_pairs checkpoints it), and
-        # verify consumes the candidate set exactly once — an eager
-        # persist+count+checkpoint here was two extra jobs and a second
-        # full serialization of the pair table for no reuse
         cand = self.ckpt.get_or_compute(
-            "candidate_pairs",
-            lambda: candidate_pairs(sig, cfg),
-            resume=resume,
-            eager=False,
+            "candidate_pairs", lambda: candidate_pairs(sig, cfg), resume=resume
         )
         verified = verified_edges(cand.select("id1", "id2"), sig, cfg)
-        # eager=False: edges feed exactly one action (the CC initial edge-set
-        # signature), which fills the persist cache in the same job
         edges = self.ckpt.get_or_compute(
             "edges",
             lambda: verified.unionByName(exact_edges(sig, cfg))
             .groupBy("id1", "id2")
             .agg(F.max("score").alias("score")),
             resume=resume,
-            eager=False,
         )
+
         def _cluster() -> DataFrame:
             cl = connected_components(
                 edges,
@@ -327,9 +311,7 @@ class DedupPipeline:
                     cl = split_oversized_clusters(cl, edges, cfg.max_cluster_size)
             return cl
 
-        clusters = self.ckpt.get_or_compute(
-            "clusters", _cluster, resume=resume, eager=False
-        )
+        clusters = self.ckpt.get_or_compute("clusters", _cluster, resume=resume)
         clustered = clusters.join(
             sig.select("clip_id", "transcript_norm", "n_words"), "clip_id"
         )

@@ -72,10 +72,11 @@ def get_spark(
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # apply AQE when materializing persisted plans too (off by default
-        # only to keep cached output partitioning stable): connected
-        # components and the checkpoint helpers materialize heavy plans
-        # through persist+action, and without this flag those executions
-        # lose runtime exchange reuse, broadcast demotion and coalescing
+        # only to keep cached output partitioning stable): on a cluster
+        # without a checkpoint dir ``sources.io.stage`` materializes heavy
+        # plans through persist+action, and without this flag those
+        # executions lose runtime exchange reuse, broadcast demotion and
+        # coalescing
         # (measured: the ngram edge materialization inside clustering
         # agreement ran its gram subtree twice, ~4x the CPU)
         .config(
@@ -123,9 +124,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

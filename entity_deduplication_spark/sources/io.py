@@ -11,6 +11,9 @@ is resumable after failure (north_rule): ``get_or_compute`` reads the
 checkpoint if present, else computes, writes, and re-reads (so downstream
 plans hang off the materialized table, truncating lineage like the
 reference never could — it reran from scratch, SURVEY.md §4 last row).
+
+``stage`` is the one in-session stage materialization every operator
+uses; ``get_or_compute`` falls back to it without a checkpoint dir.
 """
 
 from __future__ import annotations
@@ -18,16 +21,9 @@ from __future__ import annotations
 import os
 from collections.abc import Callable
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.org.apache.iceberg.Table  # noqa: SLF001
-        return True
-    except Exception:
-        return False
 
 
 def write_table(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
@@ -37,49 +33,31 @@ def write_table(df: DataFrame, path: str, partition_by: list[str] | None = None)
     writer.parquet(path)
 
 
-def aqe_local_checkpoint(df: DataFrame) -> DataFrame:
-    """Deploy-mode-aware stage materialization that executes under AQE.
+def stage(df: DataFrame) -> DataFrame:
+    """Run ``df`` once and return a DataFrame that reads its rows back.
 
-    ``DataFrame.localCheckpoint`` compiles through the RDD path, which
-    BYPASSES adaptive execution — no runtime broadcast demotion, no
-    partition coalescing. On a shuffle-heavy plan (joins, windows) that
-    non-adaptive execution can write orders of magnitude more shuffle
-    than the AQE plan (measured: a candidate-pair plan that counts in
-    28 s under AQE spilled a disk full under a bare localCheckpoint).
-    Materializing into a persist cache with a normal SQL action first
-    makes the checkpoint a cheap cache scan; the unpersist leaves no
-    session-lifetime CacheManager entry.
+    The one way a stage boundary is materialized, routed on deploy mode:
 
-    Deploy-mode routing (local-checkpoint blocks live only on executors,
-    so on a real cluster an executor loss would make the stage
-    unrecoverable where lineage would transparently recompute):
+    * local master → eager ``localCheckpoint`` (one JVM, so executor loss
+      is job loss and durability buys nothing);
+    * cluster with ``sc.getCheckpointDir()`` set → eager reliable
+      ``checkpoint``, which survives executor loss;
+    * cluster without a checkpoint dir → ``persist`` + ``count``, keeping
+      lineage so a lost block is recomputed.
 
-    * local master → ``localCheckpoint`` (single JVM: executor loss IS
-      job loss, so durability buys nothing and the RDD-backed plan
-      avoids the CacheManager plan-matching trap below);
-    * cluster + ``sc.getCheckpointDir()`` set → *reliable*
-      ``checkpoint`` — same lineage truncation, blocks on the shared
-      checkpoint store, survives executor loss;
-    * cluster without a checkpoint dir → keep the materialized persist
-      cache WITH lineage (recoverable; the caller accepts that a
-      consumer whose expression ids were remapped — self-join alias
-      dedup, unionByName — may recompute instead of hitting the cache).
+    The checkpoint action is one adaptive SQL execution, and its result
+    is a ``LogicalRDD`` (lineage cut, nothing in the CacheManager), so
+    consumers that re-alias the stage (self-joins, ``unionByName``) scan
+    blocks instead of re-planning the upstream.
     """
-    from pyspark import StorageLevel
-
-    spark = df.sparkSession
-    cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-    cached.count()
-    master = spark.conf.get("spark.master", "")
-    if master.startswith("local"):
-        out = cached.localCheckpoint(eager=True)
-        cached.unpersist()
-        return out
-    if spark.sparkContext.getCheckpointDir() is not None:
-        out = cached.checkpoint(eager=True)
-        cached.unpersist()
-        return out
-    return cached
+    sc = df.sparkSession.sparkContext
+    if sc.master.startswith("local"):
+        return df.localCheckpoint(eager=True)
+    if sc.getCheckpointDir() is not None:
+        return df.checkpoint(eager=True)
+    out = df.persist(StorageLevel.MEMORY_AND_DISK)
+    out.count()
+    return out
 
 
 def spread_partitions(
@@ -137,47 +115,17 @@ class CheckpointManager:
         resume: bool = True,
         partition_by: list[str] | None = None,
         lineage: bool = True,
-        eager: bool = True,
-        narrow: bool = False,
     ) -> DataFrame:
-        """Read stage table if checkpointed, else compute + persist it.
+        """Read stage table if checkpointed, else compute + write it.
 
-        Without a checkpoint dir the stage is still persisted in memory/disk
-        — stage outputs are reused by several downstream plans (e.g.
-        signatures feed 3 LSH strategies, verify, and the substring stage),
-        so recomputation would multiply the UDF cost (SURVEY.md §4
-        common-subexpression row). ``eager=False`` skips the materializing
-        ``count()`` job: correct for stages whose first downstream action is
-        a single full scan (the scan fills the cache); keep ``eager=True``
-        for stages consumed by several *concurrent* subtrees of one job,
-        where lazy caching could duplicate the compute.
+        Without a checkpoint dir the stage is still materialized with
+        :func:`stage` — stage outputs are reused by several downstream
+        plans (e.g. signatures feed blocking, verify and the exact-key
+        edges), so recomputation would multiply the UDF cost (SURVEY.md
+        §4 common-subexpression row).
         """
         if not self.base_dir:
-            from pyspark import StorageLevel
-
-            if eager:
-                # ``narrow=True``: the stage plan has no exchange (a scan +
-                # projections/UDFs), so the AQE persist-then-checkpoint
-                # dance buys nothing and costs a SECOND full serialization
-                # of the stage (columnar cache write + count + RDD block
-                # copy — measured ~2x the signature stage's materialization
-                # wall). A direct eager localCheckpoint serializes once;
-                # non-adaptive compilation of an exchange-free plan is
-                # identical to the AQE plan.
-                if narrow:
-                    return compute().localCheckpoint(eager=True)
-                # AQE-materialized localCheckpoint, NOT a bare persist:
-                # cache matching uses sameResult(), and any consumer
-                # whose reference to this stage gets fresh expression ids
-                # (self-join alias dedup, unionByName remapping) can
-                # NEVER match a cached plan containing nondeterministic
-                # UDFs — it silently recomputes the whole stage from the
-                # source (measured: the edges plan held 58 parquet scans
-                # + 60 ArrowEvalPython nodes for ONE signature stage).
-                # An RDD-backed checkpoint has no UDF subtree to match —
-                # every reference is a block scan.
-                return aqe_local_checkpoint(compute())
-            return compute().persist(StorageLevel.MEMORY_AND_DISK)
+            return stage(compute())
         if resume and self.exists(name):
             return self.read(name)
         df = compute()

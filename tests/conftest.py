@@ -6,9 +6,10 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from entity_deduplication_spark.datagen import DATA_DIR  # noqa: E402
 from entity_deduplication_spark.session import get_spark  # noqa: E402
 
-TEST_DATA_DIR = "/root/repo/.data/test"
+TEST_DATA_DIR = os.path.join(DATA_DIR, "test")
 
 
 @pytest.fixture(scope="session")

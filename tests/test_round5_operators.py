@@ -331,13 +331,11 @@ def test_score_pairs_transcript_rejoin_matches_fallback(spark):
         build_signatures,
         candidate_pairs,
     )
-    from entity_deduplication_spark.sources.io import aqe_local_checkpoint
+    from entity_deduplication_spark.sources.io import stage
 
     clips_pd, _ = generate_clips(300, seed=77)
     cfg = DedupConfig()
-    sig = aqe_local_checkpoint(
-        build_signatures(spark.createDataFrame(clips_pd), cfg)
-    )
+    sig = stage(build_signatures(spark.createDataFrame(clips_pd), cfg))
     cand = candidate_pairs(sig, cfg).select("id1", "id2")
     feat = attach_pair_features(cand, sig)
 

@@ -8,6 +8,8 @@ the restructured ngram/pair-confusion plans with their previous outputs.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.utils import PythonException
@@ -98,6 +100,26 @@ def test_clips_parquet_row_groups_small_and_stale_cache_heals(tmp_path):
     meta2 = pq.ParquetFile(p).metadata
     assert meta2.num_rows / meta2.num_row_groups <= CLIPS_ROW_GROUP_SIZE
     assert pd.read_parquet(p).equals(fresh)
+
+    # a skewed layout: one oversized group among many tiny ones keeps the
+    # AVERAGE under the cap, but the big group still starves the scan
+    import pyarrow as pa
+
+    table = pa.Table.from_pandas(clips, preserve_index=False)
+    with pq.ParquetWriter(p, table.schema) as w:
+        w.write_table(table.slice(0, 200), row_group_size=200)
+        w.write_table(table.slice(200), row_group_size=1)
+    skewed = pq.ParquetFile(p).metadata
+    assert skewed.num_rows / skewed.num_row_groups <= CLIPS_ROW_GROUP_SIZE
+    assert skewed.row_group(0).num_rows == 200
+    ensure_clips_parquet(300, seed=7, data_dir=d)
+    meta3 = pq.ParquetFile(p).metadata
+    assert max(
+        meta3.row_group(i).num_rows for i in range(meta3.num_row_groups)
+    ) <= CLIPS_ROW_GROUP_SIZE
+    assert pd.read_parquet(p).equals(fresh)
+    # the write-then-rename leaves no partial file behind
+    assert not [f for f in os.listdir(d) if f.endswith(".tmp")]
 
 
 def test_unified_band_table_one_pass_equals_union_construction(spark):

@@ -31,7 +31,7 @@ def main() -> None:
         unified_band_table,
     )
     from entity_deduplication_spark.session import get_spark
-    from entity_deduplication_spark.sources.io import aqe_local_checkpoint
+    from entity_deduplication_spark.sources.io import stage
     from tools.scale_run import ensure_chunks
 
     chunk_paths = ensure_chunks("/root/repo/.data/scale_800k_v2", n_clips)
@@ -42,7 +42,7 @@ def main() -> None:
     )
     cfg = DedupConfig()
     clips = spark.read.parquet(*chunk_paths)
-    sig = aqe_local_checkpoint(build_signatures(clips, cfg))
+    sig = stage(build_signatures(clips, cfg))
     unified = unified_band_table(sig, cfg)
     cap = cfg.band_bucket_cap
 

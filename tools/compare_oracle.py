@@ -4,6 +4,7 @@ count, column names, and order-insensitive values."""
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -45,7 +46,9 @@ def main(sf_dir: str = "/root/testdata/sf0.01", only: list[str] | None = None):
         )
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
-    failures = []
+    failures = sorted(set(only or ()) - set(qs))
+    for name in failures:
+        print(f"FAIL  {name}: no such query")
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -89,4 +92,7 @@ def main(sf_dir: str = "/root/testdata/sf0.01", only: list[str] | None = None):
 
 
 if __name__ == "__main__":
-    sys.exit(main(only=sys.argv[1:] or None))
+    args = sys.argv[1:]
+    if args and os.path.isdir(args[0]):
+        sys.exit(main(args[0], only=args[1:] or None))
+    sys.exit(main(only=args or None))
