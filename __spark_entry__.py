@@ -667,25 +667,16 @@ def q_mlp_pair_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         score_with_mlp,
         train_mlp_scorer,
     )
+    from entity_deduplication_spark.operators.pairs import attach_pair_features
 
     docs = _t(spark, sf_dir, "documents")
     cand = ngram_jaccard_pairs(docs, "doc_id", "text", NGRAM_N, 0.1)
-    texts = docs.select("doc_id", "text")
-    feat = (
-        cand.join(
-            texts.select(F.col("doc_id").alias("id1"), F.col("text").alias("_t1")),
-            "id1",
-        )
-        .join(
-            texts.select(F.col("doc_id").alias("id2"), F.col("text").alias("_t2")),
-            "id2",
-        )
-    )
+    feat = attach_pair_features(cand, docs, ["text"], "doc_id")
     from entity_deduplication_spark.sources.io import stage
 
     # one materialization for the two consumers (driver-side fit +
     # distributed scoring)
-    feat = stage(pair_features(feat))
+    feat = stage(pair_features(feat, text1="text_1", text2="text_2"))
     labeled = feat.withColumn("label", (F.col("jaccard") >= 0.5).cast("double"))
     params = train_mlp_scorer(labeled)
     return score_with_mlp(feat, params).select("id1", "id2", "mlp_score")
@@ -729,29 +720,16 @@ def q_ml_pair_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         score_with_model,
         train_pair_scorer,
     )
+    from entity_deduplication_spark.operators.pairs import attach_pair_features
 
     docs = _t(spark, sf_dir, "documents")
     cand = ngram_jaccard_pairs(docs, "doc_id", "text", NGRAM_N, 0.1)
-    texts = docs.select("doc_id", "text")
-    feat = (
-        cand.join(
-            texts.select(
-                F.col("doc_id").alias("id1"), F.col("text").alias("_t1")
-            ),
-            "id1",
-        )
-        .join(
-            texts.select(
-                F.col("doc_id").alias("id2"), F.col("text").alias("_t2")
-            ),
-            "id2",
-        )
-    )
+    feat = attach_pair_features(cand, docs, ["text"], "doc_id")
     from entity_deduplication_spark.sources.io import stage
 
     # one materialization for the two consumers (driver-side fit +
     # distributed scoring)
-    feat = stage(pair_features(feat))
+    feat = stage(pair_features(feat, text1="text_1", text2="text_2"))
     labeled = feat.withColumn(
         "label", (F.col("jaccard") >= 0.5).cast("double")
     )

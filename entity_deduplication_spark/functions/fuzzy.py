@@ -6,9 +6,9 @@ resolvers/ml_based.py:90-92; resolvers/deterministic_feature.py:590,615,
 637,1269 — row-at-a-time rapidfuzz over pandas). This module reimplements
 the same scores from scratch as Arrow ``pandas_udf`` kernels whose DP
 inner loop is vectorized ACROSS the batch: strings are padded into a
-(batch x max_len) uint32 code-point matrix and the edit-distance /
-LCS recurrences advance one (i, j) cell per step with every pair in the
-batch updated by one numpy op — zero per-row Python. For short strings
+(batch x max_len) uint32 code-point matrix and the LCS recurrence
+advances one (i, j) cell per step with every pair in the batch updated
+by one numpy op — zero per-row Python. For short strings
 (names/titles, the fuzzy ratios' domain) a batch of B pairs costs
 O(L1*L2) numpy ops of width B.
 
@@ -18,9 +18,9 @@ Scores (0-100, like rapidfuzz):
 * ``token_sort_ratio`` = ratio over whitespace tokens sorted + re-joined.
 * ``token_set_ratio``  = max of ratios among (sorted intersection,
   intersection + sorted a-only, intersection + sorted b-only).
-* ``levenshtein``      = classic edit distance (with substitutions) —
-  matches DuckDB's ``levenshtein()`` so operators built on it are
-  oracle-checkable.
+
+Classic edit distance (with substitutions) needs no kernel here: the
+operators use Spark's built-in ``levenshtein``.
 """
 
 from __future__ import annotations
@@ -43,30 +43,6 @@ def _encode(strings: list[str]) -> tuple[np.ndarray, np.ndarray]:
                 s.encode("utf-32-le"), dtype=np.uint32
             )
     return mat, lens
-
-
-def batch_levenshtein(sa: list[str], sb: list[str]) -> np.ndarray:
-    """Edit distance (ins/del/sub, unit costs) for each aligned pair."""
-    a, la = _encode(sa)
-    b, lb = _encode(sb)
-    n, m1, m2 = len(sa), a.shape[1], b.shape[1]
-    out = np.zeros(n, dtype=np.int64)
-    prev = np.broadcast_to(np.arange(m2 + 1, dtype=np.int64), (n, m2 + 1)).copy()
-    done = la == 0
-    out[done] = lb[done]
-    for i in range(1, m1 + 1):
-        cur = np.empty_like(prev)
-        cur[:, 0] = i
-        ai = a[:, i - 1 : i]  # (n,1)
-        cost = (ai != b).astype(np.int64)  # (n, m2)
-        for j in range(1, m2 + 1):
-            np.minimum(prev[:, j] + 1, cur[:, j - 1] + 1, out=cur[:, j])
-            np.minimum(cur[:, j], prev[:, j - 1] + cost[:, j - 1], out=cur[:, j])
-        hit = la == i
-        if hit.any():
-            out[hit] = cur[hit, lb[hit]]
-        prev = cur
-    return out
 
 
 def batch_indel(sa: list[str], sb: list[str]) -> np.ndarray:
@@ -169,11 +145,6 @@ def _pair_udf(kernel, ret_type):
     # from inlining the UDF into downstream filters, which would run the
     # whole DP twice per pair (once for the predicate, once for output)
     return _udf.asNondeterministic()
-
-
-def levenshtein_udf():
-    """pandas_udf (s1, s2) -> bigint edit distance (DuckDB-compatible)."""
-    return _pair_udf(batch_levenshtein, T.LongType())
 
 
 def token_sort_ratio_udf():

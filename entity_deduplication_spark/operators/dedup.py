@@ -29,7 +29,14 @@ from entity_deduplication_spark.functions.text import word_shingles
 from entity_deduplication_spark.operators.connected_components import (
     connected_components,
 )
-from entity_deduplication_spark.operators.pairs import block_self_join_pairs
+from entity_deduplication_spark.operators.blocking import (
+    lsh_band_pairs,
+    simhash_block_pairs,
+)
+from entity_deduplication_spark.operators.pairs import (
+    attach_pair_features,
+    block_self_join_pairs,
+)
 from entity_deduplication_spark.sources.io import spread_partitions, stage
 
 
@@ -174,23 +181,10 @@ def minhash_lsh_dedup(
     ).withColumn("bands", band_keys(F.col("minhash"), cfg.lsh_bands, cfg.lsh_rows))
     # sig feeds the banding branch, two feature joins, and the CC node table
     sig = stage(sig)
-    banded = sig.select(
-        "clip_id", F.posexplode("bands").alias("band_idx", "band_key")
-    )
-    cand = block_self_join_pairs(
-        banded,
-        key_cols=["band_idx", "band_key"],
-        block_size_limit=cfg.block_size_limit,
-        salt_buckets=cfg.salt_buckets,
-    )
-    feat = cand.join(
-        sig.select(F.col("clip_id").alias("id1"), F.col("shingles").alias("s1")), "id1"
-    ).join(
-        sig.select(F.col("clip_id").alias("id2"), F.col("shingles").alias("s2")), "id2"
-    )
-    edges = feat.withColumn("j", jaccard(F.col("s1"), F.col("s2"))).filter(
-        F.col("j") >= cfg.jaccard_threshold
-    )
+    feat = attach_pair_features(lsh_band_pairs(sig, cfg), sig, ["shingles"])
+    edges = feat.withColumn(
+        "j", jaccard(F.col("shingles_1"), F.col("shingles_2"))
+    ).filter(F.col("j") >= cfg.jaccard_threshold)
     return connected_components(
         edges.select("id1", "id2"), nodes=sig.select("clip_id")
     ).withColumnRenamed("clip_id", id_col)
@@ -203,8 +197,6 @@ def simhash_pairs(
     cfg: DedupConfig | None = None,
 ) -> DataFrame:
     """(id1, id2, hamming_sim) pairs within the SimHash Hamming radius."""
-    from entity_deduplication_spark.operators.blocking import simhash_block_pairs
-
     cfg = cfg or DedupConfig()
     # spread the (possibly single-split) scan so the SimHash kernel
     # parallelizes — see minhash_lsh_dedup
@@ -213,14 +205,9 @@ def simhash_pairs(
         word_shingles(F.col(text_col), cfg.shingle_k).alias("shingles"),
     ).withColumn("simhash", simhash_udf(F.col("shingles")))
     sig = stage(sig)
-    cand = simhash_block_pairs(sig, cfg)
-    feat = cand.join(
-        sig.select(F.col("clip_id").alias("id1"), F.col("simhash").alias("h1")), "id1"
-    ).join(
-        sig.select(F.col("clip_id").alias("id2"), F.col("simhash").alias("h2")), "id2"
-    )
+    feat = attach_pair_features(simhash_block_pairs(sig, cfg), sig, ["simhash"])
     out = feat.withColumn(
-        "hamming_sim", hamming_similarity(F.col("h1"), F.col("h2"))
+        "hamming_sim", hamming_similarity(F.col("simhash_1"), F.col("simhash_2"))
     ).filter(F.col("hamming_sim") >= 1.0 - cfg.simhash_hamming_max / 64.0)
     return out.select("id1", "id2", F.round("hamming_sim", 4).alias("hamming_sim"))
 
@@ -313,13 +300,10 @@ def embedding_cosine_pairs(
         block_size_limit=block_size_limit,
         on_oversize="error",
     )
-    feat = cand.join(
-        keyed.select(F.col(id_col).alias("id1"), F.col(vec_col).alias("v1")), "id1"
-    ).join(
-        keyed.select(F.col(id_col).alias("id2"), F.col(vec_col).alias("v2")), "id2"
-    )
+    feat = attach_pair_features(cand, keyed, [vec_col], id_col)
+    cos = cosine(F.col(f"{vec_col}_1"), F.col(f"{vec_col}_2"))
     return (
-        feat.withColumn("cos_sim", cosine(F.col("v1"), F.col("v2")))
+        feat.withColumn("cos_sim", cos)
         .filter(F.col("cos_sim") >= threshold)
         .select("id1", "id2", F.round("cos_sim", 4).alias("cos_sim"))
     )

@@ -5,16 +5,20 @@ The reference verifies candidate pairs with rapidfuzz token ratios
 same shape — block, then fuzzy-score the candidates, then threshold — is
 one DataFrame plan: the skew-aware block self-join produces candidates,
 token sorting/normalization runs JVM-side (split + array_sort +
-array_join), and only the O(L^2) distance kernel crosses into Python as a
-batch-vectorized Arrow UDF (functions.fuzzy).
+array_join).
 
 Two scorers:
 * ``levenshtein_sim_pairs`` — 1 - lev/max(len): classic edit-distance
-  similarity, exactly reproducible in SQL (DuckDB ``levenshtein``), so the
-  operator is oracle-checkable end to end.
+  similarity on Spark's built-in ``levenshtein`` (JVM-side, counts code
+  points), exactly reproducible in SQL (DuckDB ``levenshtein``, which
+  counts bytes — the two agree on ASCII), so the operator is
+  oracle-checkable end to end. A pair with a NULL text has no distance
+  and is dropped.
 * ``token_ratio_pairs`` — rapidfuzz-style token_sort_ratio +
   token_set_ratio (InDel-based), the reference's actual scorers; not
-  SQL-expressible, gated by unit tests against hand-computed values.
+  SQL-expressible, so the InDel DP kernel crosses into Python as a
+  batch-vectorized Arrow UDF (functions.fuzzy); gated by unit tests
+  against hand-computed values.
 """
 
 from __future__ import annotations
@@ -23,11 +27,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from entity_deduplication_spark.functions.fuzzy import (
-    levenshtein_udf,
     token_set_ratio_udf,
     token_sort_ratio_udf,
 )
-from entity_deduplication_spark.operators.pairs import block_self_join_pairs
+from entity_deduplication_spark.functions.similarity import cosine
+from entity_deduplication_spark.operators.pairs import (
+    attach_pair_features,
+    block_self_join_pairs,
+)
 
 
 def token_sorted(col: Column) -> Column:
@@ -48,14 +55,15 @@ def _candidates_with_text(
     cand = block_self_join_pairs(
         keyed, key_cols=["block_key"], block_size_limit=block_size_limit
     )
-    texts = df.select(F.col(id_col), F.col(text_col))
-    return cand.join(
-        texts.select(F.col(id_col).alias("id1"), F.col(text_col).alias("_t1")),
-        "id1",
-    ).join(
-        texts.select(F.col(id_col).alias("id2"), F.col(text_col).alias("_t2")),
-        "id2",
-    )
+    texts = df.select(F.col(id_col), F.col(text_col).alias("text"))
+    return attach_pair_features(cand, texts, ["text"], id_col)
+
+
+def _lev_sim(t1: Column, t2: Column) -> Column:
+    """1 - lev/max(len); NULL when either text is NULL."""
+    return F.lit(1.0) - F.levenshtein(t1, t2) / F.greatest(
+        F.length(t1), F.length(t2), F.lit(1)
+    ).cast("double")
 
 
 def levenshtein_sim_pairs(
@@ -71,13 +79,10 @@ def levenshtein_sim_pairs(
     similarity >= threshold; lev_sim = 1 - lev/max(len) rounded to 4 dp."""
     feat = _candidates_with_text(df, id_col, text_col, block_key, block_size_limit)
     if token_sort:
-        feat = feat.withColumn("_t1", token_sorted(F.col("_t1"))).withColumn(
-            "_t2", token_sorted(F.col("_t2"))
+        feat = feat.withColumn("text_1", token_sorted(F.col("text_1"))).withColumn(
+            "text_2", token_sorted(F.col("text_2"))
         )
-    lev = levenshtein_udf()(F.col("_t1"), F.col("_t2"))
-    sim = F.lit(1.0) - lev / F.greatest(
-        F.length("_t1"), F.length("_t2"), F.lit(1)
-    ).cast("double")
+    sim = _lev_sim(F.col("text_1"), F.col("text_2"))
     return (
         feat.withColumn("lev_sim", F.round(sim, 4))
         .filter(F.col("lev_sim") >= threshold)
@@ -107,11 +112,9 @@ def semantic_blend_pairs(
     (1 - lev/max_len) rather than the reference's token_sort_ratio —
     the InDel ratio is not SQL-expressible, this is, so the whole blend
     is DuckDB-oracle-checkable end to end (documented deviation; the
-    two agree closely on token-sorted short strings). Cosine runs
-    JVM-side; only the O(L^2) DP kernel crosses to Python, batched.
+    two agree closely on token-sorted short strings). Cosine and
+    Levenshtein both run JVM-side.
     """
-    from entity_deduplication_spark.functions.similarity import cosine
-
     keyed = df.select(
         F.col(id_col).alias("clip_id"), block_key.alias("block_key")
     )
@@ -123,31 +126,13 @@ def semantic_blend_pairs(
     )
     side = df.select(
         F.col(id_col),
-        token_sorted(F.col(text_col)).alias("_ts"),
-        F.col(vec_col).alias("_v"),
+        token_sorted(F.col(text_col)).alias("text"),
+        F.col(vec_col).alias("vec"),
     )
-    feat = cand.join(
-        side.select(
-            F.col(id_col).alias("id1"),
-            F.col("_ts").alias("_t1"),
-            F.col("_v").alias("_v1"),
-        ),
-        "id1",
-    ).join(
-        side.select(
-            F.col(id_col).alias("id2"),
-            F.col("_ts").alias("_t2"),
-            F.col("_v").alias("_v2"),
-        ),
-        "id2",
-    )
-    lev = levenshtein_udf()(F.col("_t1"), F.col("_t2"))
-    lev_sim = F.lit(1.0) - lev / F.greatest(
-        F.length("_t1"), F.length("_t2"), F.lit(1)
-    ).cast("double")
+    feat = attach_pair_features(cand, side, ["text", "vec"], id_col)
     scored = feat.withColumn(
-        "cos_sim", cosine(F.col("_v1"), F.col("_v2"))
-    ).withColumn("lev_sim", lev_sim)
+        "cos_sim", cosine(F.col("vec_1"), F.col("vec_2"))
+    ).withColumn("lev_sim", _lev_sim(F.col("text_1"), F.col("text_2")))
     # explicit literal weights (not 1-x arithmetic) so the DuckDB oracle
     # can use the identical double constants
     blended = (
@@ -181,10 +166,10 @@ def token_ratio_pairs(
     feat = _candidates_with_text(df, id_col, text_col, block_key, block_size_limit)
     out = feat.withColumn(
         "token_sort_ratio",
-        F.round(token_sort_ratio_udf()(F.col("_t1"), F.col("_t2")), 2),
+        F.round(token_sort_ratio_udf()(F.col("text_1"), F.col("text_2")), 2),
     ).withColumn(
         "token_set_ratio",
-        F.round(token_set_ratio_udf()(F.col("_t1"), F.col("_t2")), 2),
+        F.round(token_set_ratio_udf()(F.col("text_1"), F.col("text_2")), 2),
     )
     return out.filter(F.col("token_sort_ratio") >= threshold).select(
         "id1", "id2", "token_sort_ratio", "token_set_ratio"

@@ -22,6 +22,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from entity_deduplication_spark.operators.pairs import attach_pair_features
+
 
 def louvain_communities(
     edges: list[tuple], resolution: float = 1.0, max_levels: int = 10
@@ -149,20 +151,9 @@ def louvain_split_oversized(
 
     # intra-cluster edges of oversized components, tagged with the cluster
     e = (
-        edges.join(
-            big.select(
-                F.col(node_id).alias("id1"), F.col("cluster_id").alias("_c1")
-            ),
-            "id1",
-        )
-        .join(
-            big.select(
-                F.col(node_id).alias("id2"), F.col("cluster_id").alias("_c2")
-            ),
-            "id2",
-        )
-        .filter(F.col("_c1") == F.col("_c2"))
-        .select(F.col("_c1").alias("_grp"), "id1", "id2", "score")
+        attach_pair_features(edges, big, ["cluster_id"], node_id)
+        .filter(F.col("cluster_id_1") == F.col("cluster_id_2"))
+        .select(F.col("cluster_id_1").alias("_grp"), "id1", "id2", "score")
     )
 
     # giant-component guard: count edges per component FIRST; components

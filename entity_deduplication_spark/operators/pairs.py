@@ -28,6 +28,24 @@ def canonicalize_pairs(df: DataFrame, id1: str = "id1", id2: str = "id2") -> Dat
     return out.dropDuplicates([id1, id2])
 
 
+def attach_pair_features(
+    pairs: DataFrame, side: DataFrame, cols: list[str], id_col: str = "clip_id"
+) -> DataFrame:
+    """Join (id1, id2) pairs to a per-record side table on both ids.
+
+    Two inner joins (``id1`` first, then ``id2``); side column ``c``
+    arrives as ``c_1`` / ``c_2``. Pairs whose ids are missing from
+    ``side`` drop out.
+    """
+    a = side.select(
+        F.col(id_col).alias("id1"), *[F.col(c).alias(f"{c}_1") for c in cols]
+    )
+    b = side.select(
+        F.col(id_col).alias("id2"), *[F.col(c).alias(f"{c}_2") for c in cols]
+    )
+    return pairs.join(a, "id1").join(b, "id2")
+
+
 def block_self_join_pairs(
     keyed: DataFrame,
     key_cols: list[str],

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from entity_deduplication_spark.operators.connected_components import (
     connected_components,
 )
+from entity_deduplication_spark.operators.pairs import attach_pair_features
 from entity_deduplication_spark.sources.io import stage
 
 _THRESHOLD_LADDER = [0.8, 0.85, 0.9, 0.95, 1.0]
@@ -47,9 +48,9 @@ def split_oversized_clusters(
 
     # consumed once per ladder rung
     big_edges = stage(
-        edges.join(big_nodes.withColumnRenamed(node_id, "id1"), "id1")
-        .join(big_nodes.withColumnRenamed(node_id, "id2"), "id2")
-        .select("id1", "id2", "score")
+        attach_pair_features(edges, big_nodes, [], node_id).select(
+            "id1", "id2", "score"
+        )
     )
     result = None
     for thr in _THRESHOLD_LADDER:

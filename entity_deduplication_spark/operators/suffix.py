@@ -31,7 +31,10 @@ from entity_deduplication_spark.functions.suffix import (
     common_run_pairs,
     winnow_fingerprints,
 )
-from entity_deduplication_spark.operators.pairs import block_self_join_pairs
+from entity_deduplication_spark.operators.pairs import (
+    attach_pair_features,
+    block_self_join_pairs,
+)
 
 
 def _fingerprint_params(cfg: DedupConfig) -> tuple[int, int]:
@@ -101,22 +104,12 @@ def substring_run_pairs(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
         block_size_limit=cfg.block_size_limit,
         salt_buckets=cfg.salt_buckets,
     )
-    texts = signatures.select("clip_id", "transcript_norm")
-    feat = (
-        cand.join(
-            texts.select(
-                F.col("clip_id").alias("id1"), F.col("transcript_norm").alias("t1")
-            ),
-            "id1",
-        ).join(
-            texts.select(
-                F.col("clip_id").alias("id2"), F.col("transcript_norm").alias("t2")
-            ),
-            "id2",
-        )
-    )
+    feat = attach_pair_features(cand, signatures, ["transcript_norm"])
     verified = feat.withColumn(
-        "run_len", run_verify_udf(cfg.min_run_chars)(F.col("t1"), F.col("t2"))
+        "run_len",
+        run_verify_udf(cfg.min_run_chars)(
+            F.col("transcript_norm_1"), F.col("transcript_norm_2")
+        ),
     )
     return verified.filter(F.col("run_len") >= cfg.min_run_chars).select(
         "id1", "id2", "run_len"

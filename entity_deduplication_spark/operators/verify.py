@@ -20,6 +20,9 @@ from pyspark.sql import functions as F
 
 from entity_deduplication_spark.config import DedupConfig
 from entity_deduplication_spark.functions.similarity import hamming_similarity, jaccard
+from entity_deduplication_spark.operators.pairs import attach_pair_features
+from entity_deduplication_spark.operators.suffix import run_verify_udf
+from entity_deduplication_spark.sources.io import stage
 
 _SIG_COLS = [
     "bytes_md5",
@@ -28,23 +31,6 @@ _SIG_COLS = [
     "audio_shingles",
     "simhash",
 ]
-
-
-def attach_pair_features(
-    pairs: DataFrame,
-    signatures: DataFrame,
-    id_col: str = "clip_id",
-    sig_cols: list[str] | None = None,
-) -> DataFrame:
-    """Join (id1, id2) with the signature table on both sides."""
-    cols = [c for c in (sig_cols or _SIG_COLS) if c in signatures.columns]
-    a = signatures.select(
-        F.col(id_col).alias("id1"), *[F.col(c).alias(f"{c}_1") for c in cols]
-    )
-    b = signatures.select(
-        F.col(id_col).alias("id2"), *[F.col(c).alias(f"{c}_2") for c in cols]
-    )
-    return pairs.join(a, "id1").join(b, "id2")
 
 
 def score_pairs(
@@ -66,21 +52,14 @@ def score_pairs(
     """
     w = cfg.weights
     t_j = jaccard(F.col("shingles_1"), F.col("shingles_2"))
-    if "audio_shingles_1" in feat.columns:
-        # degenerate-signature guard (see DedupConfig.min_audio_shingles)
-        a_ok = (F.size("audio_shingles_1") >= cfg.min_audio_shingles) & (
-            F.size("audio_shingles_2") >= cfg.min_audio_shingles
-        )
-        a_j = F.when(
-            a_ok, jaccard(F.col("audio_shingles_1"), F.col("audio_shingles_2"))
-        ).otherwise(F.lit(0.0))
-    else:
-        a_j = F.lit(0.0)
-    s_h = (
-        hamming_similarity(F.col("simhash_1"), F.col("simhash_2"))
-        if "simhash_1" in feat.columns
-        else F.lit(0.0)
+    # degenerate-signature guard (see DedupConfig.min_audio_shingles)
+    a_ok = (F.size("audio_shingles_1") >= cfg.min_audio_shingles) & (
+        F.size("audio_shingles_2") >= cfg.min_audio_shingles
     )
+    a_j = F.when(
+        a_ok, jaccard(F.col("audio_shingles_1"), F.col("audio_shingles_2"))
+    ).otherwise(F.lit(0.0))
+    s_h = hamming_similarity(F.col("simhash_1"), F.col("simhash_2"))
     # eqNullSafe: a NULL digest/transcript never yields a NULL predicate —
     # the two-phase split below routes on this flag, and under three-valued
     # logic a NULL would silently drop the pair from BOTH branches.
@@ -89,8 +68,6 @@ def score_pairs(
         & F.col("bytes_md5_1").isNotNull()
         & F.col("transcript_norm_1").eqNullSafe(F.col("transcript_norm_2"))
         & F.col("transcript_norm_1").isNotNull()
-        if "bytes_md5_1" in feat.columns
-        else F.lit(False)
     )
 
     scored = feat.withColumn("transcript_jaccard", t_j)
@@ -103,81 +80,61 @@ def score_pairs(
     # by the pure-Catalyst evidence — Python UDFs inside when() branches are
     # extracted into unconditional ArrowEvalPython nodes, so the gating must
     # happen in the plan shape, not the expression (two-phase verify).
-    if "transcript_norm_1" in feat.columns:
-        from entity_deduplication_spark.operators.suffix import run_verify_udf
-        from entity_deduplication_spark.sources.io import stage
-
-        # Slim + materialize BEFORE the easy/hard split: a union's two
-        # branches each re-evaluate their common input subtree, so with
-        # the array payloads still attached the split would run the
-        # whole join + array-jaccard pipeline TWICE per pair (measured
-        # as ~2x verify CPU at 300k clips — the plan showed 8 pair-side
-        # joins where the single-pass plan has 4). SCALARS ONLY cross
-        # this boundary (~50 B/pair): carrying the two normalized
-        # transcripts here put ~500 B/pair into the materialized cache
-        # — at 800k clips / ~50M candidates that is ~25 GB of
-        # long-lived serialized blocks, which (with the array-payload
-        # broadcasts, see tools/scale_run.py) drove the 48 GB heap into
-        # GC collapse: stage tasks ran 45+ min with every stack in
-        # MemoryStore.putIterator / SQLOpenHashSet. The hard minority
-        # re-joins transcripts below instead.
-        scored = stage(
-            scored.select(
-                "id1",
-                "id2",
-                "transcript_jaccard",
-                "audio_jaccard",
-                "simhash_sim",
-                "is_exact",
-            )
+    #
+    # Slim + materialize BEFORE the easy/hard split: a union's two
+    # branches each re-evaluate their common input subtree, so with
+    # the array payloads still attached the split would run the
+    # whole join + array-jaccard pipeline TWICE per pair (measured
+    # as ~2x verify CPU at 300k clips — the plan showed 8 pair-side
+    # joins where the single-pass plan has 4). SCALARS ONLY cross
+    # this boundary (~50 B/pair): carrying the two normalized
+    # transcripts here put ~500 B/pair into the materialized cache
+    # — at 800k clips / ~50M candidates that is ~25 GB of
+    # long-lived serialized blocks, which (with the array-payload
+    # broadcasts, see tools/scale_run.py) drove the 48 GB heap into
+    # GC collapse: stage tasks ran 45+ min with every stack in
+    # MemoryStore.putIterator / SQLOpenHashSet. The hard minority
+    # re-joins transcripts below instead.
+    scored = stage(
+        scored.select(
+            "id1",
+            "id2",
+            "transcript_jaccard",
+            "audio_jaccard",
+            "simhash_sim",
+            "is_exact",
         )
+    )
 
-        # total split: coalesce(..., False) guarantees every candidate row
-        # lands in exactly one branch even if an evidence column is NULL
-        # (e.g. NULL transcript_norm with equal digests) — otherwise
-        # filter(decided) and filter(~decided) would BOTH drop it.
-        decided = F.coalesce(
-            F.col("is_exact")
-            | (F.col("transcript_jaccard") >= cfg.jaccard_threshold)
-            | (F.col("audio_jaccard") >= cfg.audio_jaccard_threshold),
-            F.lit(False),
-        )
-        easy = scored.filter(decided).withColumn("run_len", F.lit(0))
-        hard = scored.filter(~decided)
-        # Transcripts are attached ONLY to the undecided minority (the
-        # easy branch never reads them). ``signatures`` is the slim
-        # (clip_id, transcript_norm) source; when the caller cannot
-        # supply it, fall back to the transcript columns already in
-        # ``feat`` — but then they must ride through the checkpoint.
-        if signatures is not None and id_col in signatures.columns:
-            tn = signatures.select(id_col, "transcript_norm")
-            hard = hard.join(
-                tn.select(
-                    F.col(id_col).alias("id1"),
-                    F.col("transcript_norm").alias("transcript_norm_1"),
-                ),
-                "id1",
-            ).join(
-                tn.select(
-                    F.col(id_col).alias("id2"),
-                    F.col("transcript_norm").alias("transcript_norm_2"),
-                ),
-                "id2",
-            )
-        else:  # pragma: no cover - exercised only by direct score_pairs use
-            trans = feat.select(
-                "id1", "id2", "transcript_norm_1", "transcript_norm_2"
-            )
-            hard = hard.join(trans, ["id1", "id2"])
-        hard = hard.withColumn(
-            "run_len",
-            run_verify_udf(cfg.min_run_chars)(
-                F.col("transcript_norm_1"), F.col("transcript_norm_2")
-            ),
-        ).drop("transcript_norm_1", "transcript_norm_2")
-        scored = easy.unionByName(hard)
-    else:
-        scored = scored.withColumn("run_len", F.lit(0))
+    # total split: coalesce(..., False) guarantees every candidate row
+    # lands in exactly one branch even if an evidence column is NULL
+    # (e.g. NULL transcript_norm with equal digests) — otherwise
+    # filter(decided) and filter(~decided) would BOTH drop it.
+    decided = F.coalesce(
+        F.col("is_exact")
+        | (F.col("transcript_jaccard") >= cfg.jaccard_threshold)
+        | (F.col("audio_jaccard") >= cfg.audio_jaccard_threshold),
+        F.lit(False),
+    )
+    easy = scored.filter(decided).withColumn("run_len", F.lit(0))
+    hard = scored.filter(~decided)
+    # Transcripts are attached ONLY to the undecided minority (the
+    # easy branch never reads them). ``signatures`` is the slim
+    # (clip_id, transcript_norm) source; when the caller cannot
+    # supply it, fall back to the transcript columns already in
+    # ``feat`` — but then they must ride through the checkpoint.
+    if signatures is not None:
+        hard = attach_pair_features(hard, signatures, ["transcript_norm"], id_col)
+    else:  # pragma: no cover - exercised only by direct score_pairs use
+        trans = feat.select("id1", "id2", "transcript_norm_1", "transcript_norm_2")
+        hard = hard.join(trans, ["id1", "id2"])
+    hard = hard.withColumn(
+        "run_len",
+        run_verify_udf(cfg.min_run_chars)(
+            F.col("transcript_norm_1"), F.col("transcript_norm_2")
+        ),
+    ).drop("transcript_norm_1", "transcript_norm_2")
+    scored = easy.unionByName(hard)
 
     strong_t = F.col("transcript_jaccard") >= cfg.jaccard_threshold
     strong_a = F.col("audio_jaccard") >= cfg.audio_jaccard_threshold
@@ -235,37 +192,27 @@ def verified_edges(
     The resulting cluster assignments are identical; only redundant edge
     rows disappear.
     """
-    if "bytes_md5" in signatures.columns and "transcript_norm" in signatures.columns:
-        keys = signatures.select(
-            F.col("clip_id"),
-            F.col("bytes_md5"),
-            F.md5(F.col("transcript_norm")).alias("_tn_md5"),
-            (F.length("transcript_norm") > 0).alias("_tn_ok"),
-        )
-        k1 = keys.select(
-            F.col("clip_id").alias("id1"),
-            F.col("bytes_md5").alias("_b1"),
-            F.col("_tn_md5").alias("_t1"),
-            F.col("_tn_ok").alias("_ok1"),
-        )
-        k2 = keys.select(
-            F.col("clip_id").alias("id2"),
-            F.col("bytes_md5").alias("_b2"),
-            F.col("_tn_md5").alias("_t2"),
-            F.col("_tn_ok").alias("_ok2"),
-        )
-        chained = F.coalesce(
-            (F.col("_b1") == F.col("_b2"))
-            | (F.col("_t1").eqNullSafe(F.col("_t2")) & F.col("_ok1") & F.col("_ok2")),
-            F.lit(False),
-        )
-        pairs = (
-            pairs.join(k1, "id1")
-            .join(k2, "id2")
-            .filter(~chained)
-            .select("id1", "id2")
-        )
-    feat = attach_pair_features(pairs, signatures)
+    keys = signatures.select(
+        F.col("clip_id"),
+        F.col("bytes_md5"),
+        F.md5(F.col("transcript_norm")).alias("tn_md5"),
+        (F.length("transcript_norm") > 0).alias("tn_ok"),
+    )
+    chained = F.coalesce(
+        (F.col("bytes_md5_1") == F.col("bytes_md5_2"))
+        | (
+            F.col("tn_md5_1").eqNullSafe(F.col("tn_md5_2"))
+            & F.col("tn_ok_1")
+            & F.col("tn_ok_2")
+        ),
+        F.lit(False),
+    )
+    pairs = (
+        attach_pair_features(pairs, keys, ["bytes_md5", "tn_md5", "tn_ok"])
+        .filter(~chained)
+        .select("id1", "id2")
+    )
+    feat = attach_pair_features(pairs, signatures, _SIG_COLS)
     scored = score_pairs(feat, cfg, signatures=signatures)
     return scored.filter(F.col("score") >= cfg.match_threshold).select(
         "id1", "id2", "score"

@@ -12,9 +12,10 @@ Usage: python tools/band_family_audit.py [n_clips] [cores]
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 FAMILY = {0: "text_minhash", 1: "audio_minhash", 2: "simhash", 3: "fingerprint"}
 
@@ -26,6 +27,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from entity_deduplication_spark.config import DedupConfig
+    from entity_deduplication_spark.datagen import DATA_DIR
     from entity_deduplication_spark.plans.pipeline import (
         build_signatures,
         unified_band_table,
@@ -34,7 +36,7 @@ def main() -> None:
     from entity_deduplication_spark.sources.io import stage
     from tools.scale_run import ensure_chunks
 
-    chunk_paths = ensure_chunks("/root/repo/.data/scale_800k_v2", n_clips)
+    chunk_paths = ensure_chunks(os.path.join(DATA_DIR, "scale_800k_v2"), n_clips)
     spark = get_spark(
         app_name=f"band-audit-{n_clips}",
         cores=cores,

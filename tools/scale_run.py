@@ -26,7 +26,8 @@ import sys
 import time
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 CHUNK = 50_000
 
@@ -38,7 +39,7 @@ def current_round() -> int:
     if env:
         return int(env)
     rounds = [0]
-    for f in os.listdir("/root/repo"):
+    for f in os.listdir(REPO):
         if f.startswith("BENCH_r") and f.endswith(".json"):
             try:
                 rounds.append(int(f[len("BENCH_r"):-len(".json")]))
@@ -149,7 +150,9 @@ def main() -> None:
     # it needs (last chunk may be partial only for non-multiples of CHUNK)
     # v2: chunk files carry per-chunk id_offset (globally unique clip_ids);
     # v1 chunks (scale_800000/) restarted ids per chunk and are invalid
-    data_dir = "/root/repo/.data/scale_800k_v2"
+    from entity_deduplication_spark.datagen import DATA_DIR
+
+    data_dir = os.path.join(DATA_DIR, "scale_800k_v2")
     chunk_paths = ensure_chunks(data_dir, n_clips)
 
     from entity_deduplication_spark.plans.pipeline import DedupPipeline
@@ -211,7 +214,7 @@ def main() -> None:
         "cpu_per_clip_ms": round(1000.0 * tree / n_clips, 2),
         "n_clusters": n_clusters,
     }
-    path = f"/root/repo/BENCH/SCALE_r{current_round():02d}.json"
+    path = os.path.join(REPO, "BENCH", f"SCALE_r{current_round():02d}.json")
     hist = []
     if os.path.exists(path):
         with open(path) as f:

@@ -56,6 +56,8 @@ import subprocess
 import sys
 from datetime import datetime, timezone
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 N_CLIPS = int(os.environ.get("SCALING_CLIPS", "96000"))
 WARM_CLIPS = 2000
 LEVELS = [
@@ -65,7 +67,7 @@ ROUNDS = int(os.environ.get("SCALING_ROUNDS", "5"))
 
 _CHILD = r"""
 import json, os, sys, time, urllib.request
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.getcwd())  # run_level starts this in the checkout
 from entity_deduplication_spark.session import get_spark
 from entity_deduplication_spark.datagen import ensure_clips_parquet
 from entity_deduplication_spark.plans.pipeline import DedupPipeline
@@ -167,7 +169,7 @@ def run_level(cores: int) -> dict:
         capture_output=True,
         text=True,
         timeout=5400,
-        cwd="/root/repo",
+        cwd=REPO,
         start_new_session=True,  # own pgid -> tree_cpu_s scopes to this run
     )
     for line in out.stdout.splitlines():
@@ -341,8 +343,8 @@ verification is exact Jaccard on shingle arrays evaluated JVM-side with
 whole-stage codegen, and every stage scales horizontally where the
 reference is a single pandas process.
 """
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
-    with open("/root/repo/BENCH/BASELINE.md", "w") as f:
+    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
+    with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "w") as f:
         f.write(md)
     print(
         json.dumps(
