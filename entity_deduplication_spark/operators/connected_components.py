@@ -145,42 +145,31 @@ def connected_components(
 
     if 0 < prev[0] <= small_graph_edges:
         labels = _union_find_labels(e, node_id)
-        if nodes is not None:
-            all_nodes = nodes.select(F.col(node_id)).distinct()
-            labels = all_nodes.join(labels, node_id, "left").select(
-                node_id,
-                F.coalesce(F.col("cluster_id"), F.col(node_id)).alias(
-                    "cluster_id"
-                ),
-            )
-        return labels
+    else:
+        rounds = 0
+        while rounds < max_iterations and prev[0] > 0:
+            # lazy checkpoints: the signature aggregation below is the
+            # single action that materializes the whole batch of rounds
+            for _ in range(min(check_every, max_iterations - rounds)):
+                e = _small_star(_large_star(e)).localCheckpoint(eager=False)
+                rounds += 1
+            sig = _signature(e)
+            if sig == prev:
+                break
+            prev = sig
 
-    rounds = 0
-    while rounds < max_iterations and prev[0] > 0:
-        # lazy checkpoints: the signature aggregation below is the single
-        # action that materializes the whole batch of rounds
-        for _ in range(min(check_every, max_iterations - rounds)):
-            e = _small_star(_large_star(e)).localCheckpoint(eager=False)
-            rounds += 1
-        sig = _signature(e)
-        if sig == prev:
-            break
-        prev = sig
-
-    # at fixpoint every component is a star to its min; label from symmetric min
-    sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    labels = sym.groupBy("u").agg(F.min("v").alias("_mn"))
-    labels = labels.select(
-        F.col("u").alias(node_id),
-        F.least(F.col("u"), F.col("_mn")).alias("cluster_id"),
-    )
+        # at fixpoint every component is a star to its min; label from
+        # symmetric min
+        sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        labels = sym.groupBy("u").agg(F.min("v").alias("_mn"))
+        labels = labels.select(
+            F.col("u").alias(node_id),
+            F.least(F.col("u"), F.col("_mn")).alias("cluster_id"),
+        )
     if nodes is not None:
         all_nodes = nodes.select(F.col(node_id)).distinct()
-        labels = (
-            all_nodes.join(labels, node_id, "left")
-            .select(
-                node_id,
-                F.coalesce(F.col("cluster_id"), F.col(node_id)).alias("cluster_id"),
-            )
+        labels = all_nodes.join(labels, node_id, "left").select(
+            node_id,
+            F.coalesce(F.col("cluster_id"), F.col(node_id)).alias("cluster_id"),
         )
     return labels

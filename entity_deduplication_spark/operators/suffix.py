@@ -91,7 +91,8 @@ def run_verify_udf(min_len: int):
                 out[i] = min_len
         return pd.Series(out)
 
-    return _run_len
+    # nondeterministic: Spark must not inline it into a pushed-down filter
+    return _run_len.asNondeterministic()
 
 
 def substring_run_pairs(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:

@@ -2,11 +2,12 @@
 
 Plays the role of the reference's ``_calculate_match_score`` evidence
 combiner (deterministic_feature.py:1183-1422) and secondary-evidence
-validation (deterministic_feature.py:569-651), recast as one ``select``
-expression tree over the pair join — pure Catalyst, whole-stage codegen.
-The reference's ±0.001 tie-break noise (deterministic_feature.py:1416-1420)
-is deliberately dropped: scores are deterministic and ties break on
-(id1, id2).
+validation (deterministic_feature.py:569-651), recast as one projection
+over the pair join: three pure-Catalyst evidence columns, then one call
+of the run verifier whose inputs are masked to NULL for the pairs that
+evidence already decided. The reference's ±0.001 tie-break noise
+(deterministic_feature.py:1416-1420) is deliberately dropped: scores are
+deterministic and ties break on (id1, id2).
 
 Column-pruning discipline: candidates join against the *signatures* table
 (digests + shingle arrays + sketches), never the raw ``bytes`` column —
@@ -22,10 +23,8 @@ from entity_deduplication_spark.config import DedupConfig
 from entity_deduplication_spark.functions.similarity import hamming_similarity, jaccard
 from entity_deduplication_spark.operators.pairs import attach_pair_features
 from entity_deduplication_spark.operators.suffix import run_verify_udf
-from entity_deduplication_spark.sources.io import stage
 
 _SIG_COLS = [
-    "bytes_md5",
     "transcript_norm",
     "shingles",
     "audio_shingles",
@@ -33,22 +32,22 @@ _SIG_COLS = [
 ]
 
 
-def score_pairs(
-    feat: DataFrame,
-    cfg: DedupConfig,
-    signatures: DataFrame | None = None,
-    id_col: str = "clip_id",
-) -> DataFrame:
-    """Evidence-weighted score per pair -> (id1, id2, score, <evidence cols>).
+def score_pairs(feat: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """Evidence-weighted score per pair -> (id1, id2, <evidence cols>, score).
+
+    ``feat`` is a candidate table with ``_SIG_COLS`` attached as ``c_1`` /
+    ``c_2``. Precondition: pairs that share a bytes digest or a non-empty
+    normalized transcript were dropped before (``verified_edges`` does
+    this); exact duplicates get score 1.0 from the chain edges of
+    ``plans.pipeline.exact_edges``, not from here.
 
     Tiering mirrors the reference's weight table + primary/supporting
     combination with diminishing returns and cap
     (deterministic_feature.py:80-102, 1329-1383):
 
-    * exact byte duplicate -> 1.0;
     * primary evidence = max of weighted transcript-Jaccard,
-      audio-Jaccard, SimHash-Hamming similarity;
-    * each additional strong supporting signal adds +0.05, capped at 0.99.
+      audio-Jaccard, SimHash-Hamming similarity and exact substring run;
+    * each additional strong supporting signal adds +0.02, capped at 0.99.
     """
     w = cfg.weights
     t_j = jaccard(F.col("shingles_1"), F.col("shingles_2"))
@@ -60,84 +59,26 @@ def score_pairs(
         a_ok, jaccard(F.col("audio_shingles_1"), F.col("audio_shingles_2"))
     ).otherwise(F.lit(0.0))
     s_h = hamming_similarity(F.col("simhash_1"), F.col("simhash_2"))
-    # eqNullSafe: a NULL digest/transcript never yields a NULL predicate —
-    # the two-phase split below routes on this flag, and under three-valued
-    # logic a NULL would silently drop the pair from BOTH branches.
-    exact = (
-        F.col("bytes_md5_1").eqNullSafe(F.col("bytes_md5_2"))
-        & F.col("bytes_md5_1").isNotNull()
-        & F.col("transcript_norm_1").eqNullSafe(F.col("transcript_norm_2"))
-        & F.col("transcript_norm_1").isNotNull()
-    )
 
     scored = feat.withColumn("transcript_jaccard", t_j)
     scored = scored.withColumn("audio_jaccard", a_j)
     scored = scored.withColumn("simhash_sim", s_h)
-    scored = scored.withColumn("is_exact", exact)
-
-    # exact substring-run evidence (suffix/winnowing family): Arrow-batched
-    # L-gram-hash intersection. Evaluated ONLY for pairs not already decided
-    # by the pure-Catalyst evidence — Python UDFs inside when() branches are
-    # extracted into unconditional ArrowEvalPython nodes, so the gating must
-    # happen in the plan shape, not the expression (two-phase verify).
-    #
-    # Slim + materialize BEFORE the easy/hard split: a union's two
-    # branches each re-evaluate their common input subtree, so with
-    # the array payloads still attached the split would run the
-    # whole join + array-jaccard pipeline TWICE per pair (measured
-    # as ~2x verify CPU at 300k clips — the plan showed 8 pair-side
-    # joins where the single-pass plan has 4). SCALARS ONLY cross
-    # this boundary (~50 B/pair): carrying the two normalized
-    # transcripts here put ~500 B/pair into the materialized cache
-    # — at 800k clips / ~50M candidates that is ~25 GB of
-    # long-lived serialized blocks, which (with the array-payload
-    # broadcasts, see tools/scale_run.py) drove the 48 GB heap into
-    # GC collapse: stage tasks ran 45+ min with every stack in
-    # MemoryStore.putIterator / SQLOpenHashSet. The hard minority
-    # re-joins transcripts below instead.
-    scored = stage(
-        scored.select(
-            "id1",
-            "id2",
-            "transcript_jaccard",
-            "audio_jaccard",
-            "simhash_sim",
-            "is_exact",
-        )
-    )
-
-    # total split: coalesce(..., False) guarantees every candidate row
-    # lands in exactly one branch even if an evidence column is NULL
-    # (e.g. NULL transcript_norm with equal digests) — otherwise
-    # filter(decided) and filter(~decided) would BOTH drop it.
-    decided = F.coalesce(
-        F.col("is_exact")
-        | (F.col("transcript_jaccard") >= cfg.jaccard_threshold)
-        | (F.col("audio_jaccard") >= cfg.audio_jaccard_threshold),
-        F.lit(False),
-    )
-    easy = scored.filter(decided).withColumn("run_len", F.lit(0))
-    hard = scored.filter(~decided)
-    # Transcripts are attached ONLY to the undecided minority (the
-    # easy branch never reads them). ``signatures`` is the slim
-    # (clip_id, transcript_norm) source; when the caller cannot
-    # supply it, fall back to the transcript columns already in
-    # ``feat`` — but then they must ride through the checkpoint.
-    if signatures is not None:
-        hard = attach_pair_features(hard, signatures, ["transcript_norm"], id_col)
-    else:  # pragma: no cover - exercised only by direct score_pairs use
-        trans = feat.select("id1", "id2", "transcript_norm_1", "transcript_norm_2")
-        hard = hard.join(trans, ["id1", "id2"])
-    hard = hard.withColumn(
-        "run_len",
-        run_verify_udf(cfg.min_run_chars)(
-            F.col("transcript_norm_1"), F.col("transcript_norm_2")
-        ),
-    ).drop("transcript_norm_1", "transcript_norm_2")
-    scored = easy.unionByName(hard)
 
     strong_t = F.col("transcript_jaccard") >= cfg.jaccard_threshold
     strong_a = F.col("audio_jaccard") >= cfg.audio_jaccard_threshold
+    # exact substring-run evidence (suffix/winnowing family), only for the
+    # pairs the Catalyst evidence left undecided: a Python UDF inside a
+    # when() branch still runs on every row, so the gate masks its inputs
+    # to NULL, which the verifier scores 0 without work
+    undecided = ~F.coalesce(strong_t | strong_a, F.lit(False))
+    scored = scored.withColumn(
+        "run_len",
+        run_verify_udf(cfg.min_run_chars)(
+            F.when(undecided, F.col("transcript_norm_1")),
+            F.when(undecided, F.col("transcript_norm_2")),
+        ),
+    )
+
     # SimHash similarity is only "strong" inside the Hamming radius
     strong_s = F.col("simhash_sim") >= 1.0 - cfg.simhash_hamming_max / 64.0
     strong_r = F.col("run_len") >= cfg.min_run_chars
@@ -172,10 +113,15 @@ def score_pairs(
         + strong_r.cast("int")
     )
     support = F.when(n_strong >= 2, (n_strong - 1) * F.lit(0.02)).otherwise(0.0)
-    score = F.when(F.col("is_exact"), F.lit(1.0)).otherwise(
-        F.least(primary + support, F.lit(0.99))
+    return scored.select(
+        "id1",
+        "id2",
+        "transcript_jaccard",
+        "audio_jaccard",
+        "simhash_sim",
+        "run_len",
+        F.least(primary + support, F.lit(0.99)).alias("score"),
     )
-    return scored.withColumn("score", score)
 
 
 def verified_edges(
@@ -213,7 +159,7 @@ def verified_edges(
         .select("id1", "id2")
     )
     feat = attach_pair_features(pairs, signatures, _SIG_COLS)
-    scored = score_pairs(feat, cfg, signatures=signatures)
+    scored = score_pairs(feat, cfg)
     return scored.filter(F.col("score") >= cfg.match_threshold).select(
         "id1", "id2", "score"
     )

@@ -281,12 +281,11 @@ class DedupPipeline:
         cand = self.ckpt.get_or_compute(
             "candidate_pairs", lambda: candidate_pairs(sig, cfg), resume=resume
         )
+        # disjoint sets: verify drops every pair an exact key links
         verified = verified_edges(cand.select("id1", "id2"), sig, cfg)
         edges = self.ckpt.get_or_compute(
             "edges",
-            lambda: verified.unionByName(exact_edges(sig, cfg))
-            .groupBy("id1", "id2")
-            .agg(F.max("score").alias("score")),
+            lambda: verified.unionByName(exact_edges(sig, cfg)),
             resume=resume,
         )
 

@@ -60,9 +60,7 @@ def stage(df: DataFrame) -> DataFrame:
     return out
 
 
-def spread_partitions(
-    df: DataFrame, key: str | None = None, min_parts: int | None = None
-) -> DataFrame:
+def spread_partitions(df: DataFrame, key: str | None = None) -> DataFrame:
     """Repartition a source whose scan yields fewer partitions than the
     session's parallelism — a small parquet file is a single split, so an
     expensive downstream stage (sketch UDFs, explode+window chains) would
@@ -76,7 +74,7 @@ def spread_partitions(
     column) rather than round-robin, which also skips round-robin's
     sort-before-repartition pass."""
     sc = df.sparkSession.sparkContext
-    target = min_parts or max(sc.defaultParallelism, 8)
+    target = sc.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target, key) if key else df.repartition(target)

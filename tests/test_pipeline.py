@@ -49,6 +49,9 @@ def test_canonical_and_metrics(spark, clips_1k, result_1k):
     m = result_1k.metrics.first()
     assert m["total_records"] == clips.count()
     assert m["unique_entities"] == n_clusters
+    # verified and exact edges are disjoint, so their union has no repeats
+    edges = result_1k.edges
+    assert edges.count() == edges.select("id1", "id2").distinct().count()
 
 
 def test_pipeline_deterministic(spark, clips_1k):
