@@ -64,7 +64,6 @@ def main(argv: list[str] | None = None) -> int:
         match_threshold=args.match_threshold,
         jaccard_threshold=args.jaccard_threshold,
         min_run_chars=args.min_run_chars,
-        checkpoint_dir=args.checkpoint_dir,
     )
     t0 = time.time()
     pipe = DedupPipeline(spark, cfg, checkpoint_dir=args.checkpoint_dir)

@@ -58,7 +58,6 @@ class DedupConfig:
 
     # --- skew / blocking limits (reference block_size_limit 1000, run.py:40-41) ---
     block_size_limit: int = 1000  # rows per (possibly salted) block key
-    salt_buckets: int = 16        # salts applied to hot band keys
     # band buckets larger than this fall back to O(n) CHAIN candidates
     # (consecutive by id) instead of all C(n, 2) pairs: a band key shared
     # by many clips is usually stopword-like evidence, and a band key
@@ -97,9 +96,6 @@ class DedupConfig:
     # "tiers" = progressive score-threshold re-clustering (round-1 form)
     split_method: str = "louvain"
     cc_max_iterations: int = 50
-
-    # --- misc ---
-    checkpoint_dir: str | None = None
 
     weights: dict = field(
         default_factory=lambda: {

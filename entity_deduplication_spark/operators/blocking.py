@@ -43,7 +43,6 @@ def lsh_band_pairs(
         key_cols=["band_idx", "band_key"],
         id_col=id_col,
         block_size_limit=cfg.block_size_limit,
-        salt_buckets=cfg.salt_buckets,
     )
 
 
@@ -80,7 +79,6 @@ def simhash_block_pairs(
         key_cols=["band_idx", "band_key"],
         id_col=id_col,
         block_size_limit=cfg.block_size_limit,
-        salt_buckets=cfg.salt_buckets,
     )
 
 

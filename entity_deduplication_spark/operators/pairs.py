@@ -62,11 +62,9 @@ def block_self_join_pairs(
     Strategy (replaces the reference's block-size drop/sample,
     deterministic_feature.py:852-918, losslessly up to ``block_size_limit``):
 
-    * block size computed with a single window (one shuffle);
-    * blocks larger than ``block_size_limit`` are truncated to the first
-      ``limit`` members by id (the reference *drops* them outright — we
-      keep a capped prefix; exact-duplicate floods are caught separately
-      by chain edges in dedup.exact_* so nothing real is lost);
+    * one window pass (one shuffle) sizes each block and ranks its
+      members by id; the sized table is materialized once;
+    * one per-row rule then routes each row (below);
     * cold blocks (≤ hot_threshold) use a plain self-equi-join;
     * hot blocks use a two-sided salted join: the left side keeps its own
       salt ``pmod(xxhash64(id), s)``, the right side is exploded to all
@@ -74,8 +72,11 @@ def block_self_join_pairs(
       the ``id1 < id2`` filter, but the single hot task is split into
       ``s`` tasks.
 
-    ``on_oversize`` controls what happens to a block larger than
-    ``block_size_limit``:
+    ``block_size_limit`` and ``on_oversize`` are scalars or Columns (a
+    Column may derive a per-family cap/policy from ``key_cols``, so one
+    unified block table can mix families); both forms run the same rule.
+    Rows of blocks within the limit always pair. ``on_oversize`` decides
+    the rows of a block larger than ``block_size_limit``:
 
     * ``"truncate"`` (default): keep the first ``limit`` members by id —
       lossy but bounded, right for heuristic blocking families;
@@ -94,101 +95,78 @@ def block_self_join_pairs(
       *deterministically* shared by real duplicate groups larger than the
       cap (LSH band tables — a group of identical clips shares EVERY band
       key, so no other bucket rescues it);
-    * ``"error"``: raise at execution time (``assert_true``) instead of
-      silently dropping members. Callers that advertise a recall
-      guarantee (e.g. the tuned-RHP embedding path) MUST use this so the
-      guarantee is never quietly voided by a hot bucket at scale.
+    * ``"error"``: raise (``raise_error``) instead of silently dropping
+      members. Callers that advertise a recall guarantee (e.g. the
+      tuned-RHP embedding path) MUST use this so the guarantee is never
+      quietly voided by a hot bucket at scale.
+
+    Any other policy raises on an oversized block. Errors surface in the
+    action that consumes the result, not in this call.
 
     Returns (id1, id2) distinct pairs.
     """
-    w = Window.partitionBy(*key_cols)
-    sized = keyed.withColumn("_bn", F.count(F.lit(1)).over(w))
-    plain_truncate = not (
-        isinstance(block_size_limit, Column) or isinstance(on_oversize, Column)
-    ) and on_oversize not in ("error", "skip", "chain")
-    if plain_truncate:
-        # fold the truncate cap into the same pre-materialization window
-        # pass (same partition keys -> same exchange; the rn<=limit filter
-        # compiles to a WindowGroupLimit that prunes sort-side)
-        sized = sized.withColumn(
-            "_rn", F.row_number().over(w.orderBy(id_col))
+    limit = (
+        block_size_limit
+        if isinstance(block_size_limit, Column)
+        else F.lit(block_size_limit)
+    )
+    policy = on_oversize if isinstance(on_oversize, Column) else F.lit(on_oversize)
+    # size, rank and successor share one partition/order spec, so Spark
+    # computes all three in one Window operator (one exchange, one sort)
+    w = Window.partitionBy(*key_cols).orderBy(id_col)
+    # Materialize the sized block table ONCE: it feeds up to five plan
+    # subtrees (chain branch, cold self-join a/b, hot salted join a/b),
+    # and Spark would re-evaluate the whole upstream banding chain
+    # (posexplode + shuffle + sort + window) per subtree. The table is
+    # linear in the band rows the window pass already shuffles.
+    sized = stage(
+        keyed.withColumn(
+            "_bn",
+            F.count(F.lit(1)).over(
+                w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+            ),
         )
-        sized = sized.filter(F.col("_rn") <= block_size_limit).drop("_rn")
-    # Materialize the sized block table ONCE: downstream it feeds up to
-    # five plan subtrees (chain branch, cold self-join a/b, hot salted
-    # join a/b), and Spark re-evaluates the whole upstream banding chain
-    # (posexplode + shuffle + sort + window[s]) per subtree — the "before"
-    # plans show 4 copies of the Generate/Window chain per pair query.
-    # The table is linear in the band rows the window pass already
-    # shuffles — no new scale cost.
-    sized = stage(sized)
-    chain_pairs: DataFrame | None = None
-    if isinstance(block_size_limit, Column) or isinstance(on_oversize, Column):
-        # per-row cap/policy (both may be Columns derived from key_cols):
-        # lets one unified block table mix families with different
-        # oversize semantics in a single window pass. Column mode
-        # supports only {"chain", "skip"} policies — any other value on an
-        # oversized row raises at execution time instead of silently
-        # dropping candidates (a typo'd policy literal must be loud).
-        limit_col = (
-            block_size_limit
-            if isinstance(block_size_limit, Column)
-            else F.lit(block_size_limit)
+        .withColumn("_rn", F.row_number().over(w))
+        .withColumn("_next", F.lead(F.col(id_col)).over(w))
+    )
+    bn = F.col("_bn")
+    # The rule is evaluated lazily after the stage, so a raise surfaces in
+    # the consumer's action; NULL drops the row. (``isin`` rather than
+    # ``==``: a scalar policy compared to its own literal logs a warning.)
+    route = (
+        F.when(
+            (bn <= limit) | (policy.isin("truncate") & (F.col("_rn") <= limit)),
+            F.lit("pair"),
         )
-        pol_col = (
-            on_oversize if isinstance(on_oversize, Column) else F.lit(on_oversize)
-        )
-        # validated routing value: evaluating it on any oversized row with
-        # an unsupported policy throws, so the guard cannot be optimized
-        # away from the branch that uses it
-        pol_norm = F.when(pol_col.isin("chain", "skip"), pol_col).otherwise(
+        .when(policy.isin("chain"), F.lit("chain"))
+        .when(policy.isin("skip", "truncate"), F.lit(None))
+        .when(
+            policy.isin("error"),
             F.raise_error(
                 F.concat(
-                    F.lit(
-                        "block_self_join_pairs: unsupported Column "
-                        "on_oversize policy "
-                    ),
-                    F.coalesce(pol_col, F.lit("NULL")),
-                    F.lit(" (expected 'chain' or 'skip')"),
-                )
-            )
-        )
-        over = F.col("_bn") > limit_col
-        chain_pairs = chain_edges_within_block(
-            sized.filter(over & (pol_norm == F.lit("chain"))).drop("_bn"),
-            key_cols=key_cols,
-            id_col=id_col,
-        )
-        sized = sized.filter(~over)
-    elif on_oversize == "error":
-        sized = sized.filter(
-            F.assert_true(
-                F.col("_bn") <= F.lit(block_size_limit),
-                F.concat_ws(
-                    " ",
-                    F.lit(
-                        "block_self_join_pairs: a block exceeds "
-                        f"block_size_limit={block_size_limit} (size ="
-                    ),
-                    F.col("_bn").cast("string"),
+                    F.lit("block_self_join_pairs: a block exceeds block_size_limit="),
+                    limit.cast("string"),
+                    F.lit(" (size = "),
+                    bn.cast("string"),
                     F.lit(
                         "); raise the limit, pre-split the key, or use a "
                         "truncating caller"
                     ),
-                ),
-            ).isNull()
+                )
+            ),
         )
-    elif on_oversize == "skip":
-        sized = sized.filter(F.col("_bn") <= block_size_limit)
-    elif on_oversize == "chain":
-        chain_pairs = chain_edges_within_block(
-            sized.filter(F.col("_bn") > block_size_limit).drop("_bn"),
-            key_cols=key_cols,
-            id_col=id_col,
+        .otherwise(
+            F.raise_error(
+                F.concat(
+                    F.lit("block_self_join_pairs: unsupported on_oversize policy "),
+                    F.coalesce(policy, F.lit("NULL")),
+                    F.lit(" (expected 'truncate', 'skip', 'chain' or 'error')"),
+                )
+            )
         )
-        sized = sized.filter(F.col("_bn") <= block_size_limit)
-    # (plain truncate was applied before the checkpoint)
-    sized = sized.filter(F.col("_bn") >= 2)
+    )
+    routed = sized.withColumn("_route", route)
+    paired = routed.filter((F.col("_route") == "pair") & (bn >= 2))
 
     def _pairs(part: DataFrame) -> DataFrame:
         a = part.select(*key_cols, F.col(id_col).alias("id1"))
@@ -199,12 +177,10 @@ def block_self_join_pairs(
             .select("id1", "id2")
         )
 
-    cold = sized.filter(F.col("_bn") <= hot_threshold).drop("_bn")
-    hot = sized.filter(F.col("_bn") > hot_threshold).drop("_bn")
-
-    cold_pairs = _pairs(cold)
+    cold_pairs = _pairs(paired.filter(bn <= hot_threshold))
 
     s = salt_buckets
+    hot = paired.filter(bn > hot_threshold)
     left = hot.withColumn("_salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(s)))
     right = hot.withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(s - 1))))
     hot_pairs = (
@@ -217,10 +193,15 @@ def block_self_join_pairs(
         .select("id1", "id2")
     )
 
-    out = cold_pairs.unionByName(hot_pairs)
-    if chain_pairs is not None:
-        out = out.unionByName(chain_pairs)
-    return out.dropDuplicates(["id1", "id2"])
+    chain_pairs = routed.filter(
+        (F.col("_route") == "chain") & (F.col("_next") > F.col(id_col))
+    ).select(F.col(id_col).alias("id1"), F.col("_next").alias("id2"))
+
+    return (
+        cold_pairs.unionByName(hot_pairs)
+        .unionByName(chain_pairs)
+        .dropDuplicates(["id1", "id2"])
+    )
 
 
 def chain_edges_within_block(
@@ -233,6 +214,9 @@ def chain_edges_within_block(
     with O(n) instead of O(n^2) edges — the scale-safe replacement for the
     reference's enumerate-all-pairs-in-block loops
     (deterministic_feature.py:920-987).
+
+    A pair shared by two blocks comes out twice; callers dedup the union
+    of their chain families once.
     """
     w = Window.partitionBy(*key_cols).orderBy(id_col)
     nxt = F.lead(F.col(id_col)).over(w)
@@ -240,5 +224,4 @@ def chain_edges_within_block(
         keyed.withColumn("_next", nxt)
         .filter(F.col("_next").isNotNull())
         .select(F.col(id_col).alias("id1"), F.col("_next").alias("id2"))
-        .dropDuplicates(["id1", "id2"])
     )

@@ -103,7 +103,6 @@ def substring_run_pairs(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
         key_cols=["fp"],
         id_col="clip_id",
         block_size_limit=cfg.block_size_limit,
-        salt_buckets=cfg.salt_buckets,
     )
     feat = attach_pair_features(cand, signatures, ["transcript_norm"])
     verified = feat.withColumn(

@@ -184,17 +184,17 @@ def candidate_pairs(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     # key (e.g. re-encodes of one clip with empty transcripts). Chains
     # keep the pair mass linear AND let connected components recover
     # such groups through verified-chain transitivity.
-    # cfg.salt_buckets is deliberately not passed: band_bucket_cap (64)
-    # sits below the hot-block threshold (256), so every surviving
-    # full-pairs block is cold and the salted join path is unreachable
-    # from here.
+    # Both caps (band_bucket_cap 64, fp_df_cap 16) sit below the default
+    # hot-block threshold (256), so every block that pairs in full is
+    # cold and the salted join path is unreachable from here.
     #
-    # Per-family oversize policy (Column mode): the substring-fingerprint
-    # family (src 3) uses a LOWER cap (fp_df_cap) with SKIP — a
-    # fingerprint shared by many clips is a stopword-like common phrase
-    # whose bucket grows ∝ corpus size (see DedupConfig.fp_df_cap); the
-    # minhash/simhash families keep chain-at-cap, which also covers
-    # duplicate-flood recovery for the rows a fp-skip drops.
+    # Per-family oversize policy as Columns, routed per row by the same
+    # rule as a scalar policy: the substring-fingerprint family (src 3)
+    # uses a LOWER cap (fp_df_cap) with SKIP — a fingerprint shared by
+    # many clips is a stopword-like common phrase whose bucket grows ∝
+    # corpus size (see DedupConfig.fp_df_cap); the minhash/simhash
+    # families keep chain-at-cap, which also covers duplicate-flood
+    # recovery for the rows a fp-skip drops.
     is_fp = F.col("src") == F.lit(3)
     return block_self_join_pairs(
         unified,
@@ -250,7 +250,7 @@ class DedupPipeline:
     ):
         self.spark = spark
         self.cfg = cfg or DedupConfig()
-        self.ckpt = CheckpointManager(spark, checkpoint_dir or self.cfg.checkpoint_dir)
+        self.ckpt = CheckpointManager(spark, checkpoint_dir)
 
     def run(self, clips: DataFrame, resume: bool = True) -> DedupResult:
         cfg = self.cfg

@@ -1,8 +1,11 @@
 """Pair plumbing: block self-join (incl. salted hot path) vs brute force;
+the oversize policies of the block self-join, scalar and Column alike;
 chain edges produce the same connected components as cliques."""
 
 import itertools
+import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from entity_deduplication_spark.operators.connected_components import (
@@ -59,6 +62,69 @@ def test_block_size_limit_truncates(spark):
     assert len(got) == 45
     ids = {r["id1"] for r in got} | {r["id2"] for r in got}
     assert ids == {f"id{i:03d}" for i in range(10)}
+
+
+def _oversize_df(spark):
+    # block "hot" has 6 members (> limit 4), block "ok" has 2
+    return spark.createDataFrame(
+        [(f"c{i}", "hot") for i in range(6)] + [("x", "ok"), ("y", "ok")],
+        "clip_id string, block_key string",
+    )
+
+
+def _oversize_pairs(spark, policy, as_column):
+    wrap = F.lit if as_column else (lambda v: v)
+    return block_self_join_pairs(
+        _oversize_df(spark),
+        ["block_key"],
+        block_size_limit=wrap(4),
+        on_oversize=wrap(policy),
+    )
+
+
+_SCALAR_OR_COLUMN = pytest.mark.parametrize(
+    "as_column", [False, True], ids=["scalar", "column"]
+)
+
+
+@_SCALAR_OR_COLUMN
+def test_block_oversize_policies(spark, as_column):
+    def run(policy):
+        out = _oversize_pairs(spark, policy, as_column).collect()
+        return {(r["id1"], r["id2"]) for r in out}
+
+    cold = {("x", "y")}
+    # chain: consecutive-by-id chain (5 edges for 6 members), NOT all
+    # C(6,2)=15 pairs and NOT nothing
+    assert run("chain") == cold | {(f"c{i}", f"c{i + 1}") for i in range(5)}
+    # skip: the oversized block contributes nothing
+    assert run("skip") == cold
+    # truncate: the first 4 members by id pair in full, C(4,2)=6
+    first4 = [f"c{i}" for i in range(4)]
+    assert run("truncate") == cold | set(itertools.combinations(first4, 2))
+
+
+@_SCALAR_OR_COLUMN
+def test_block_oversize_error_raises(spark, as_column):
+    out = _oversize_pairs(spark, "error", as_column)  # raises on the action
+    with pytest.raises(Exception, match="block_size_limit=4"):
+        out.collect()
+
+
+@_SCALAR_OR_COLUMN
+def test_block_oversize_unknown_policy_raises(spark, as_column):
+    # a typo'd policy must be loud, not silently drop candidates
+    out = _oversize_pairs(spark, "bogus", as_column)
+    with pytest.raises(Exception, match="on_oversize policy bogus"):
+        out.collect()
+
+
+def test_column_chain_plan_has_no_window(spark):
+    # size, rank and successor come from the one staged window pass; the
+    # chain pairs must not re-window the staged table
+    out = _oversize_pairs(spark, "chain", as_column=True)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert not re.search(r"^[\s:+-]*Window ", plan, re.MULTILINE), plan
 
 
 def test_canonicalize_pairs(spark):

@@ -1,54 +1,15 @@
 """Round-6 optimization guards.
 
-Pins the behavior changes that round 6's performance work introduced:
-the Column-mode oversize-policy validation (a typo'd policy literal must
-raise, not silently drop candidates — ADVICE r5) and the equivalence of
-the restructured ngram/pair-confusion plans with their previous outputs.
+Pins the equivalence of the plans round 6's performance work
+restructured (pair confusion, unified band table) with their previous
+outputs, and the clips parquet layout.
 """
 
 from __future__ import annotations
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.utils import PythonException
-
-
-def _pairs_df(spark):
-    return spark.createDataFrame(
-        [(f"c{i}", "hot") for i in range(6)] + [("x", "ok"), ("y", "ok")],
-        "clip_id string, block_key string",
-    )
-
-
-def test_column_mode_unknown_policy_raises(spark):
-    from entity_deduplication_spark.operators.pairs import block_self_join_pairs
-
-    out = block_self_join_pairs(
-        _pairs_df(spark),
-        ["block_key"],
-        block_size_limit=F.lit(4),
-        on_oversize=F.lit("truncate"),  # not a Column-mode policy
-    )
-    with pytest.raises(Exception) as exc:
-        out.collect()
-    assert "unsupported Column on_oversize policy" in str(exc.value)
-
-
-def test_column_mode_valid_policies_unchanged(spark):
-    from entity_deduplication_spark.operators.pairs import block_self_join_pairs
-
-    keyed = _pairs_df(spark)
-    chain = block_self_join_pairs(
-        keyed, ["block_key"], block_size_limit=F.lit(4), on_oversize=F.lit("chain")
-    ).collect()
-    pairs = {(r["id1"], r["id2"]) for r in chain}
-    assert pairs == {("x", "y")} | {(f"c{i}", f"c{i + 1}") for i in range(5)}
-    skip = block_self_join_pairs(
-        keyed, ["block_key"], block_size_limit=F.lit(4), on_oversize=F.lit("skip")
-    ).collect()
-    assert {(r["id1"], r["id2"]) for r in skip} == {("x", "y")}
 
 
 def test_pair_confusion_restructured_counts(spark):
