@@ -36,6 +36,23 @@ def test_token_set_ratio_containment_still_shortcuts():
 
 
 # ---------------------------------------------------------------------------
+# block_self_join_pairs on_oversize="truncate"
+# ---------------------------------------------------------------------------
+
+
+def test_block_oversize_truncate_is_silent_and_bounded(spark):
+    from entity_deduplication_spark.operators.pairs import block_self_join_pairs
+
+    keyed = spark.range(50).select(
+        F.lit("hot").alias("k"), F.col("id").alias("clip_id")
+    )
+    pairs = block_self_join_pairs(
+        keyed, key_cols=["k"], block_size_limit=10, on_oversize="truncate"
+    )
+    assert pairs.count() == 45  # C(10,2) from the kept prefix
+
+
+# ---------------------------------------------------------------------------
 # bounded, deterministic ML training collect
 # ---------------------------------------------------------------------------
 

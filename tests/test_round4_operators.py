@@ -39,6 +39,19 @@ def test_blend_skips_oversized_blocks(spark):
     assert ids == {(10, 11)}  # nothing from the oversized block
 
 
+def test_block_self_join_skip_mode(spark):
+    from entity_deduplication_spark.operators.pairs import block_self_join_pairs
+
+    keyed = spark.createDataFrame(
+        [(f"c{i}", "hot") for i in range(6)] + [("x", "ok"), ("y", "ok")],
+        "clip_id string, block_key string",
+    )
+    out = block_self_join_pairs(
+        keyed, ["block_key"], block_size_limit=4, on_oversize="skip"
+    ).collect()
+    assert {(r["id1"], r["id2"]) for r in out} == {("x", "y")}
+
+
 # ---------------------------------------------------------------------------
 # embedding auto-route: decision uses the SAME n-aware tuning as execution
 # ---------------------------------------------------------------------------

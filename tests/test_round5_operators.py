@@ -1,7 +1,6 @@
-"""Round-5 pins: ADVICE fixes (the deploy-gated checkpoint, embedding
-method validation) + the duplicate-flood recovery property that round
-4's skip policy silently violated. The oversize-policy tests of
-block_self_join_pairs live in tests/test_pairs.py."""
+"""Round-5 pins: ADVICE fixes (oversized-bucket chain candidates, the
+deploy-gated checkpoint, embedding method validation) + the duplicate-
+flood recovery property that round 4's skip policy silently violated."""
 
 from __future__ import annotations
 
@@ -11,6 +10,29 @@ import shutil
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+
+
+# ---------------------------------------------------------------------------
+# block_self_join_pairs on_oversize="chain"
+# ---------------------------------------------------------------------------
+
+
+def test_block_self_join_chain_mode(spark):
+    from entity_deduplication_spark.operators.pairs import block_self_join_pairs
+
+    keyed = spark.createDataFrame(
+        [(f"c{i}", "hot") for i in range(6)] + [("x", "ok"), ("y", "ok")],
+        "clip_id string, block_key string",
+    )
+    out = block_self_join_pairs(
+        keyed, ["block_key"], block_size_limit=4, on_oversize="chain"
+    ).collect()
+    pairs = {(r["id1"], r["id2"]) for r in out}
+    # cold block: full pairs; oversized block: consecutive-by-id chain
+    # (5 edges for 6 members), NOT all C(6,2)=15 pairs and NOT nothing
+    assert pairs == {("x", "y")} | {
+        (f"c{i}", f"c{i + 1}") for i in range(5)
+    }
 
 
 def test_embedding_cosine_pairs_unknown_method_rejected(spark):
