@@ -1,10 +1,10 @@
 """Engine configuration.
 
-Mirrors the reference's knobs (match_threshold / block_size_limit /
-max cluster size; reference run.py:82-90, deterministic_feature.py:72-107)
-recast for the MinHash/SimHash/suffix-array pipeline. All hashes are
-seeded constants — the engine is fully deterministic (the reference's
-score noise at deterministic_feature.py:1416-1420 is deliberately dropped).
+Mirrors the reference's knobs (match_threshold / block_size_limit;
+reference run.py:82-90, deterministic_feature.py:72-107) recast for the
+MinHash/SimHash/suffix-array pipeline. All hashes are seeded constants —
+the engine is fully deterministic (the reference's score noise at
+deterministic_feature.py:1416-1420 is deliberately dropped).
 """
 
 from __future__ import annotations
@@ -87,15 +87,6 @@ class DedupConfig:
     # duplicate FLOODS (identical clips > cap) are still recovered by the
     # minhash families' chain policy, which fires on the same rows.
     fp_df_cap: int = 16
-
-    # --- clustering ---
-    max_cluster_size: int = 50    # reference utils.py:73-98 split threshold
-    split_oversized: bool = False  # opt-in analogue of the reference split
-    # "louvain" = per-component greedy-modularity communities via
-    # applyInPandas (reference fidelity, utils.py:73-98);
-    # "tiers" = progressive score-threshold re-clustering (round-1 form)
-    split_method: str = "louvain"
-    cc_max_iterations: int = 50
 
     weights: dict = field(
         default_factory=lambda: {

@@ -3,10 +3,10 @@
 * ``brute_force_topk`` — exact cosine top-k per query (broadcast the small
   query side; JVM-side dot products via zip_with/aggregate). The baseline
   and the oracle for the approximate path.
-* ``rhp_signatures`` / ``rhp_bucket_pairs`` / ``lsh_topk`` — random-
-  hyperplane LSH (Charikar'02): sign-bit signatures from seeded
-  hyperplanes (one numpy matmul per Arrow batch), banded into buckets,
-  exact cosine re-rank within buckets. The 100-TB scale path: candidates
+* ``rhp_band_keys`` / ``rhp_bucket_pairs`` / ``lsh_topk`` — random-
+  hyperplane LSH (Charikar'02): sign bits from seeded hyperplanes (one
+  numpy matmul per Arrow batch), packed into one key per band, exact
+  cosine re-rank within buckets. The 100-TB scale path: candidates
   come from bucket equi-joins instead of a cross join.
 """
 
@@ -53,41 +53,6 @@ def brute_force_topk(
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-    )
-
-
-def rhp_signatures(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    n_planes: int = 32,
-    seed: int = 42,
-) -> DataFrame:
-    """Add a random-hyperplane sign signature column ``rhp_sig`` (long)."""
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((dim, n_planes)).astype(np.float64)
-
-    @F.pandas_udf(T.LongType())
-    def _sig(vecs: pd.Series) -> pd.Series:
-        mat = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-        bits = (mat @ planes) > 0  # batch × n_planes
-        weights = (1 << np.arange(n_planes, dtype=np.uint64))
-        return pd.Series((bits.astype(np.uint64) @ weights).astype(np.int64))
-
-    return df.select(F.col(id_col), F.col(vec_col), _sig(F.col(vec_col)).alias("rhp_sig"))
-
-
-def _band_array(bands: int, r: int):
-    """array<long> of band slices of ``rhp_sig`` (shift amounts must be
-    Python ints for shiftrightunsigned, hence the literal loop)."""
-    return F.array(
-        *[
-            F.shiftrightunsigned(F.col("rhp_sig"), i * r).bitwiseAND(
-                F.lit((1 << r) - 1)
-            )
-            for i in range(bands)
-        ]
     )
 
 
@@ -144,10 +109,11 @@ def rhp_band_keys(
 ) -> DataFrame:
     """(id, vec, band_keys array<bigint>) — one r-bit key per band.
 
-    Unlike ``rhp_signatures`` (single 64-bit packed signature) this scales
-    to r*B > 64 planes: the kernel is one numpy matmul per Arrow batch and
-    packs each band's sign bits into its own bigint, salted with the band
-    index so keys never collide across bands.
+    The kernel is one numpy matmul per Arrow batch against r*B seeded
+    hyperplanes (any r*B, the dimension is read from the data) and packs
+    band i's sign bits (planes i*r .. i*r+r-1, plane j at bit j - i*r)
+    into its own bigint. Keys are not salted: callers block on
+    (band index, key), so equal keys of different bands never meet.
     """
     r, b = rows_per_band, n_bands
     # the plane matrix is a deterministic function of (seed, dim, r, b):
@@ -175,23 +141,29 @@ def rhp_band_keys(
     )
 
 
+def _banded(
+    df: DataFrame, id_col: str, vec_col: str, n_planes: int, bands: int, seed: int
+) -> DataFrame:
+    """(id, vec, band_idx, band_key): one row per band of each vector."""
+    assert n_planes % bands == 0
+    keyed = rhp_band_keys(df, id_col, vec_col, n_planes // bands, bands, seed)
+    return keyed.select(
+        id_col, vec_col, F.posexplode("band_keys").alias("band_idx", "band_key")
+    )
+
+
 def rhp_bucket_pairs(
     df: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int = 64,
     n_planes: int = 32,
     bands: int = 4,
     seed: int = 42,
     block_size_limit: int = 10_000,
 ) -> DataFrame:
     """Candidate pairs whose sign signatures agree on >= one band of bits."""
-    assert n_planes % bands == 0
-    r = n_planes // bands
-    sig = rhp_signatures(df, id_col, vec_col, dim, n_planes, seed)
-    banded = sig.select(
-        F.col(id_col).alias("clip_id"),
-        F.posexplode(_band_array(bands, r)).alias("band_idx", "band_key"),
+    banded = _banded(df, id_col, vec_col, n_planes, bands, seed).select(
+        F.col(id_col).alias("clip_id"), "band_idx", "band_key"
     )
     return block_self_join_pairs(
         banded, key_cols=["band_idx", "band_key"], block_size_limit=block_size_limit
@@ -204,27 +176,23 @@ def lsh_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 10,
-    dim: int = 64,
     n_planes: int = 32,
     bands: int = 4,
     seed: int = 42,
     round_dp: int = 4,
 ) -> DataFrame:
     """Approximate top-k: bucket-join candidates, exact cosine re-rank."""
-    assert n_planes % bands == 0
-    r = n_planes // bands
 
-    def _banded(df: DataFrame, role: str) -> DataFrame:
-        sig = rhp_signatures(df, id_col, vec_col, dim, n_planes, seed)
-        band_arr = _band_array(bands, r)
-        return sig.select(
+    def _side(df: DataFrame, role: str) -> DataFrame:
+        return _banded(df, id_col, vec_col, n_planes, bands, seed).select(
             F.col(id_col).alias(f"{role}_id"),
             F.col(vec_col).alias(f"{role}_vec"),
-            F.posexplode(band_arr).alias("band_idx", "band_key"),
+            "band_idx",
+            "band_key",
         )
 
-    qb = _banded(queries, "query")
-    cb = _banded(corpus, "neighbor")
+    qb = _side(queries, "query")
+    cb = _side(corpus, "neighbor")
     cand = (
         qb.join(cb, ["band_idx", "band_key"])
         .filter(F.col("query_id") != F.col("neighbor_id"))

@@ -2,15 +2,16 @@
 
 Reference: utils.py:119-189 — most-complete row wins per cluster, plus
 ``cluster_size`` and member ``record_ids`` metadata (utils.py:152-153).
-Here: one window election (row_number over a deterministic ordering) plus
-a groupBy for metadata — no driver-side loops.
+Here: every per-cluster pick (the canonical row, a field's mode, the most
+detailed value) is one ``min_by`` aggregation over a deterministic order
+key, and the election computes the metadata in the same ``groupBy`` — one
+shuffle, no window, no join-back, no driver-side loops.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 
 def completeness(df: DataFrame, cols: list[str]) -> F.Column:
@@ -25,6 +26,12 @@ def completeness(df: DataFrame, cols: list[str]) -> F.Column:
     return score
 
 
+def _first(value: Column, desc: Column, asc: Column) -> Column:
+    """``value`` of the group's row with the largest numeric ``desc``
+    (NULLs last), ties broken by the smallest ``asc``."""
+    return F.min_by(value, F.struct(desc.isNull(), -desc, asc))
+
+
 def elect_canonical(
     clustered: DataFrame,
     cluster_col: str = "cluster_id",
@@ -34,8 +41,10 @@ def elect_canonical(
 ) -> DataFrame:
     """One representative row per cluster + cluster_size + record_ids.
 
-    Ordering: completeness desc (or ``order_col`` desc), then id asc —
-    deterministic under any parallelism.
+    Ordering: completeness desc (or the numeric ``order_col`` desc, NULLs
+    last), then id asc — deterministic under any parallelism. Output: the
+    cluster column, the winner's other columns plus ``_completeness``,
+    then ``cluster_size`` and ``record_ids``.
     """
     if order_col is not None:
         rank_expr = F.col(order_col)
@@ -45,19 +54,12 @@ def elect_canonical(
         ]
         rank_expr = completeness(clustered, cols)
     ranked = clustered.withColumn("_completeness", rank_expr)
-    w = Window.partitionBy(cluster_col).orderBy(
-        F.desc("_completeness"), F.asc(id_col)
-    )
-    winners = (
-        ranked.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    meta = clustered.groupBy(cluster_col).agg(
+    rest = [c for c in ranked.columns if c != cluster_col]
+    return ranked.groupBy(cluster_col).agg(
+        _first(F.struct(*rest), F.col("_completeness"), F.col(id_col)).alias("_w"),
         F.count(F.lit(1)).alias("cluster_size"),
         F.sort_array(F.collect_list(F.col(id_col))).alias("record_ids"),
-    )
-    return winners.join(meta, cluster_col)
+    ).select(cluster_col, "_w.*", "cluster_size", "record_ids")
 
 
 def field_modes(
@@ -74,18 +76,12 @@ def field_modes(
     """
     out = None
     for c in cols:
-        counted = (
+        mode = (
             clustered.filter(F.col(c).isNotNull() & (F.length(F.col(c).cast("string")) > 0))
             .groupBy(cluster_col, c)
             .agg(F.count(F.lit(1)).alias("_n"))
-        )
-        w = Window.partitionBy(cluster_col).orderBy(
-            F.desc("_n"), F.asc(c)
-        )
-        mode = (
-            counted.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(cluster_col, F.col(c).alias(f"mode_{c}"))
+            .groupBy(cluster_col)
+            .agg(_first(F.col(c), F.col("_n"), F.col(c)).alias(f"mode_{c}"))
         )
         out = mode if out is None else out.join(mode, cluster_col, "outer")
     return out
@@ -99,17 +95,15 @@ def most_detailed(
 ) -> DataFrame:
     """(cluster_id, detailed_<col>): the cluster's most 'detailed' value —
     default detail metric = comma count then length then value asc
-    (reference utils.py:177-185 picks the most-detailed address)."""
+    (reference utils.py:177-185 picks the most-detailed address). A custom
+    ``detail`` must be numeric."""
     d = detail if detail is not None else (
         F.size(F.split(F.col(col), ",")) * 1000 + F.length(F.col(col))
     )
-    w = Window.partitionBy(cluster_col).orderBy(F.desc("_d"), F.asc(col))
     return (
         clustered.filter(F.col(col).isNotNull())
-        .withColumn("_d", d)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(cluster_col, F.col(col).alias(f"detailed_{col}"))
+        .groupBy(cluster_col)
+        .agg(_first(F.col(col), d, F.col(col)).alias(f"detailed_{col}"))
     )
 
 

@@ -4,9 +4,10 @@ Replaces the reference's driver-side ``networkx.connected_components``
 (utils.py:43-116, CC at :69) with the distributed union-find-semantics
 algorithm of Kiveris et al., "Connected Components in MapReduce and
 Beyond" (SOCC'14) — O(log^2 n) rounds on any graph, each round a pair of
-groupBy/join plans. Every iteration is ``localCheckpoint``-ed to truncate
-lineage (SURVEY.md §7 hard part 1); convergence is detected by an
-order-insensitive (count, hash-sum) signature of the edge set.
+groupBy/join plans. Every round is materialized with ``sources.io.stage``
+to truncate lineage (SURVEY.md §7 hard part 1); convergence is detected
+by an order-insensitive (count, xor-hash) signature of the edge set,
+observed by the same action that materializes the round.
 
 IDs are compared with their natural ordering (works for string clip_ids
 and numeric ids alike); the final cluster_id is the component's minimum
@@ -59,9 +60,12 @@ def _signature_aggs() -> list[Column]:
     ]
 
 
-def _signature(e: DataFrame) -> tuple[int, int]:
-    row = e.agg(*_signature_aggs()).first()
-    return int(row["n"]), int(row["h"])
+def _staged(df: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
+    """Stage ``df`` and return it with its edge-set signature, observed by
+    the materializing action itself rather than a second aggregate job."""
+    obs = Observation()
+    out = stage(df.observe(obs, *_signature_aggs()))
+    return out, (int(obs.get["n"]), int(obs.get["h"]))
 
 
 def _union_find_labels(e: DataFrame, node_id: str) -> DataFrame:
@@ -116,47 +120,27 @@ def connected_components(
     id2: str = "id2",
     node_id: str = "clip_id",
     max_iterations: int = 50,
-    check_every: int = 2,
     small_graph_edges: int = 2_000_000,
 ) -> DataFrame:
     """(node, cluster_id) for every node; cluster_id = min member id.
 
     ``edges``: (id1, id2) undirected; ``nodes``: optional full node table so
     unmatched records become singleton clusters (reference utils.py:106-111).
-
-    ``check_every``: convergence (the order-insensitive edge-set signature)
-    is evaluated every N large-star/small-star rounds, not every round —
-    each check is a driver-side action barrier, and on typical graphs the
-    algorithm converges in 3-5 rounds, so checking per-round spends more
-    wall on job scheduling than the occasional extra (cheap, already-star)
-    round costs. The rounds between checks chain as lazy localCheckpoints
-    inside ONE job.
     """
-    # the initial signature is observed by the materializing action itself,
-    # not by a second aggregate job over the staged edges
-    observed = Observation()
-    e = stage(
+    e, sig = _staged(
         edges.select(F.col(id1).alias("u"), F.col(id2).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .observe(observed, *_signature_aggs())
     )
-    prev = int(observed.get["n"]), int(observed.get["h"])
 
-    if 0 < prev[0] <= small_graph_edges:
+    if 0 < sig[0] <= small_graph_edges:
         labels = _union_find_labels(e, node_id)
     else:
-        rounds = 0
-        while rounds < max_iterations and prev[0] > 0:
-            # lazy checkpoints: the signature aggregation below is the
-            # single action that materializes the whole batch of rounds
-            for _ in range(min(check_every, max_iterations - rounds)):
-                e = _small_star(_large_star(e)).localCheckpoint(eager=False)
-                rounds += 1
-            sig = _signature(e)
-            if sig == prev:
+        for _ in range(max_iterations):
+            e, nxt = _staged(_small_star(_large_star(e)))
+            if nxt == sig:
                 break
-            prev = sig
+            sig = nxt
 
         # at fixpoint every component is a star to its min; label from
         # symmetric min

@@ -7,7 +7,7 @@ Stage graph (the Spark re-expression of the reference's template method
        signatures ──LSH bands + exact keys──▶ candidate_pairs [checkpoint]
        candidate_pairs ──Jaccard/Hamming verify──▶ edges
        edges ──large-star/small-star CC──▶ clusters          [checkpoint]
-       clusters ──window election──▶ canonical
+       clusters ──one-aggregation election──▶ canonical
        every stage ──▶ lineage + metrics appends
 
 ``bytes`` is projected away after the signature stage — binary audio is
@@ -289,34 +289,15 @@ class DedupPipeline:
             resume=resume,
         )
 
-        def _cluster() -> DataFrame:
-            cl = connected_components(
-                edges,
-                nodes=sig.select("clip_id"),
-                max_iterations=cfg.cc_max_iterations,
-            )
-            if cfg.split_oversized:
-                if cfg.split_method == "louvain":
-                    from entity_deduplication_spark.operators.louvain import (
-                        louvain_split_oversized,
-                    )
-
-                    cl = louvain_split_oversized(cl, edges, cfg.max_cluster_size)
-                else:
-                    from entity_deduplication_spark.operators.split import (
-                        split_oversized_clusters,
-                    )
-
-                    cl = split_oversized_clusters(cl, edges, cfg.max_cluster_size)
-            return cl
-
-        clusters = self.ckpt.get_or_compute("clusters", _cluster, resume=resume)
+        clusters = self.ckpt.get_or_compute(
+            "clusters",
+            lambda: connected_components(edges, nodes=sig.select("clip_id")),
+            resume=resume,
+        )
         clustered = clusters.join(
             sig.select("clip_id", "transcript_norm", "n_words"), "clip_id"
         )
-        canonical = elect_canonical(
-            clustered, order_col="n_words"
-        )
+        canonical = elect_canonical(clustered, order_col="n_words")
         metrics = dedup_metrics(clusters)
         self.ckpt.write_metrics("final", metrics)
         return DedupResult(sig, cand, edges, clusters, canonical, metrics)

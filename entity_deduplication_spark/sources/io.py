@@ -26,13 +26,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def write_table(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
 def stage(df: DataFrame) -> DataFrame:
     """Run ``df`` once and return a DataFrame that reads its rows back.
 
@@ -80,10 +73,6 @@ def spread_partitions(df: DataFrame, key: str | None = None) -> DataFrame:
     return df.repartition(target, key) if key else df.repartition(target)
 
 
-def read_table(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 class CheckpointManager:
     """Stage-checkpoint tables under a base dir, with lineage + metrics."""
 
@@ -104,15 +93,13 @@ class CheckpointManager:
         return os.path.exists(os.path.join(p, "_SUCCESS"))
 
     def read(self, name: str) -> DataFrame:
-        return read_table(self.spark, self._path(name))
+        return self.spark.read.parquet(self._path(name))
 
     def get_or_compute(
         self,
         name: str,
         compute: Callable[[], DataFrame],
         resume: bool = True,
-        partition_by: list[str] | None = None,
-        lineage: bool = True,
     ) -> DataFrame:
         """Read stage table if checkpointed, else compute + write it.
 
@@ -126,11 +113,9 @@ class CheckpointManager:
             return stage(compute())
         if resume and self.exists(name):
             return self.read(name)
-        df = compute()
-        write_table(df, self._path(name), partition_by)
+        compute().write.mode("overwrite").parquet(self._path(name))
         out = self.read(name)
-        if lineage:
-            self._write_lineage(name, out)
+        self._write_lineage(name, out)
         return out
 
     def _write_lineage(self, stage: str, df: DataFrame) -> None:

@@ -102,3 +102,45 @@ def test_cc_star_rounds_match_fast_path(spark):
         for r in connected_components(e, nodes=n, small_graph_edges=0).collect()
     }
     assert fast == stars == _oracle(edges, nodes)
+
+
+def test_cc_long_chain_converges_on_star_path(spark):
+    """F5 on the large-star/small-star path itself (small_graph_edges=0):
+    the 200-node chain ends in one component labelled by its minimum."""
+    nodes = [f"n{i:04d}" for i in range(200)]
+    edges = [(nodes[i], nodes[i + 1]) for i in range(199)]
+    e = spark.createDataFrame(edges, ["id1", "id2"])
+    n = spark.createDataFrame([(x,) for x in nodes], ["clip_id"])
+    got = connected_components(e, nodes=n, small_graph_edges=0).collect()
+    assert len(got) == 200
+    assert {r["cluster_id"] for r in got} == {"n0000"}
+
+
+def test_cc_star_rounds_are_staged(spark, monkeypatch):
+    """Every star round is materialized by sources.io.stage, which on a
+    local master is an eager localCheckpoint; no round is left lazy."""
+    random.seed(29)
+    nodes = [f"s{i:03d}" for i in range(60)]
+    edges = [(random.choice(nodes), random.choice(nodes)) for _ in range(50)]
+    edges = [(a, b) for a, b in edges if a != b]
+    e = spark.createDataFrame(edges, ["id1", "id2"])
+    n = spark.createDataFrame([(x,) for x in nodes], ["clip_id"])
+
+    eager_flags = []
+    cls = type(e)
+    local_checkpoint = cls.localCheckpoint
+
+    def spy(self, eager=True, *args, **kwargs):
+        eager_flags.append(eager)
+        return local_checkpoint(self, eager, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
+    got = {
+        r["clip_id"]: r["cluster_id"]
+        for r in connected_components(e, nodes=n, small_graph_edges=0).collect()
+    }
+    # the initial edge stage plus at least one changing and one
+    # confirming round
+    assert len(eager_flags) >= 3
+    assert all(eager_flags)
+    assert got == _oracle(edges, nodes)

@@ -95,14 +95,14 @@ def test_embedding_cosine_pairs(spark, vectors):
 
 def test_lsh_topk_recovers_near_dups(spark, vectors):
     q = vectors.filter(F.col("vec_id") < 2)
-    got = lsh_topk(vectors, q, k=3, dim=16, n_planes=16, bands=8)
+    got = lsh_topk(vectors, q, k=3, n_planes=16, bands=8)
     top = {r["query_id"]: r["neighbor_id"] for r in got.collect() if r["rank"] == 1}
     assert top[0] == 20 and top[1] == 21
 
 
 def test_rhp_bucket_pairs_contains_near_dups(spark, vectors):
     got = {(r["id1"], r["id2"]) for r in
-           rhp_bucket_pairs(vectors, dim=16, n_planes=16, bands=8).collect()}
+           rhp_bucket_pairs(vectors, n_planes=16, bands=8).collect()}
     assert (0, 20) in got and (1, 21) in got
 
 
