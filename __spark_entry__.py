@@ -675,8 +675,9 @@ def q_mlp_pair_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     from entity_deduplication_spark.sources.io import stage
 
     # one materialization for the two consumers (driver-side fit +
-    # distributed scoring)
-    feat = stage(pair_features(feat, text1="text_1", text2="text_2"))
+    # distributed scoring); they read only features and jaccard
+    feat = pair_features(feat, text1="text_1", text2="text_2")
+    feat = stage(feat.drop("text_1", "text_2"))
     labeled = feat.withColumn("label", (F.col("jaccard") >= 0.5).cast("double"))
     params = train_mlp_scorer(labeled)
     return score_with_mlp(feat, params).select("id1", "id2", "mlp_score")
@@ -728,8 +729,9 @@ def q_ml_pair_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     from entity_deduplication_spark.sources.io import stage
 
     # one materialization for the two consumers (driver-side fit +
-    # distributed scoring)
-    feat = stage(pair_features(feat, text1="text_1", text2="text_2"))
+    # distributed scoring); they read only features and jaccard
+    feat = pair_features(feat, text1="text_1", text2="text_2")
+    feat = stage(feat.drop("text_1", "text_2"))
     labeled = feat.withColumn(
         "label", (F.col("jaccard") >= 0.5).cast("double")
     )

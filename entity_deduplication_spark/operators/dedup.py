@@ -54,8 +54,9 @@ def exact_dedup(df: DataFrame, id_col: str, key: Column) -> DataFrame:
     partition expression). For wide keys (whole documents) pre-digest so
     the shuffle carries 32 bytes, not the text:
     ``exact_dedup(df.withColumn("_k", F.md5(key)), id, F.col("_k"))`` —
-    the flagship pipeline does exactly this (bytes_md5 / transcript_norm
-    chain edges in plans.pipeline.exact_edges).
+    the flagship pipeline does exactly this (its signature stage keeps
+    ``bytes_md5`` / ``transcript_md5`` digests, which
+    plans.pipeline.exact_edges chains).
     """
     w = Window.partitionBy(key)
     return df.select(
@@ -176,9 +177,14 @@ def minhash_lsh_dedup(
         F.col(id_col).alias("clip_id"),
         word_shingles(F.col(text_col), cfg.shingle_k).alias("shingles"),
     )
-    sig = sig.withColumn(
-        "minhash", minhash_udf(cfg.minhash_k, cfg.minhash_seed)(F.col("shingles"))
-    ).withColumn("bands", band_keys(F.col("minhash"), cfg.lsh_bands, cfg.lsh_rows))
+    # a Python UDF cannot sit inside band_keys' lambda, so the MinHash
+    # array is a column one projection down; it is not staged
+    mh = minhash_udf(cfg.minhash_k, cfg.minhash_seed)(F.col("shingles"))
+    sig = sig.withColumn("_mh", mh).select(
+        "clip_id",
+        "shingles",
+        band_keys(F.col("_mh"), cfg.lsh_bands, cfg.lsh_rows).alias("bands"),
+    )
     # sig feeds the banding branch, two feature joins, and the CC node table
     sig = stage(sig)
     feat = attach_pair_features(lsh_band_pairs(sig, cfg), sig, ["shingles"])
@@ -202,8 +208,8 @@ def simhash_pairs(
     # parallelizes — see minhash_lsh_dedup
     sig = spread_partitions(df.select(F.col(id_col), F.col(text_col)), key=id_col).select(
         F.col(id_col).alias("clip_id"),
-        word_shingles(F.col(text_col), cfg.shingle_k).alias("shingles"),
-    ).withColumn("simhash", simhash_udf(F.col("shingles")))
+        simhash_udf(word_shingles(F.col(text_col), cfg.shingle_k)).alias("simhash"),
+    )
     sig = stage(sig)
     feat = attach_pair_features(simhash_block_pairs(sig, cfg), sig, ["simhash"])
     out = feat.withColumn(

@@ -130,31 +130,21 @@ def verified_edges(
     """candidates -> (id1, id2, score) edges above match_threshold.
 
     Early exact-drop: a candidate pair whose bytes digest OR normalized
-    transcript match exactly is already connected by the O(n) chain edges
+    transcript digest match is already connected by the O(n) chain edges
     (plans.pipeline.exact_edges), so it never needs the wide feature join
-    — only the 32-byte digests are attached to decide this. On dup-heavy
-    corpora this removes a large fraction of pairs BEFORE the join that
-    ships shingle/audio arrays, cutting the verify shuffle accordingly.
-    The resulting cluster assignments are identical; only redundant edge
-    rows disappear.
+    — only the two 32-char digests are attached to decide this (a NULL
+    digest is no evidence). On dup-heavy corpora this removes a large
+    fraction of pairs BEFORE the join that ships shingle/audio arrays,
+    cutting the verify shuffle accordingly. The resulting cluster
+    assignments are identical; only redundant edge rows disappear.
     """
-    keys = signatures.select(
-        F.col("clip_id"),
-        F.col("bytes_md5"),
-        F.md5(F.col("transcript_norm")).alias("tn_md5"),
-        (F.length("transcript_norm") > 0).alias("tn_ok"),
-    )
     chained = F.coalesce(
         (F.col("bytes_md5_1") == F.col("bytes_md5_2"))
-        | (
-            F.col("tn_md5_1").eqNullSafe(F.col("tn_md5_2"))
-            & F.col("tn_ok_1")
-            & F.col("tn_ok_2")
-        ),
+        | (F.col("transcript_md5_1") == F.col("transcript_md5_2")),
         F.lit(False),
     )
     pairs = (
-        attach_pair_features(pairs, keys, ["bytes_md5", "tn_md5", "tn_ok"])
+        attach_pair_features(pairs, signatures, ["bytes_md5", "transcript_md5"])
         .filter(~chained)
         .select("id1", "id2")
     )

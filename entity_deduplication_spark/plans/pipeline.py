@@ -11,8 +11,10 @@ Stage graph (the Spark re-expression of the reference's template method
        every stage ──▶ lineage + metrics appends
 
 ``bytes`` is projected away after the signature stage — binary audio is
-never shuffled. Exact-duplicate floods are captured by chain edges on
-exact keys (O(n) not O(n^2)), LSH blocks are skew-salted, and all stages
+never shuffled, and the signature table keeps only the columns later
+stages read (band keys, not the MinHash arrays they come from).
+Exact-duplicate floods are captured by chain edges on the exact-key
+digests (O(n) not O(n^2)), LSH blocks are skew-salted, and all stages
 are resumable via CheckpointManager.
 """
 
@@ -39,11 +41,17 @@ from entity_deduplication_spark.sources.io import CheckpointManager
 def build_signatures(clips: DataFrame, cfg: DedupConfig) -> DataFrame:
     """clips -> signature table; the only stage that touches ``bytes``.
 
-    Columns: clip_id, transcript_norm, bytes_md5, shingles, audio_shingles,
-    minhash, simhash, bands, audio_bands, n_words.
+    Columns: clip_id, transcript_norm, bytes_md5, transcript_md5, shingles,
+    audio_shingles, simhash, bands, audio_bands, n_words, fps.
+
+    It keeps only what later stages read: the MinHash arrays only derive
+    ``bands``/``audio_bands``. Both exact-key digests are NULL for an empty
+    key — "both clips are empty" is not duplicate evidence (the pandas
+    oracle skips empty keys too) — and every consumer reads NULL as none.
     """
     from entity_deduplication_spark.audio.decode import audio_signature_udf
     from entity_deduplication_spark.functions.hashing import text_signature_udf
+    from entity_deduplication_spark.operators.suffix import fingerprints_udf
 
     tsig = text_signature_udf(cfg.minhash_k, cfg.minhash_seed)
     asig = audio_signature_udf(
@@ -54,14 +62,10 @@ def build_signatures(clips: DataFrame, cfg: DedupConfig) -> DataFrame:
         cfg.minhash_k,
         cfg.minhash_seed,
     )
+    no_bands = F.array().cast("array<bigint>")
     sig = clips.select(
         "clip_id",
         normalize_text(F.col("transcript")).alias("transcript_norm"),
-        # empty audio gets a NULL digest: "both clips have zero bytes" is
-        # not duplicate evidence (mirrors the empty-transcript treatment
-        # and the pandas oracle's empty-key skip), and every downstream
-        # consumer (exact chain edges, verify's early-exact-drop,
-        # null-safe equality evidence) already treats NULL as no-evidence
         F.when(F.length(F.col("bytes")) > 0, F.md5(F.col("bytes"))).alias(
             "bytes_md5"
         ),
@@ -72,33 +76,29 @@ def build_signatures(clips: DataFrame, cfg: DedupConfig) -> DataFrame:
         "clip_id",
         "transcript_norm",
         "bytes_md5",
+        F.when(
+            F.length("transcript_norm") > 0, F.md5(F.col("transcript_norm"))
+        ).alias("transcript_md5"),
         "shingles",
         F.col("_a.audio_shingles").alias("audio_shingles"),
-        F.col("_a.audio_minhash").alias("audio_minhash"),
-        F.col("_t.minhash").alias("minhash"),
         F.col("_t.simhash").alias("simhash"),
-    )
-    sig = sig.withColumn(
-        "bands",
         F.when(
             F.size("shingles") > 0,
-            band_keys(F.col("minhash"), cfg.lsh_bands, cfg.lsh_rows),
-        ).otherwise(F.array().cast("array<bigint>")),
-    )
-    sig = sig.withColumn(
-        "audio_bands",
+            band_keys(F.col("_t.minhash"), cfg.lsh_bands, cfg.lsh_rows),
+        )
+        .otherwise(no_bands)
+        .alias("bands"),
         F.when(
-            F.size("audio_shingles") >= cfg.min_audio_shingles,
-            band_keys(F.col("audio_minhash"), cfg.lsh_bands, cfg.lsh_rows),
-        ).otherwise(F.array().cast("array<bigint>")),
+            F.size("_a.audio_shingles") >= cfg.min_audio_shingles,
+            band_keys(F.col("_a.audio_minhash"), cfg.lsh_bands, cfg.lsh_rows),
+        )
+        .otherwise(no_bands)
+        .alias("audio_bands"),
+        F.size(F.split(F.col("transcript_norm"), " ")).alias("n_words"),
     )
-    sig = sig.withColumn("n_words", F.size(F.split(F.col("transcript_norm"), " ")))
     # winnowed substring fingerprints (operators.suffix): a 4th band family
     # in the unified blocking stage; complete for runs >= min_run_chars
-    from entity_deduplication_spark.operators.suffix import fingerprints_udf
-
-    sig = sig.withColumn("fps", fingerprints_udf(cfg)(F.col("transcript_norm")))
-    return sig
+    return sig.withColumn("fps", fingerprints_udf(cfg)(F.col("transcript_norm")))
 
 
 def unified_band_table(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -208,19 +208,15 @@ def candidate_pairs(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
 
 
 def exact_edges(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Chain edges over exact-equality keys (bytes digest, normalized
-    transcript) — verification-free, O(n) per block (B1/B6 analogues)."""
-    by_bytes = chain_edges_within_block(
-        signatures.select("clip_id", "bytes_md5").filter(
-            F.col("bytes_md5").isNotNull()
-        ),
-        key_cols=["bytes_md5"],
-    )
-    by_text = chain_edges_within_block(
-        signatures.select("clip_id", "transcript_norm").filter(
-            F.length("transcript_norm") > 0
-        ),
-        key_cols=["transcript_norm"],
+    """Chain edges over the exact-key digests (bytes, normalized
+    transcript) — verification-free, O(n) per block (B1/B6 analogues).
+    A NULL digest is no evidence (see ``build_signatures``)."""
+    by_bytes, by_text = (
+        chain_edges_within_block(
+            signatures.select("clip_id", key).filter(F.col(key).isNotNull()),
+            key_cols=[key],
+        )
+        for key in ("bytes_md5", "transcript_md5")
     )
     return (
         by_bytes.unionByName(by_text)

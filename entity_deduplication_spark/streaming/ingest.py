@@ -4,16 +4,21 @@ stage checkpoints, and this module adds incremental signature ingestion
 on top).
 
 Pattern: ``readStream`` over a clips directory -> the same signature
-expressions as the batch pipeline -> ``foreachBatch`` appends to the
-signatures table; a periodic batch job re-runs blocking/CC over the
+expressions as the batch pipeline -> Spark's parquet file sink appends to
+the signatures table; a periodic batch job re-runs blocking/CC over the
 accumulated signatures (re-clustering is a global operation and stays
 batch — LSH blocking is not incrementally maintainable without keeping
 per-band state stores, which batch recompute beats at 10^12 scale).
+
+Replay safety: the file sink records each committed batch in the output's
+``_spark_metadata`` log, so a batch replayed after a crash between its
+write and its checkpoint commit is skipped, not appended twice. Readers
+of the output directory see only the files that log lists.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
@@ -44,8 +49,8 @@ def stream_signatures(
 
     ``available_now=True`` drains the current backlog and stops (used in
     tests); in production leave it False for a continuous micro-batch
-    query. Output is an append-only signatures parquet/Iceberg table the
-    batch dedup job reads.
+    query. Output is an append-only signatures parquet table the batch
+    dedup job reads.
     """
     cfg = cfg or DedupConfig()
     stream = (
@@ -53,13 +58,11 @@ def stream_signatures(
         .option("maxFilesPerTrigger", 8)
         .parquet(input_dir)
     )
-
-    def _per_batch(batch: DataFrame, epoch_id: int) -> None:
-        sigs = build_signatures(batch, cfg)
-        sigs.write.mode("append").parquet(output_dir)
-
-    writer = stream.writeStream.foreachBatch(_per_batch).option(
-        "checkpointLocation", checkpoint_dir
+    writer = (
+        build_signatures(stream, cfg)
+        .writeStream.format("parquet")
+        .option("path", output_dir)
+        .option("checkpointLocation", checkpoint_dir)
     )
     if available_now:
         writer = writer.trigger(availableNow=True)

@@ -137,9 +137,9 @@ def test_quality_functions(spark):
     assert lang[0]["lang"] == "en" and lang[1]["lang"] == "es"
 
 
-def test_streaming_signature_ingestion(spark, tmp_ckpt):
+def _stream_dirs(tmp_ckpt):
+    """Fresh (in, out, ck) dirs; ``in`` holds 60 clips in two files."""
     from entity_deduplication_spark.datagen import generate_clips
-    from entity_deduplication_spark.streaming.ingest import stream_signatures
 
     base = os.path.join(os.path.dirname(tmp_ckpt), "stream")
     shutil.rmtree(base, ignore_errors=True)
@@ -148,12 +148,40 @@ def test_streaming_signature_ingestion(spark, tmp_ckpt):
     clips, _ = generate_clips(60, seed=31)
     clips.iloc[:30].to_parquet(os.path.join(in_dir, "part1.parquet"), index=False)
     clips.iloc[30:].to_parquet(os.path.join(in_dir, "part2.parquet"), index=False)
+    return base, in_dir, out_dir, ck
 
+
+def test_streaming_signature_ingestion(spark, tmp_ckpt):
+    from entity_deduplication_spark.config import DedupConfig
+    from entity_deduplication_spark.plans.pipeline import build_signatures
+    from entity_deduplication_spark.streaming.ingest import stream_signatures
+
+    base, in_dir, out_dir, ck = _stream_dirs(tmp_ckpt)
     q = stream_signatures(spark, in_dir, out_dir, ck)
     q.awaitTermination(120)
     sigs = spark.read.parquet(out_dir)
     assert sigs.count() == 60
-    assert {"clip_id", "minhash", "simhash", "bands", "fps"} <= set(sigs.columns)
+    # the batch signature contract (pinned in tests/test_pipeline.py)
+    batch = build_signatures(spark.read.parquet(in_dir), DedupConfig())
+    assert sigs.columns == batch.columns
+    shutil.rmtree(base, ignore_errors=True)
+
+
+def test_streaming_replay_after_lost_commit_adds_no_rows(spark, tmp_ckpt):
+    """A crash between a batch's write and its commit replays the batch on
+    restart; the replay must not append the batch's rows a second time."""
+    from entity_deduplication_spark.streaming.ingest import stream_signatures
+
+    base, in_dir, out_dir, ck = _stream_dirs(tmp_ckpt)
+    stream_signatures(spark, in_dir, out_dir, ck).awaitTermination(120)
+    commits = os.path.join(ck, "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    for name in (str(last), f".{last}.crc"):
+        path = os.path.join(commits, name)
+        if os.path.exists(path):
+            os.remove(path)
+    stream_signatures(spark, in_dir, out_dir, ck).awaitTermination(120)
+    assert spark.read.parquet(out_dir).count() == 60
     shutil.rmtree(base, ignore_errors=True)
 
 

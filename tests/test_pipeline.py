@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from entity_deduplication_spark.config import DedupConfig
-from entity_deduplication_spark.plans.pipeline import DedupPipeline
+from entity_deduplication_spark.plans.pipeline import DedupPipeline, build_signatures
 
 
 def _pair_set(df, cluster_col):
@@ -98,3 +98,40 @@ def test_config_threshold_sweep_monotone(spark, clips_1k):
     assert _pair_set(strict.clusters, "cluster_id").count() <= _pair_set(
         loose.clusters, "cluster_id"
     ).count()
+
+
+def test_signature_contract_and_empty_digests(spark):
+    """The signature stage keeps only what later layers read, and an empty
+    key (audio, transcript) yields a NULL digest, never a shared one."""
+    import numpy as np
+
+    from entity_deduplication_spark.audio.wav import encode_wav
+
+    def wav(seed):
+        pcm = np.random.default_rng(seed).uniform(-0.5, 0.5, 1600)
+        return encode_wav(pcm.astype("float32"), 8000)
+
+    rows = [
+        ("full", wav(1), "a clip with words"),
+        ("no_audio", b"", "a clip with words"),
+        ("empty_text", wav(2), ""),
+        ("punct_text", wav(3), "!!! ???"),
+        ("null_text", wav(4), None),
+    ]
+    clips = spark.createDataFrame(
+        rows, "clip_id string, bytes binary, transcript string"
+    )
+    sig = build_signatures(clips, DedupConfig())
+    assert set(sig.columns) == {
+        "clip_id", "transcript_norm", "bytes_md5", "transcript_md5",
+        "shingles", "audio_shingles", "simhash", "bands", "audio_bands",
+        "fps", "n_words",
+    }
+    got = {
+        r["clip_id"]: (r["bytes_md5"], r["transcript_md5"])
+        for r in sig.select("clip_id", "bytes_md5", "transcript_md5").collect()
+    }
+    assert got["full"][0] is not None and got["full"][1] is not None
+    assert got["no_audio"][0] is None and got["no_audio"][1] == got["full"][1]
+    for cid in ("empty_text", "punct_text", "null_text"):
+        assert got[cid][0] is not None and got[cid][1] is None, cid
