@@ -11,6 +11,8 @@ blocking keys are built from.
 
 from __future__ import annotations
 
+import struct
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
@@ -156,13 +158,20 @@ def _shingle_hash(sym: np.ndarray, k: int) -> np.ndarray:
 def _batch_shingles(
     raw: pd.Series, frame_ms: int, hop_ms: int, k: int, levels: int
 ) -> list[np.ndarray]:
-    """bytes batch -> per-clip int64 shingle arrays (empty for NULL),
-    with the frame/FFT stage batched across the whole Arrow batch."""
+    """bytes batch -> per-clip int64 shingle arrays, with the frame/FFT
+    stage batched across the whole Arrow batch.
+
+    A NULL blob and one ``decode_wav`` rejects (empty, truncated, no
+    fmt/data chunk, unsupported format) both give an empty array: no
+    audio evidence, rather than a failed task that aborts the run."""
     live_idx, pcms, srs = [], [], []
     for i, blob in enumerate(raw):
         if blob is None:
             continue
-        pcm, sr = decode_wav(blob)
+        try:
+            pcm, sr = decode_wav(blob)
+        except (ValueError, struct.error):
+            continue
         live_idx.append(i)
         pcms.append(pcm)
         srs.append(sr)

@@ -45,6 +45,10 @@ def elect_canonical(
     last), then id asc — deterministic under any parallelism. Output: the
     cluster column, the winner's other columns plus ``_completeness``,
     then ``cluster_size`` and ``record_ids``.
+
+    Ids must be unique: a cluster that lists an id twice fails the job
+    that runs the election, naming the cluster and the repeat count,
+    instead of over-counting ``cluster_size``.
     """
     if order_col is not None:
         rank_expr = F.col(order_col)
@@ -55,11 +59,22 @@ def elect_canonical(
         rank_expr = completeness(clustered, cols)
     ranked = clustered.withColumn("_completeness", rank_expr)
     rest = [c for c in ranked.columns if c != cluster_col]
+    size = F.col("cluster_size")
+    repeats = size - F.size(F.array_distinct("record_ids"))
+    unique_size = F.when(repeats == 0, size).otherwise(
+        F.raise_error(
+            F.format_string(
+                f"elect_canonical: cluster %s lists %d repeated {id_col} value(s)",
+                F.col(cluster_col),
+                repeats,
+            )
+        )
+    )
     return ranked.groupBy(cluster_col).agg(
         _first(F.struct(*rest), F.col("_completeness"), F.col(id_col)).alias("_w"),
         F.count(F.lit(1)).alias("cluster_size"),
         F.sort_array(F.collect_list(F.col(id_col))).alias("record_ids"),
-    ).select(cluster_col, "_w.*", "cluster_size", "record_ids")
+    ).select(cluster_col, "_w.*", unique_size.alias("cluster_size"), "record_ids")
 
 
 def field_modes(

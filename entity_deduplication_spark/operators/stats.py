@@ -142,16 +142,3 @@ def rand_index(
         ).alias("adjusted_rand"),
     )
 
-
-def partition_lineage(df: DataFrame, stage: str) -> DataFrame:
-    """Per-partition row counts for the lineage table (north_rule)."""
-    return (
-        df.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid")
-        .agg(F.count(F.lit(1)).alias("rows"))
-        .select(
-            F.lit(stage).alias("stage"),
-            F.col("_pid").alias("partition_id"),
-            F.col("rows").cast("long").alias("rows"),
-        )
-    )

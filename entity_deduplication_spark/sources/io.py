@@ -8,9 +8,11 @@ the same layout; the code path is identical either way.
 
 CheckpointManager gives each pipeline stage a durable table so any stage
 is resumable after failure (north_rule): ``get_or_compute`` reads the
-checkpoint if present, else computes, writes, and re-reads (so downstream
-plans hang off the materialized table, truncating lineage like the
-reference never could — it reran from scratch, SURVEY.md §4 last row).
+checkpoint if present, else computes and writes it in one action whose
+own observation counts the stage's rows, then reads the table back with
+the schema it was written with (so downstream plans hang off the
+materialized table, truncating lineage like the reference never could —
+it reran from scratch, SURVEY.md §4 last row).
 
 ``stage`` is the one in-session stage materialization every operator
 uses; ``get_or_compute`` falls back to it without a checkpoint dir.
@@ -22,7 +24,7 @@ import os
 from collections.abc import Callable
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -74,7 +76,9 @@ def spread_partitions(df: DataFrame, key: str | None = None) -> DataFrame:
 
 
 class CheckpointManager:
-    """Stage-checkpoint tables under a base dir, with lineage + metrics."""
+    """Stage-checkpoint tables under a base dir, plus two append-only
+    tables: ``_lineage`` (one ``(stage, rows, run_ts)`` row per stage
+    written) and ``_metrics``."""
 
     def __init__(self, spark: SparkSession, base_dir: str | None):
         self.spark = spark
@@ -86,15 +90,6 @@ class CheckpointManager:
         assert self.base_dir is not None
         return os.path.join(self.base_dir, name)
 
-    def exists(self, name: str) -> bool:
-        if not self.base_dir:
-            return False
-        p = self._path(name)
-        return os.path.exists(os.path.join(p, "_SUCCESS"))
-
-    def read(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(self._path(name))
-
     def get_or_compute(
         self,
         name: str,
@@ -102,6 +97,10 @@ class CheckpointManager:
         resume: bool = True,
     ) -> DataFrame:
         """Read stage table if checkpointed, else compute + write it.
+
+        A fresh stage costs its write's jobs plus one lineage append: the
+        row count is observed by the write itself, and the read-back takes
+        the computed schema instead of inferring it from the files.
 
         Without a checkpoint dir the stage is still materialized with
         :func:`stage` — stage outputs are reused by several downstream
@@ -111,25 +110,29 @@ class CheckpointManager:
         """
         if not self.base_dir:
             return stage(compute())
-        if resume and self.exists(name):
-            return self.read(name)
-        compute().write.mode("overwrite").parquet(self._path(name))
-        out = self.read(name)
-        self._write_lineage(name, out)
-        return out
-
-    def _write_lineage(self, stage: str, df: DataFrame) -> None:
-        from entity_deduplication_spark.operators.stats import partition_lineage
-
-        lin = partition_lineage(df, stage).withColumn(
-            "run_ts", F.current_timestamp()
+        path = self._path(name)
+        if resume and os.path.exists(os.path.join(path, "_SUCCESS")):
+            return self.spark.read.parquet(path)
+        df = compute()
+        obs = Observation()
+        df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+            "overwrite"
+        ).parquet(path)
+        # a one-row range of literals, not createDataFrame: no Python-side
+        # rows to ship, so the append is one small JVM-only job
+        lineage = self.spark.range(1, numPartitions=1).select(
+            F.lit(name).alias("stage"),
+            F.lit(obs.get["rows"]).cast("bigint").alias("rows"),
         )
-        lin.write.mode("append").parquet(os.path.join(self.base_dir, "_lineage"))
+        self._append("_lineage", lineage)
+        return self.spark.read.schema(df.schema).parquet(path)
 
     def write_metrics(self, stage: str, metrics: DataFrame) -> None:
         if not self.base_dir:
             return
-        out = metrics.withColumn("stage", F.lit(stage)).withColumn(
-            "run_ts", F.current_timestamp()
-        )
-        out.write.mode("append").parquet(os.path.join(self.base_dir, "_metrics"))
+        self._append("_metrics", metrics.withColumn("stage", F.lit(stage)))
+
+    def _append(self, table: str, df: DataFrame) -> None:
+        df.withColumn("run_ts", F.current_timestamp()).write.mode(
+            "append"
+        ).parquet(self._path(table))

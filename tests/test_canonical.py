@@ -1,6 +1,8 @@
 """Canonical election and backfill picks: one aggregation per pick, a
 NULL order value loses, ties go to the smallest id or value."""
 
+import pytest
+
 from entity_deduplication_spark.operators.canonical import (
     elect_canonical,
     field_modes,
@@ -59,6 +61,22 @@ def test_elect_canonical_is_one_aggregation(spark):
     plan = _executed_plan(out)
     assert "Window" not in plan
     assert sum("Exchange" in ln for ln in plan.splitlines()) == 1
+
+
+def test_elect_canonical_fails_on_repeated_ids(spark):
+    """A cluster that lists an id twice fails the election's own job and
+    names the cluster and the repeat count; it never over-counts
+    ``cluster_size``."""
+    rows = [
+        ("a", 1, 1), ("b", 1, 2), ("a", 1, 1), ("a", 1, 3),
+        ("c", 2, 1), ("d", 2, 1),
+    ]
+    clustered = spark.createDataFrame(
+        rows, "clip_id string, cluster_id int, score int"
+    )
+    out = elect_canonical(clustered, order_col="score")
+    with pytest.raises(Exception, match=r"cluster 1 lists 2 repeated clip_id"):
+        out.collect()
 
 
 def test_field_modes_and_most_detailed_ties_go_to_smallest_value(spark):

@@ -2,18 +2,35 @@
 
 import os
 import shutil
+import struct
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from entity_deduplication_spark.audio.wav import encode_wav
 from entity_deduplication_spark.config import DedupConfig
 from entity_deduplication_spark.plans.pipeline import DedupPipeline, build_signatures
+from entity_deduplication_spark.sources.io import CheckpointManager
 
 
 def _pair_set(df, cluster_col):
     a = df.select(F.col("clip_id").alias("id1"), F.col(cluster_col).alias("c"))
     b = df.select(F.col("clip_id").alias("id2"), F.col(cluster_col).alias("c"))
     return a.join(b, "c").filter("id1 < id2").select("id1", "id2")
+
+
+def _wav(seed):
+    pcm = np.random.default_rng(seed).uniform(-0.5, 0.5, 1600)
+    return encode_wav(pcm.astype("float32"), 8000)
+
+
+def _last_job_id(spark) -> int:
+    """Id of the newest job in the status store (ids count up from 0)."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)
+    return max((jobs.apply(i).jobId() for i in range(jobs.size())), default=-1)
 
 
 @pytest.fixture(scope="module")
@@ -103,20 +120,12 @@ def test_config_threshold_sweep_monotone(spark, clips_1k):
 def test_signature_contract_and_empty_digests(spark):
     """The signature stage keeps only what later layers read, and an empty
     key (audio, transcript) yields a NULL digest, never a shared one."""
-    import numpy as np
-
-    from entity_deduplication_spark.audio.wav import encode_wav
-
-    def wav(seed):
-        pcm = np.random.default_rng(seed).uniform(-0.5, 0.5, 1600)
-        return encode_wav(pcm.astype("float32"), 8000)
-
     rows = [
-        ("full", wav(1), "a clip with words"),
+        ("full", _wav(1), "a clip with words"),
         ("no_audio", b"", "a clip with words"),
-        ("empty_text", wav(2), ""),
-        ("punct_text", wav(3), "!!! ???"),
-        ("null_text", wav(4), None),
+        ("empty_text", _wav(2), ""),
+        ("punct_text", _wav(3), "!!! ???"),
+        ("null_text", _wav(4), None),
     ]
     clips = spark.createDataFrame(
         rows, "clip_id string, bytes binary, transcript string"
@@ -135,3 +144,60 @@ def test_signature_contract_and_empty_digests(spark):
     assert got["no_audio"][0] is None and got["no_audio"][1] == got["full"][1]
     for cid in ("empty_text", "punct_text", "null_text"):
         assert got[cid][0] is not None and got[cid][1] is None, cid
+
+
+def test_undecodable_audio_gives_no_audio_evidence(spark):
+    """Empty, truncated and header-only WAV blobs get empty audio shingles
+    and bands, as a NULL blob does, instead of failing the signature
+    stage; byte-identical copies still share a digest."""
+    truncated = _wav(1)[:30]  # cut inside the fmt chunk
+    header_only = b"RIFF" + struct.pack("<I", 4) + b"WAVE"
+    rows = [
+        ("full", _wav(1), "a clip with words"),
+        ("empty", b"", "a clip with words"),
+        ("truncated", truncated, "another clip"),
+        ("truncated_copy", truncated, "a third clip"),
+        ("header_only", header_only, "a fourth clip"),
+    ]
+    clips = spark.createDataFrame(
+        rows, "clip_id string, bytes binary, transcript string"
+    )
+    sig = build_signatures(clips, DedupConfig()).select(
+        "clip_id", "bytes_md5", "audio_shingles", "audio_bands"
+    )
+    got = {r["clip_id"]: r for r in sig.collect()}
+    assert len(got["full"]["audio_shingles"]) > 0
+    for cid in ("empty", "truncated", "truncated_copy", "header_only"):
+        assert got[cid]["audio_shingles"] == [], cid
+        assert got[cid]["audio_bands"] == [], cid
+    assert got["truncated"]["bytes_md5"] is not None
+    assert got["truncated"]["bytes_md5"] == got["truncated_copy"]["bytes_md5"]
+
+
+def test_checkpoint_stage_is_one_write_plus_lineage_row(spark, clips_1k, tmp_ckpt):
+    """A fresh checkpointed stage runs its write's jobs plus one lineage
+    append, and each stage's lineage row holds its table's row count."""
+
+    def agg():
+        return spark.range(0, 20_000).groupBy(
+            (F.col("id") % 97).alias("k")
+        ).agg(F.count(F.lit(1)).alias("n"))
+
+    start = _last_job_id(spark)
+    agg().write.parquet(os.path.join(tmp_ckpt, "plain_write"))
+    written = _last_job_id(spark)
+    out = CheckpointManager(spark, tmp_ckpt).get_or_compute("agg", agg)
+    done = _last_job_id(spark)
+    assert done - written == (written - start) + 1
+    assert out.count() == 97
+
+    clips, _ = clips_1k
+    DedupPipeline(spark, checkpoint_dir=tmp_ckpt).run(clips.limit(200))
+    lineage = spark.read.parquet(os.path.join(tmp_ckpt, "_lineage"))
+    assert lineage.columns == ["stage", "rows", "run_ts"]
+    got = sorted((r["stage"], r["rows"]) for r in lineage.collect())
+    stages = ["agg", "candidate_pairs", "clusters", "edges", "signatures"]
+    assert got == [
+        (name, spark.read.parquet(os.path.join(tmp_ckpt, name)).count())
+        for name in stages
+    ]
