@@ -54,9 +54,9 @@ def exact_dedup(df: DataFrame, id_col: str, key: Column) -> DataFrame:
     partition expression). For wide keys (whole documents) pre-digest so
     the shuffle carries 32 bytes, not the text:
     ``exact_dedup(df.withColumn("_k", F.md5(key)), id, F.col("_k"))`` —
-    the flagship pipeline does exactly this (its signature stage keeps
-    ``bytes_md5`` / ``transcript_md5`` digests, which
-    plans.pipeline.exact_edges chains).
+    the flagship pipeline keys its exact evidence the same way: its
+    signature stage keeps the ``plans.pipeline.EXACT_KEYS`` digests,
+    which ``plans.pipeline.exact_edges`` chains.
     """
     w = Window.partitionBy(key)
     return df.select(

@@ -1,5 +1,8 @@
 """Pairwise verification: join candidates back to signatures and score.
 
+A pure scorer of the pairs it is given; the flagship pipeline gives it
+only candidates no exact key links (``plans.pipeline.candidate_pairs``).
+
 Plays the role of the reference's ``_calculate_match_score`` evidence
 combiner (deterministic_feature.py:1183-1422) and secondary-evidence
 validation (deterministic_feature.py:569-651), recast as one projection
@@ -10,7 +13,7 @@ evidence already decided. The reference's ±0.001 tie-break noise
 deterministic and ties break on (id1, id2).
 
 Column-pruning discipline: candidates join against the *signatures* table
-(digests + shingle arrays + sketches), never the raw ``bytes`` column —
+(shingle arrays + sketches), never the raw ``bytes`` column —
 audio blobs are never shuffled (SURVEY.md §7 hard part 3).
 """
 
@@ -36,10 +39,7 @@ def score_pairs(feat: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Evidence-weighted score per pair -> (id1, id2, <evidence cols>, score).
 
     ``feat`` is a candidate table with ``_SIG_COLS`` attached as ``c_1`` /
-    ``c_2``. Precondition: pairs that share a bytes digest or a non-empty
-    normalized transcript were dropped before (``verified_edges`` does
-    this); exact duplicates get score 1.0 from the chain edges of
-    ``plans.pipeline.exact_edges``, not from here.
+    ``c_2``; every row is scored.
 
     Tiering mirrors the reference's weight table + primary/supporting
     combination with diminishing returns and cap
@@ -129,25 +129,9 @@ def verified_edges(
 ) -> DataFrame:
     """candidates -> (id1, id2, score) edges above match_threshold.
 
-    Early exact-drop: a candidate pair whose bytes digest OR normalized
-    transcript digest match is already connected by the O(n) chain edges
-    (plans.pipeline.exact_edges), so it never needs the wide feature join
-    — only the two 32-char digests are attached to decide this (a NULL
-    digest is no evidence). On dup-heavy corpora this removes a large
-    fraction of pairs BEFORE the join that ships shingle/audio arrays,
-    cutting the verify shuffle accordingly. The resulting cluster
-    assignments are identical; only redundant edge rows disappear.
+    Every pair in ``pairs`` is scored: which pairs need a decision is the
+    caller's (``plans.pipeline.candidate_pairs``) to choose.
     """
-    chained = F.coalesce(
-        (F.col("bytes_md5_1") == F.col("bytes_md5_2"))
-        | (F.col("transcript_md5_1") == F.col("transcript_md5_2")),
-        F.lit(False),
-    )
-    pairs = (
-        attach_pair_features(pairs, signatures, ["bytes_md5", "transcript_md5"])
-        .filter(~chained)
-        .select("id1", "id2")
-    )
     feat = attach_pair_features(pairs, signatures, _SIG_COLS)
     scored = score_pairs(feat, cfg)
     return scored.filter(F.col("score") >= cfg.match_threshold).select(

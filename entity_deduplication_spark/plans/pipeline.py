@@ -4,8 +4,9 @@ Stage graph (the Spark re-expression of the reference's template method
 ``run_entity_resolution``, base.py:119-147):
 
     clips ──select/UDF──▶ signatures            [checkpoint]
-       signatures ──LSH bands + exact keys──▶ candidate_pairs [checkpoint]
+       signatures ──LSH bands − exact-linked──▶ candidate_pairs [checkpoint]
        candidate_pairs ──Jaccard/Hamming verify──▶ edges
+       signatures ──exact-key chains──▶ edges
        edges ──large-star/small-star CC──▶ clusters          [checkpoint]
        clusters ──one-aggregation election──▶ canonical
        every stage ──▶ lineage + metrics appends
@@ -13,9 +14,9 @@ Stage graph (the Spark re-expression of the reference's template method
 ``bytes`` is projected away after the signature stage — binary audio is
 never shuffled, and the signature table keeps only the columns later
 stages read (band keys, not the MinHash arrays they come from).
-Exact-duplicate floods are captured by chain edges on the exact-key
-digests (O(n) not O(n^2)), LSH blocks are skew-salted, and all stages
-are resumable via CheckpointManager.
+Exact-duplicate floods are captured by chain edges on the ``EXACT_KEYS``
+digests (O(n) not O(n^2)), and candidates leave those pairs to them; LSH
+blocks are skew-salted, and all stages are resumable via CheckpointManager.
 """
 
 from __future__ import annotations
@@ -32,10 +33,19 @@ from entity_deduplication_spark.operators.canonical import elect_canonical
 from entity_deduplication_spark.operators.connected_components import (
     connected_components,
 )
-from entity_deduplication_spark.operators.pairs import chain_edges_within_block
+from entity_deduplication_spark.operators.pairs import (
+    attach_pair_features,
+    block_self_join_pairs,
+    chain_edges_within_block,
+)
 from entity_deduplication_spark.operators.stats import dedup_metrics
 from entity_deduplication_spark.operators.verify import verified_edges
-from entity_deduplication_spark.sources.io import CheckpointManager
+from entity_deduplication_spark.sources.io import CheckpointManager, spread_partitions
+
+# exact-key digests: an equal non-NULL one links a pair unverified
+# (exact_edges chains it, candidate_pairs drops it) — the reference's
+# compared_pairs set (deterministic_feature.py:964-969)
+EXACT_KEYS = ("bytes_md5", "transcript_md5")
 
 
 def build_signatures(clips: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -162,8 +172,9 @@ def unified_band_table(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
 
 
 def candidate_pairs(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Candidate pairs from ALL blocking strategies via one unified block
-    table -> one skew-aware self-join.
+    """The pairs verification must decide: candidates from ALL blocking
+    strategies via one unified block table -> one skew-aware self-join,
+    minus every pair an exact key links.
 
     The reference unions per-strategy pair dicts
     (deterministic_feature.py:212-217,242-247); here the *block keys* are
@@ -171,8 +182,6 @@ def candidate_pairs(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     window-count, self-join, and cross-strategy pair dedup run once
     instead of three times (one shuffle chain instead of three).
     """
-    from entity_deduplication_spark.operators.pairs import block_self_join_pairs
-
     unified = unified_band_table(signatures, cfg)
     # on_oversize="chain": saturated band buckets emit O(n) chain
     # candidates instead of all pairs (see DedupConfig.band_bucket_cap) —
@@ -196,7 +205,7 @@ def candidate_pairs(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     # families keep chain-at-cap, which also covers duplicate-flood
     # recovery for the rows a fp-skip drops.
     is_fp = F.col("src") == F.lit(3)
-    return block_self_join_pairs(
+    pairs = block_self_join_pairs(
         unified,
         key_cols=["src", "band_idx", "band_key"],
         id_col="clip_id",
@@ -205,21 +214,28 @@ def candidate_pairs(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
         ),
         on_oversize=F.when(is_fp, F.lit("skip")).otherwise(F.lit("chain")),
     )
+    # greatest skips NULLs: true iff some digest is equal and non-NULL
+    linked = F.greatest(
+        *(F.col(f"{k}_1") == F.col(f"{k}_2") for k in EXACT_KEYS), F.lit(False)
+    )
+    keyed = attach_pair_features(pairs, signatures, list(EXACT_KEYS))
+    return keyed.filter(~linked).select("id1", "id2")
 
 
 def exact_edges(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Chain edges over the exact-key digests (bytes, normalized
-    transcript) — verification-free, O(n) per block (B1/B6 analogues).
-    A NULL digest is no evidence (see ``build_signatures``)."""
-    by_bytes, by_text = (
-        chain_edges_within_block(
-            signatures.select("clip_id", key).filter(F.col(key).isNotNull()),
-            key_cols=[key],
-        )
-        for key in ("bytes_md5", "transcript_md5")
+    """Chain edges over the ``EXACT_KEYS`` digests — verification-free,
+    O(n) per block (B1/B6 analogues) — from one window blocked on
+    ``(kind, digest)``: ``kind`` keeps a bytes digest from chaining with
+    an equal transcript digest. A NULL digest is no evidence (see
+    ``build_signatures``); a pair both keys link comes out once."""
+    kinds = [
+        F.struct(F.lit(k).alias("kind"), F.col(k).alias("digest")) for k in EXACT_KEYS
+    ]
+    keyed = signatures.select("clip_id", F.inline(F.array(*kinds))).filter(
+        F.col("digest").isNotNull()
     )
     return (
-        by_bytes.unionByName(by_text)
+        chain_edges_within_block(keyed, key_cols=["kind", "digest"])
         .dropDuplicates(["id1", "id2"])
         .withColumn("score", F.lit(1.0))
     )
@@ -255,8 +271,6 @@ class DedupPipeline:
         # column when the scan already yields enough partitions: a
         # repartition of the raw clips is a full-table disk round trip
         # (write+read of every audio blob) that the UDF stage doesn't need
-        from entity_deduplication_spark.sources.io import spread_partitions
-
         src = spread_partitions(clips, key="clip_id")
         sig = self.ckpt.get_or_compute(
             "signatures", lambda: build_signatures(src, cfg), resume=resume
@@ -277,8 +291,8 @@ class DedupPipeline:
         cand = self.ckpt.get_or_compute(
             "candidate_pairs", lambda: candidate_pairs(sig, cfg), resume=resume
         )
-        # disjoint sets: verify drops every pair an exact key links
-        verified = verified_edges(cand.select("id1", "id2"), sig, cfg)
+        # disjoint sets: candidates hold no pair an exact key links
+        verified = verified_edges(cand, sig, cfg)
         edges = self.ckpt.get_or_compute(
             "edges",
             lambda: verified.unionByName(exact_edges(sig, cfg)),

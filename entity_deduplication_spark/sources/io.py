@@ -83,8 +83,6 @@ class CheckpointManager:
     def __init__(self, spark: SparkSession, base_dir: str | None):
         self.spark = spark
         self.base_dir = base_dir
-        if base_dir:
-            os.makedirs(base_dir, exist_ok=True)
 
     def _path(self, name: str) -> str:
         assert self.base_dir is not None
@@ -97,6 +95,9 @@ class CheckpointManager:
         resume: bool = True,
     ) -> DataFrame:
         """Read stage table if checkpointed, else compute + write it.
+
+        The ``_SUCCESS`` marker is looked up on the path's own Hadoop
+        FileSystem, so a URI base dir (``hdfs://``, ``s3a://``) resumes too.
 
         A fresh stage costs its write's jobs plus one lineage append: the
         row count is observed by the write itself, and the read-back takes
@@ -111,7 +112,10 @@ class CheckpointManager:
         if not self.base_dir:
             return stage(compute())
         path = self._path(name)
-        if resume and os.path.exists(os.path.join(path, "_SUCCESS")):
+        sc = self.spark.sparkContext
+        done = sc._jvm.org.apache.hadoop.fs.Path(path, "_SUCCESS")
+        fs = done.getFileSystem(sc._jsc.hadoopConfiguration())
+        if resume and fs.exists(done):
             return self.spark.read.parquet(path)
         df = compute()
         obs = Observation()

@@ -43,14 +43,13 @@ def stream_signatures(
     output_dir: str,
     checkpoint_dir: str,
     cfg: DedupConfig | None = None,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Incrementally decode + sign arriving clips parquet files.
 
-    ``available_now=True`` drains the current backlog and stops (used in
-    tests); in production leave it False for a continuous micro-batch
-    query. Output is an append-only signatures parquet table the batch
-    dedup job reads.
+    Each call drains the backlog the checkpoint has not yet seen
+    (``trigger(availableNow=True)``) and stops, so a scheduled re-run
+    ingests only the delta. Output is an append-only signatures parquet
+    table the batch dedup job reads.
     """
     cfg = cfg or DedupConfig()
     stream = (
@@ -58,12 +57,11 @@ def stream_signatures(
         .option("maxFilesPerTrigger", 8)
         .parquet(input_dir)
     )
-    writer = (
+    return (
         build_signatures(stream, cfg)
         .writeStream.format("parquet")
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -10,7 +10,13 @@ from pyspark.sql import functions as F
 
 from entity_deduplication_spark.audio.wav import encode_wav
 from entity_deduplication_spark.config import DedupConfig
-from entity_deduplication_spark.plans.pipeline import DedupPipeline, build_signatures
+from entity_deduplication_spark.operators.pairs import chain_edges_within_block
+from entity_deduplication_spark.plans.pipeline import (
+    DedupPipeline,
+    build_signatures,
+    candidate_pairs,
+    exact_edges,
+)
 from entity_deduplication_spark.sources.io import CheckpointManager
 
 
@@ -23,6 +29,12 @@ def _pair_set(df, cluster_col):
 def _wav(seed):
     pcm = np.random.default_rng(seed).uniform(-0.5, 0.5, 1600)
     return encode_wav(pcm.astype("float32"), 8000)
+
+
+def _sentence(seed, n=30):
+    rng = np.random.default_rng(seed)
+    letters = np.array(list("abcdefghijklmnopqrstuvwxyz"))
+    return " ".join("".join(rng.choice(letters, 6)) for _ in range(n))
 
 
 def _last_job_id(spark) -> int:
@@ -201,3 +213,90 @@ def test_checkpoint_stage_is_one_write_plus_lineage_row(spark, clips_1k, tmp_ckp
         (name, spark.read.parquet(os.path.join(tmp_ckpt, name)).count())
         for name in stages
     ]
+
+
+def test_candidate_pairs_hold_no_exact_linked_pair(spark):
+    """Candidates are only the pairs verification must decide: byte- and
+    transcript-identical copies block together but drop out (exact_edges
+    links them), while a near-duplicate pair stays even though both of
+    its bytes digests are NULL (empty audio is no evidence)."""
+    same_text = _sentence(1)
+    near = _sentence(2).split()
+    rows = [(f"b{i}", _wav(1), _sentence(10 + i)) for i in range(3)]
+    rows += [(f"t{i}", _wav(2 + i), same_text) for i in range(3)]
+    rows += [(f"e{i}", b"", "") for i in range(3)]
+    rows += [
+        ("n0", b"", " ".join(near)),
+        ("n1", b"", " ".join(near[:-1] + ["zzzzzz"])),
+    ]
+    clips = spark.createDataFrame(
+        rows, "clip_id string, bytes binary, transcript string"
+    )
+    cfg = DedupConfig()
+    sig = build_signatures(clips, cfg)
+    keys = {
+        r["clip_id"]: (r["bytes_md5"], r["transcript_md5"])
+        for r in sig.select("clip_id", "bytes_md5", "transcript_md5").collect()
+    }
+    assert keys["b0"][0] == keys["b1"][0] and keys["t0"][1] == keys["t1"][1]
+    assert keys["e0"] == (None, None) and keys["n0"][0] is None
+
+    got = {(r["id1"], r["id2"]) for r in candidate_pairs(sig, cfg).collect()}
+    for a, b in got:
+        for x, y in zip(keys[a], keys[b]):
+            assert x is None or x != y, (a, b)
+    assert ("n0", "n1") in got
+
+    edges = {(r["id1"], r["id2"]) for r in exact_edges(sig, cfg).collect()}
+    assert edges == {("b0", "b1"), ("b1", "b2"), ("t0", "t1"), ("t1", "t2")}
+
+
+def test_exact_edges_chain_both_digests_in_one_window(spark):
+    """A pair both digests link comes out once, NULL digests link nothing,
+    an equal digest of the other kind links nothing, and the edges are the
+    union of the per-digest chains."""
+    rows = [
+        ("a", "k1", "k2"),
+        ("b", "k1", "k2"),
+        ("c", "k1", None),
+        ("d", None, "k3"),
+        ("e", None, "k3"),
+        ("f", None, None),
+        ("g", None, None),
+        ("h", "k4", None),
+        ("i", None, "k4"),
+    ]
+    sig = spark.createDataFrame(
+        rows, "clip_id string, bytes_md5 string, transcript_md5 string"
+    )
+    got = exact_edges(sig, DedupConfig()).collect()
+    pairs = [(r["id1"], r["id2"]) for r in got]
+    assert sorted(pairs) == [("a", "b"), ("b", "c"), ("d", "e")]
+    assert {r["score"] for r in got} == {1.0}
+
+    per_key = set()
+    for key in ("bytes_md5", "transcript_md5"):
+        keyed = sig.select("clip_id", key).filter(F.col(key).isNotNull())
+        chains = chain_edges_within_block(keyed, key_cols=[key]).collect()
+        per_key |= {(r["id1"], r["id2"]) for r in chains}
+    assert set(pairs) == per_key
+
+
+def test_checkpoint_uri_dir_is_reused_on_resume(
+    spark, tmp_ckpt, tmp_path, monkeypatch
+):
+    """A checkpoint dir given as a file:// URI is computed once and read
+    back on the second call, and nothing lands in the working directory."""
+    monkeypatch.chdir(tmp_path)
+    ckpt = CheckpointManager(spark, "file://" + os.path.abspath(tmp_ckpt))
+    calls = []
+
+    def compute():
+        calls.append(1)
+        return spark.range(10)
+
+    first = ckpt.get_or_compute("ids", compute).count()
+    second = ckpt.get_or_compute("ids", compute).count()
+    assert (first, second, len(calls)) == (10, 10, 1)
+    assert os.path.exists(os.path.join(tmp_ckpt, "ids", "_SUCCESS"))
+    assert os.listdir(tmp_path) == []

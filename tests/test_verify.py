@@ -31,10 +31,10 @@ def _arrow_eval_nodes(df) -> int:
 
 
 def test_score_pairs_runs_verifier_only_on_undecided_pairs(spark, sig_300):
-    """Every candidate not linked by an exact key is scored exactly once;
-    ``run_len`` is the run verifier's answer on the two transcripts for
-    pairs the Catalyst evidence left undecided and 0 for decided pairs,
-    and no transcript payload reaches the output."""
+    """Every candidate is scored exactly once; ``run_len`` is the run
+    verifier's answer on the two transcripts for pairs the Catalyst
+    evidence left undecided and 0 for decided pairs, and no transcript
+    payload reaches the output."""
     from entity_deduplication_spark.config import DedupConfig
     from entity_deduplication_spark.operators.pairs import attach_pair_features
     from entity_deduplication_spark.operators.suffix import run_verify_udf
@@ -42,16 +42,9 @@ def test_score_pairs_runs_verifier_only_on_undecided_pairs(spark, sig_300):
     from entity_deduplication_spark.plans.pipeline import candidate_pairs
 
     cfg = DedupConfig()
-    keys = sig_300.select("clip_id", "bytes_md5", "transcript_norm").toPandas()
+    keys = sig_300.select("clip_id", "transcript_norm").toPandas()
     keys = keys.set_index("clip_id")
-    cand = candidate_pairs(sig_300, cfg).select("id1", "id2").toPandas()
-    a = keys.loc[cand["id1"]].reset_index(drop=True)
-    b = keys.loc[cand["id2"]].reset_index(drop=True)
-    chained = (a["bytes_md5"].notna() & (a["bytes_md5"] == b["bytes_md5"])) | (
-        (a["transcript_norm"].str.len() > 0)
-        & (a["transcript_norm"] == b["transcript_norm"])
-    )
-    open_pairs = cand[~chained.to_numpy()].reset_index(drop=True)
+    open_pairs = candidate_pairs(sig_300, cfg).toPandas()
 
     feat = attach_pair_features(
         spark.createDataFrame(open_pairs), sig_300, _SIG_COLS
