@@ -178,7 +178,7 @@ def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
-    return brute_force_topk(emb, queries, "vec_id", "embedding", k=10)
+    return brute_force_topk(emb, queries, k=10)
 
 
 def q_embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -401,7 +401,6 @@ def q_fuzzy_token_ratio_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "p_partkey",
         "p_name",
         F.concat_ws("|", F.col("p_brand"), F.col("p_type")),
-        threshold=85.0,
     )
 
 

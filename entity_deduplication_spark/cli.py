@@ -22,6 +22,8 @@ import json
 import sys
 import time
 
+from entity_deduplication_spark.config import DedupConfig
+
 
 def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     p = argparse.ArgumentParser(prog="entity_deduplication_spark")
@@ -30,9 +32,11 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     p.add_argument("--checkpoint-dir", default=None)
     p.add_argument("--resume", action="store_true",
                    help="reuse existing stage checkpoints")
-    p.add_argument("--match-threshold", type=float, default=0.75)
-    p.add_argument("--jaccard-threshold", type=float, default=0.8)
-    p.add_argument("--min-run-chars", type=int, default=20)
+    p.add_argument("--match-threshold", type=float,
+                   default=DedupConfig.match_threshold)
+    p.add_argument("--jaccard-threshold", type=float,
+                   default=DedupConfig.jaccard_threshold)
+    p.add_argument("--min-run-chars", type=int, default=DedupConfig.min_run_chars)
     p.add_argument("--cores", type=int, default=None,
                    help="local-mode parallelism (ignored under a cluster master)")
     p.add_argument("--report", action="store_true",
@@ -53,7 +57,6 @@ def main(argv: list[str] | None = None) -> int:
 
     from pyspark.sql import SparkSession
 
-    from entity_deduplication_spark.config import DedupConfig
     from entity_deduplication_spark.plans.pipeline import DedupPipeline
     from entity_deduplication_spark.session import get_spark
 

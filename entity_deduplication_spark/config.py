@@ -2,29 +2,33 @@
 
 Mirrors the reference's knobs (match_threshold / block_size_limit;
 reference run.py:82-90, deterministic_feature.py:72-107) recast for the
-MinHash/SimHash/suffix-array pipeline. All hashes are seeded constants —
-the engine is fully deterministic (the reference's score noise at
-deterministic_feature.py:1416-1420 is deliberately dropped).
+MinHash/SimHash/suffix-array pipeline. Only the values some caller sets
+are fields; every other setting is a ``ClassVar`` constant, read as
+``cfg.<name>`` like a field but not accepted by the constructor. All
+hashes are seeded constants — the engine is fully deterministic (the
+reference's score noise at deterministic_feature.py:1416-1420 is
+deliberately dropped).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from typing import ClassVar
 
 
 @dataclass(frozen=True)
 class DedupConfig:
     # --- transcript shingling ---
-    shingle_k: int = 3            # words per shingle
+    shingle_k: ClassVar[int] = 3  # words per shingle
 
     # --- MinHash / LSH ---
-    minhash_k: int = 128          # signature length
-    lsh_bands: int = 16           # b
-    lsh_rows: int = 8             # r ; b*r == minhash_k; S-curve thr ~ (1/b)^(1/r)
-    minhash_seed: int = 42
+    minhash_k: ClassVar[int] = 128  # signature length
+    lsh_bands: ClassVar[int] = 16   # b
+    lsh_rows: ClassVar[int] = 8     # r ; b*r == minhash_k; S-curve thr ~ (1/b)^(1/r)
+    minhash_seed: ClassVar[int] = 42
 
     # --- SimHash ---
-    simhash_hamming_max: int = 3  # near-dup Hamming radius
+    simhash_hamming_max: ClassVar[int] = 3  # near-dup Hamming radius
     # Hamming blocking splits the signature into n_blocks contiguous
     # blocks and bands on every (n_blocks - hamming_max)-subset of them
     # (guaranteed complete for the radius — Manku et al., WWW'07). The
@@ -34,26 +38,27 @@ class DedupConfig:
     # where the minimal 4 blocks give 4 bands of 16-bit keys whose
     # random collisions made candidate volume grow ∝ n²/2¹⁶ (measured
     # 12.6× pair mass on 4× clips at 800k).
-    simhash_n_blocks: int = 6
+    simhash_n_blocks: ClassVar[int] = 6
 
     # --- audio features ---
-    frame_ms: int = 25
-    hop_ms: int = 10
-    audio_shingle_k: int = 4      # frames per audio shingle
-    audio_quant_levels: int = 8
+    frame_ms: ClassVar[int] = 25
+    hop_ms: ClassVar[int] = 10
+    audio_shingle_k: ClassVar[int] = 4  # frames per audio shingle
+    audio_quant_levels: ClassVar[int] = 8
     # degenerate-signature guard: stationary audio collapses to a handful
-    # of distinct shingles, making unrelated clips Jaccard-1.0; signatures
-    # below this set size carry no audio evidence (analogue of the
-    # reference's len>=8 phone / multi-word name guards, P9/B2/B6)
-    min_audio_shingles: int = 4
+    # of distinct shingles, making unrelated clips Jaccard-1.0; the
+    # signature stage empties a set below this size, so it carries no
+    # audio evidence (analogue of the reference's len>=8 phone /
+    # multi-word name guards, P9/B2/B6)
+    min_audio_shingles: ClassVar[int] = 4
 
     # --- suffix-array substring stage ---
     min_run_chars: int = 20       # exact-run length for a candidate
-    winnow_window: int = 8        # winnowing window for fingerprint blocking
+    winnow_window: ClassVar[int] = 8  # winnowing window for fingerprint blocking
 
     # --- verification (reference match_threshold 0.75, run.py:85) ---
     jaccard_threshold: float = 0.8
-    audio_jaccard_threshold: float = 0.6
+    audio_jaccard_threshold: ClassVar[float] = 0.6
     match_threshold: float = 0.75
 
     # --- skew / blocking limits (reference block_size_limit 1000, run.py:40-41) ---
@@ -86,24 +91,7 @@ class DedupConfig:
     # fingerprints, planted substring-run pairs have df≈2 runs, and
     # duplicate FLOODS (identical clips > cap) are still recovered by the
     # minhash families' chain policy, which fires on the same rows.
-    fp_df_cap: int = 16
-
-    weights: dict = field(
-        default_factory=lambda: {
-            # evidence weights, shaped after the reference's feature-weight
-            # table (deterministic_feature.py:80-102) re-targeted to audio:
-            "transcript_jaccard": 0.9,
-            "audio_jaccard": 0.8,
-            "substring_run": 0.8,
-        }
-    )
-
-    def __post_init__(self) -> None:
-        if self.lsh_bands * self.lsh_rows != self.minhash_k:
-            raise ValueError(
-                f"lsh_bands*lsh_rows ({self.lsh_bands}*{self.lsh_rows}) "
-                f"must equal minhash_k ({self.minhash_k})"
-            )
+    fp_df_cap: ClassVar[int] = 16
 
 
-DEFAULT_CONFIG = DedupConfig()
+assert DedupConfig.lsh_bands * DedupConfig.lsh_rows == DedupConfig.minhash_k

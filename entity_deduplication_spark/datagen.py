@@ -76,7 +76,6 @@ def generate_clips(
     n_clips: int,
     seed: int = 42,
     dup_fraction: float = 0.30,
-    with_substring_runs: bool = True,
     id_offset: int = 0,
 ) -> tuple[pd.DataFrame, pd.DataFrame]:
     """Return (clips_df, truth_df).
@@ -138,8 +137,7 @@ def generate_clips(
             truth.append(dict(clip_id=cid, true_cluster_id=cluster))
 
     # substring-run pairs: distinct transcripts sharing a >=20-char run
-    n_run_pairs = max(1, n_clips // 50) if with_substring_runs else 0
-    for _ in range(n_run_pairs):
+    for _ in range(max(1, n_clips // 50)):
         if i + 2 > n_clips:
             break
         shared = _transcript(rng, 6)  # ~ 6 words >= 20 chars

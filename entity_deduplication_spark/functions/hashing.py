@@ -205,10 +205,10 @@ def band_keys(minhash_col: Column, bands: int, rows: int) -> Column:
     )
 
 
-def simhash_hamming_blocks(n_blocks: int, radius: int, bits: int = 64):
+def simhash_hamming_blocks(n_blocks: int, radius: int):
     """Block layout + key subsets for guaranteed Hamming-radius blocking.
 
-    Returns ``(widths, offsets, combos)``: the signature is split into
+    Returns ``(widths, offsets, combos)``: the 64-bit signature is split into
     ``n_blocks`` contiguous blocks (widths as even as possible) and
     ``combos`` enumerates every ``(n_blocks - radius)``-subset of block
     indices. Shared helper so Spark-side banding and pure-Python test
@@ -219,8 +219,7 @@ def simhash_hamming_blocks(n_blocks: int, radius: int, bits: int = 64):
     from itertools import combinations
 
     widths = [
-        bits // n_blocks + (1 if i < bits % n_blocks else 0)
-        for i in range(n_blocks)
+        64 // n_blocks + (1 if i < 64 % n_blocks else 0) for i in range(n_blocks)
     ]
     offsets, off = [], 0
     for w in widths:
@@ -231,11 +230,11 @@ def simhash_hamming_blocks(n_blocks: int, radius: int, bits: int = 64):
 
 
 def simhash_hamming_band_structs(
-    simhash_col: Column, n_blocks: int, radius: int, bits: int = 64
+    simhash_col: Column, n_blocks: int, radius: int
 ) -> list[Column]:
     """Guaranteed-complete Hamming-LSH band keys (block combinations).
 
-    Split the ``bits``-bit signature into ``n_blocks`` contiguous blocks
+    Split the 64-bit signature into ``n_blocks`` contiguous blocks
     and emit one band per ``(n_blocks - radius)``-subset of blocks, keyed
     by the concatenation of those blocks' bits. Two signatures within
     Hamming distance ``radius`` differ in at most ``radius`` blocks, so
@@ -248,7 +247,7 @@ def simhash_hamming_band_structs(
     2^prefix_bits keyspace whose random collisions give bucket size
     ∝ corpus size and candidate-pair mass ∝ n² / 2^prefix_bits —
     measured 12.6× pair-mass growth on 4× clips at 800k. Block-subset
-    keys are (n_blocks-radius)·(bits/n_blocks) ≈ 32 bits wide at the
+    keys are (n_blocks-radius)·(64/n_blocks) ≈ 32 bits wide at the
     default (6,3), pushing random-collision mass to n²/2³² — negligible
     into the billions of rows, at the cost of C(n_blocks, radius) bands
     per row instead of radius+1.
@@ -256,7 +255,7 @@ def simhash_hamming_band_structs(
     Returns a list of ``struct(band_idx, band_key)`` columns, one per
     subset, for the caller to ``explode(array(...))``.
     """
-    widths, offsets, combos = simhash_hamming_blocks(n_blocks, radius, bits)
+    widths, offsets, combos = simhash_hamming_blocks(n_blocks, radius)
 
     def block(i: int) -> Column:
         # contiguous bit-slice i, right-aligned; mask width < 63 so the

@@ -80,11 +80,10 @@ def doc_fingerprint(col: Column) -> Column:
     return F.md5(col)
 
 
-def lang_id_udf(extra_profiles: dict[str, list[str]] | None = None):
+def lang_id_udf():
     """pandas_udf returning the best-matching language code by trigram
     profile hit-rate, or 'und' when nothing matches."""
-    profiles = {**_LANG_PROFILES, **(extra_profiles or {})}
-    langs = sorted(profiles)
+    langs = sorted(_LANG_PROFILES)
 
     # flat (gram -> lang index) table so the batch scores with vectorized
     # pd.Series.str.count per gram (one pass over the whole Arrow batch
@@ -92,7 +91,7 @@ def lang_id_udf(extra_profiles: dict[str, list[str]] | None = None):
     import re
 
     flat = [
-        (re.escape(g), i) for i, lang in enumerate(langs) for g in profiles[lang]
+        (re.escape(g), i) for i, lang in enumerate(langs) for g in _LANG_PROFILES[lang]
     ]
 
     @F.pandas_udf(T.StringType())

@@ -31,10 +31,10 @@ def jaccard(a: Column, b: Column) -> Column:
     )
 
 
-def hamming_similarity(a: Column, b: Column, bits: int = 64) -> Column:
-    """1 - hamming/bits for two integer signatures."""
+def hamming_similarity(a: Column, b: Column) -> Column:
+    """1 - hamming/64 for two 64-bit SimHash signatures."""
     dist = F.bit_count(a.bitwiseXOR(b))
-    return F.lit(1.0) - dist.cast("double") / F.lit(float(bits))
+    return F.lit(1.0) - dist.cast("double") / F.lit(64.0)
 
 
 def dot(a: Column, b: Column) -> Column:

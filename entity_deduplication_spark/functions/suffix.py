@@ -21,7 +21,9 @@ from __future__ import annotations
 import numpy as np
 
 _B = np.uint64(1_000_003)  # polynomial rolling-hash base
-_MASK = np.uint64(0xFFFFFFFFFFFFFFFF)
+# output bound of common_run_pairs: a group's LCP scan stops once it holds
+# this many pairs, so one hot fingerprint bucket cannot flood its task
+MAX_RUN_PAIRS = 100_000
 
 
 def rolling_kgram_hashes(s: str, k: int) -> np.ndarray:
@@ -99,9 +101,7 @@ def kasai_lcp(codes: np.ndarray, sa: np.ndarray) -> np.ndarray:
     return lcp
 
 
-def common_run_pairs(
-    doc_ids: list, texts: list[str], min_len: int, max_pairs: int = 100_000
-) -> list[tuple]:
+def common_run_pairs(doc_ids: list, texts: list[str], min_len: int) -> list[tuple]:
     """All (id1, id2, run_len) pairs of docs sharing an exact run >= min_len.
 
     Builds one generalized suffix array over the group (docs joined by
@@ -149,7 +149,7 @@ def common_run_pairs(
                         key = (ia, ib) if ia < ib else (ib, ia)
                         if best.get(key, 0) < int(lcp[p]):
                             best[key] = int(lcp[p])
-                if len(best) >= max_pairs:
+                if len(best) >= MAX_RUN_PAIRS:
                     break
             i = j
         else:

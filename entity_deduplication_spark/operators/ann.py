@@ -26,25 +26,23 @@ from entity_deduplication_spark.operators.pairs import block_self_join_pairs
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 10,
-    round_dp: int = 4,
 ) -> DataFrame:
-    """Exact cosine top-k: (query_id, neighbor_id, cos_sim, rank).
+    """Exact cosine top-k over ``embedding`` by ``vec_id``: (query_id,
+    neighbor_id, cos_sim, rank).
 
-    Ranking uses the *rounded* similarity with neighbor-id tie-break so the
-    result is reproducible across engines and float summation orders.
+    Ranking uses the similarity rounded to 4 dp with neighbor-id tie-break
+    so the result is reproducible across engines and float summation orders.
     """
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv")
     )
     scored = (
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos_sim", F.round(cosine(F.col("qv"), F.col("cv")), round_dp))
+        .withColumn("cos_sim", F.round(cosine(F.col("qv"), F.col("cv")), 4))
         .select("query_id", "neighbor_id", "cos_sim")
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -59,7 +57,6 @@ def brute_force_topk(
 def tune_rhp_bands(
     threshold: float,
     target_miss: float = 1e-9,
-    bucket_selectivity: float = 0.35,
     n_rows: int | None = None,
 ) -> tuple[int, int]:
     """(rows_per_band r, n_bands B) for recall >= 1 - target_miss at
@@ -71,10 +68,10 @@ def tune_rhp_bands(
     are deterministic functions of the inputs, so the same config always
     yields the same plan.
 
-    Without ``n_rows``, r is chosen so a band retains ~``bucket_
-    selectivity`` of at-threshold pairs (larger r = exponentially more,
-    smaller buckets — the skew lever). With ``n_rows``, r instead
-    minimizes the total-cost model for uniformly-bucketed data,
+    Without ``n_rows``, r is chosen so a band retains ~35% of at-threshold
+    pairs (larger r = exponentially more, smaller buckets — the skew
+    lever). With ``n_rows``, r instead minimizes the total-cost model for
+    uniformly-bucketed data,
 
         cost(r) ~ B(r)*n  [banding/shuffle]  +  B(r)*n^2/2^r  [random
         collisions verified],  B(r) = ln(1/miss)/p^r
@@ -93,7 +90,7 @@ def tune_rhp_bands(
         opt = n_rows * (math.log(2) + math.log(p)) / (-math.log(p))
         r = max(1, min(48, round(math.log2(max(opt, 2.0)))))
     else:
-        r = max(1, int(math.log(bucket_selectivity) / math.log(p)))
+        r = max(1, int(math.log(0.35) / math.log(p)))
     pr = p**r
     b = max(1, math.ceil(math.log(target_miss) / math.log(1.0 - pr)))
     return r, b
@@ -105,7 +102,6 @@ def rhp_band_keys(
     vec_col: str = "embedding",
     rows_per_band: int = 8,
     n_bands: int = 8,
-    seed: int = 42,
 ) -> DataFrame:
     """(id, vec, band_keys array<bigint>) — one r-bit key per band.
 
@@ -116,7 +112,7 @@ def rhp_band_keys(
     (band index, key), so equal keys of different bands never meet.
     """
     r, b = rows_per_band, n_bands
-    # the plane matrix is a deterministic function of (seed, dim, r, b):
+    # the plane matrix is a deterministic function of (dim, r, b):
     # build it ONCE per worker per dim (the dim is only known from the
     # first batch) instead of redrawing an r*b x dim Gaussian every
     # Arrow batch — same keys, ~free after the first batch
@@ -128,7 +124,7 @@ def rhp_band_keys(
         dim = mat.shape[1]
         planes = planes_by_dim.get(dim)
         if planes is None:
-            rng = np.random.default_rng(seed)
+            rng = np.random.default_rng(42)
             planes = rng.standard_normal((dim, r * b))
             planes_by_dim[dim] = planes
         bits = (mat @ planes) > 0  # batch x (r*b)
@@ -142,31 +138,26 @@ def rhp_band_keys(
 
 
 def _banded(
-    df: DataFrame, id_col: str, vec_col: str, n_planes: int, bands: int, seed: int
+    df: DataFrame, id_col: str, vec_col: str, n_planes: int, bands: int
 ) -> DataFrame:
     """(id, vec, band_idx, band_key): one row per band of each vector."""
     assert n_planes % bands == 0
-    keyed = rhp_band_keys(df, id_col, vec_col, n_planes // bands, bands, seed)
+    keyed = rhp_band_keys(df, id_col, vec_col, n_planes // bands, bands)
     return keyed.select(
         id_col, vec_col, F.posexplode("band_keys").alias("band_idx", "band_key")
     )
 
 
 def rhp_bucket_pairs(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 32,
-    bands: int = 4,
-    seed: int = 42,
-    block_size_limit: int = 10_000,
+    df: DataFrame, n_planes: int = 32, bands: int = 4
 ) -> DataFrame:
-    """Candidate pairs whose sign signatures agree on >= one band of bits."""
-    banded = _banded(df, id_col, vec_col, n_planes, bands, seed).select(
-        F.col(id_col).alias("clip_id"), "band_idx", "band_key"
+    """Candidate pairs of ``vec_id``s whose ``embedding`` sign signatures
+    agree on >= one band of bits."""
+    banded = _banded(df, "vec_id", "embedding", n_planes, bands).select(
+        F.col("vec_id").alias("clip_id"), "band_idx", "band_key"
     )
     return block_self_join_pairs(
-        banded, key_cols=["band_idx", "band_key"], block_size_limit=block_size_limit
+        banded, key_cols=["band_idx", "band_key"], block_size_limit=10_000
     )
 
 
@@ -178,13 +169,11 @@ def lsh_topk(
     k: int = 10,
     n_planes: int = 32,
     bands: int = 4,
-    seed: int = 42,
-    round_dp: int = 4,
 ) -> DataFrame:
     """Approximate top-k: bucket-join candidates, exact cosine re-rank."""
 
     def _side(df: DataFrame, role: str) -> DataFrame:
-        return _banded(df, id_col, vec_col, n_planes, bands, seed).select(
+        return _banded(df, id_col, vec_col, n_planes, bands).select(
             F.col(id_col).alias(f"{role}_id"),
             F.col(vec_col).alias(f"{role}_vec"),
             "band_idx",
@@ -199,7 +188,7 @@ def lsh_topk(
         .dropDuplicates(["query_id", "neighbor_id"])
     )
     scored = cand.withColumn(
-        "cos_sim", F.round(cosine(F.col("query_vec"), F.col("neighbor_vec")), round_dp)
+        "cos_sim", F.round(cosine(F.col("query_vec"), F.col("neighbor_vec")), 4)
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
     return (

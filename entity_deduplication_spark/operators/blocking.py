@@ -21,38 +21,28 @@ from entity_deduplication_spark.operators.pairs import block_self_join_pairs
 from entity_deduplication_spark.sources.io import stage
 
 
-def lsh_band_pairs(
-    signatures: DataFrame,
-    cfg: DedupConfig,
-    bands_col: str = "bands",
-    id_col: str = "clip_id",
-) -> DataFrame:
+def lsh_band_pairs(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Candidate pairs from MinHash-LSH band collisions.
 
-    ``signatures`` must carry ``bands_col`` = array<bigint> of b band
-    hashes (functions.hashing.band_keys). posexplode → (band_idx, band_key)
-    blocks → skew-aware self-join. Two rows collide if ANY band matches —
-    the ``dropDuplicates`` inside the self-join plus the cross-band
-    ``dropDuplicates`` keep each unordered pair once.
+    ``signatures`` must carry ``clip_id`` and ``bands`` = array<bigint> of
+    b band hashes (functions.hashing.band_keys). posexplode → (band_idx,
+    band_key) blocks → skew-aware self-join. Two rows collide if ANY band
+    matches — the ``dropDuplicates`` inside the self-join plus the
+    cross-band ``dropDuplicates`` keep each unordered pair once.
     """
     banded = signatures.select(
-        F.col(id_col), F.posexplode(F.col(bands_col)).alias("band_idx", "band_key")
+        F.col("clip_id"), F.posexplode(F.col("bands")).alias("band_idx", "band_key")
     )
     return block_self_join_pairs(
         banded,
         key_cols=["band_idx", "band_key"],
-        id_col=id_col,
         block_size_limit=cfg.block_size_limit,
     )
 
 
-def simhash_block_pairs(
-    signatures: DataFrame,
-    cfg: DedupConfig,
-    simhash_col: str = "simhash",
-    id_col: str = "clip_id",
-) -> DataFrame:
-    """Candidate pairs whose SimHash signatures share a block-subset key.
+def simhash_block_pairs(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """Candidate pairs of ``clip_id``s whose ``simhash`` signatures share a
+    block-subset key.
 
     Hamming-LSH via block combinations (Manku et al., WWW'07): the 64-bit
     signature splits into ``cfg.simhash_n_blocks`` contiguous blocks and
@@ -69,15 +59,18 @@ def simhash_block_pairs(
     )
 
     structs = simhash_hamming_band_structs(
-        F.col(simhash_col), cfg.simhash_n_blocks, cfg.simhash_hamming_max
+        F.col("simhash"), cfg.simhash_n_blocks, cfg.simhash_hamming_max
     )
     banded = signatures.select(
-        F.col(id_col), F.explode(F.array(*structs)).alias("rb")
-    ).select(id_col, F.col("rb.band_idx").alias("band_idx"), F.col("rb.band_key").alias("band_key"))
+        F.col("clip_id"), F.explode(F.array(*structs)).alias("rb")
+    ).select(
+        "clip_id",
+        F.col("rb.band_idx").alias("band_idx"),
+        F.col("rb.band_key").alias("band_key"),
+    )
     return block_self_join_pairs(
         banded,
         key_cols=["band_idx", "band_key"],
-        id_col=id_col,
         block_size_limit=cfg.block_size_limit,
     )
 
@@ -111,7 +104,6 @@ def key_equality_pairs(
     id_col: str,
     block_key,
     key_name: str = "block_key",
-    block_size_limit: int = 10_000,
 ) -> DataFrame:
     """(id1, id2, <key_name>) pairs sharing an equality block key — the
     thin composite-recipe wrapper (reference B2/B3/B10-B13/B15 are all
@@ -120,7 +112,7 @@ def key_equality_pairs(
     id1 side for inspectability."""
     keyed = df.select(F.col(id_col).alias("clip_id"), block_key.alias(key_name))
     pairs = block_self_join_pairs(
-        keyed, key_cols=[key_name], block_size_limit=block_size_limit
+        keyed, key_cols=[key_name], block_size_limit=10_000
     )
     side = df.select(F.col(id_col).alias("id1"), block_key.alias(key_name))
     return pairs.join(side, "id1").select("id1", "id2", key_name)
@@ -129,64 +121,43 @@ def key_equality_pairs(
 def sorted_neighborhood_pairs(
     df: DataFrame,
     sort_col: str,
-    partition_cols: list[str] | None = None,
     window: int = 20,
     id_col: str = "clip_id",
-    max_len_diff: int | None = None,
-    len_col: str | None = None,
 ) -> DataFrame:
     """Sorted-neighborhood blocking (reference B16,
-    deterministic_feature.py:1149-1171): sort within a partition, pair
-    each row with the next ``window`` rows; optional length prefilter.
+    deterministic_feature.py:1149-1171): sort by (``sort_col``, id), pair
+    each row with the next ``window`` rows.
 
     Expressed as a rank self-join on row_number *buckets* — the
-    reference's only sort-merge-shaped operator. With ``partition_cols``
-    the rank window runs per partition key; WITHOUT them the global sort
-    is built scale-safely: ``repartitionByRange`` + within-partition ranks
-    + broadcast partition offsets (global_rank = offset + local rank), so
-    there is never a single-partition window or a cross join. Either way,
-    pairing joins on rank buckets of width ``window`` (each row lands in
-    its bucket and its successor bucket) — shuffle volume O(n), not O(n^2).
+    reference's only sort-merge-shaped operator. The global sort is built
+    scale-safely: ``repartitionByRange`` + within-partition ranks +
+    broadcast partition offsets (global_rank = offset + local rank), so
+    there is never a single-partition window or a cross join. Pairing
+    joins on rank buckets of width ``window`` (each row lands in its
+    bucket and its successor bucket) — shuffle volume O(n), not O(n^2).
     """
-    parts = partition_cols or []
-    keep = [F.col(len_col)] if len_col else []
-    if parts:
-        w = Window.partitionBy(*[F.col(c) for c in parts]).orderBy(
-            sort_col, id_col
-        )
-        ranked = df.select(
-            *parts, F.col(id_col), F.col(sort_col), *keep
-        ).withColumn("_rn", F.row_number().over(w))
-    else:
-        ranked = _global_rank(df, sort_col, id_col, keep)
+    ranked = _global_rank(df, sort_col, id_col)
 
     bucket = F.floor((F.col("_rn") - 1) / window)
     a = ranked.select(
-        *parts,
         F.col(id_col).alias("id1"),
         F.col("_rn").alias("_rn1"),
         bucket.alias("_bk"),
-        *([F.col(len_col).alias("_len1")] if len_col else []),
     )
     # each right row is probed from its own bucket and the previous one:
     # for 0 < rn2-rn1 <= window the buckets differ by at most 1
     b = ranked.select(
-        *parts,
         F.col(id_col).alias("id2"),
         F.col("_rn").alias("_rn2"),
         F.explode(F.array(bucket, bucket - 1)).alias("_bk"),
-        *([F.col(len_col).alias("_len2")] if len_col else []),
     )
     cond = (F.col("_rn2") > F.col("_rn1")) & (
         F.col("_rn2") <= F.col("_rn1") + window
     )
-    out = a.join(b, on=[*parts, "_bk"]).filter(cond)
-    if len_col and max_len_diff is not None:
-        out = out.filter(
-            F.abs(F.col("_len1") - F.col("_len2")) <= max_len_diff
-        )
     return (
-        out.select(
+        a.join(b, on=["_bk"])
+        .filter(cond)
+        .select(
             F.least("id1", "id2").alias("id1"),
             F.greatest("id1", "id2").alias("id2"),
         )
@@ -195,13 +166,11 @@ def sorted_neighborhood_pairs(
     )
 
 
-def _global_rank(
-    df: DataFrame, sort_col: str, id_col: str, keep: list
-) -> DataFrame:
+def _global_rank(df: DataFrame, sort_col: str, id_col: str) -> DataFrame:
     """Scale-safe global row_number by (sort_col, id_col): range-partition,
     rank within each range partition, add broadcast cumulative offsets.
     The only driver-side data is one row-count per partition."""
-    src = df.select(F.col(id_col), F.col(sort_col), *keep)
+    src = df.select(F.col(id_col), F.col(sort_col))
     by_range = src.repartitionByRange(F.col(sort_col), F.col(id_col)).withColumn(
         "_pid", F.spark_partition_id()
     )

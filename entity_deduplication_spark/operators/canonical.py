@@ -34,17 +34,15 @@ def _first(value: Column, desc: Column, asc: Column) -> Column:
 
 def elect_canonical(
     clustered: DataFrame,
-    cluster_col: str = "cluster_id",
     id_col: str = "clip_id",
-    completeness_cols: list[str] | None = None,
     order_col: str | None = None,
 ) -> DataFrame:
-    """One representative row per cluster + cluster_size + record_ids.
+    """One representative row per ``cluster_id`` + cluster_size + record_ids.
 
-    Ordering: completeness desc (or the numeric ``order_col`` desc, NULLs
-    last), then id asc — deterministic under any parallelism. Output: the
-    cluster column, the winner's other columns plus ``_completeness``,
-    then ``cluster_size`` and ``record_ids``.
+    Ordering: completeness of the other columns desc (or the numeric
+    ``order_col`` desc, NULLs last), then id asc — deterministic under any
+    parallelism. Output: ``cluster_id``, the winner's other columns plus
+    ``_completeness``, then ``cluster_size`` and ``record_ids``.
 
     Ids must be unique: a cluster that lists an id twice fails the job
     that runs the election, naming the cluster and the repeat count,
@@ -53,35 +51,29 @@ def elect_canonical(
     if order_col is not None:
         rank_expr = F.col(order_col)
     else:
-        cols = completeness_cols or [
-            c for c in clustered.columns if c not in (cluster_col, id_col)
-        ]
+        cols = [c for c in clustered.columns if c not in ("cluster_id", id_col)]
         rank_expr = completeness(clustered, cols)
     ranked = clustered.withColumn("_completeness", rank_expr)
-    rest = [c for c in ranked.columns if c != cluster_col]
+    rest = [c for c in ranked.columns if c != "cluster_id"]
     size = F.col("cluster_size")
     repeats = size - F.size(F.array_distinct("record_ids"))
     unique_size = F.when(repeats == 0, size).otherwise(
         F.raise_error(
             F.format_string(
                 f"elect_canonical: cluster %s lists %d repeated {id_col} value(s)",
-                F.col(cluster_col),
+                F.col("cluster_id"),
                 repeats,
             )
         )
     )
-    return ranked.groupBy(cluster_col).agg(
+    return ranked.groupBy("cluster_id").agg(
         _first(F.struct(*rest), F.col("_completeness"), F.col(id_col)).alias("_w"),
         F.count(F.lit(1)).alias("cluster_size"),
         F.sort_array(F.collect_list(F.col(id_col))).alias("record_ids"),
-    ).select(cluster_col, "_w.*", unique_size.alias("cluster_size"), "record_ids")
+    ).select("cluster_id", "_w.*", unique_size.alias("cluster_size"), "record_ids")
 
 
-def field_modes(
-    clustered: DataFrame,
-    cols: list[str],
-    cluster_col: str = "cluster_id",
-) -> DataFrame:
+def field_modes(clustered: DataFrame, cols: list[str]) -> DataFrame:
     """Per-cluster most-common non-empty value for each of ``cols``.
 
     (cluster_id, mode_<col>...) — reference utils.py:158-176 fills missing
@@ -93,31 +85,23 @@ def field_modes(
     for c in cols:
         mode = (
             clustered.filter(F.col(c).isNotNull() & (F.length(F.col(c).cast("string")) > 0))
-            .groupBy(cluster_col, c)
+            .groupBy("cluster_id", c)
             .agg(F.count(F.lit(1)).alias("_n"))
-            .groupBy(cluster_col)
+            .groupBy("cluster_id")
             .agg(_first(F.col(c), F.col("_n"), F.col(c)).alias(f"mode_{c}"))
         )
-        out = mode if out is None else out.join(mode, cluster_col, "outer")
+        out = mode if out is None else out.join(mode, "cluster_id", "outer")
     return out
 
 
-def most_detailed(
-    clustered: DataFrame,
-    col: str,
-    cluster_col: str = "cluster_id",
-    detail: Column | None = None,
-) -> DataFrame:
+def most_detailed(clustered: DataFrame, col: str) -> DataFrame:
     """(cluster_id, detailed_<col>): the cluster's most 'detailed' value —
-    default detail metric = comma count then length then value asc
-    (reference utils.py:177-185 picks the most-detailed address). A custom
-    ``detail`` must be numeric."""
-    d = detail if detail is not None else (
-        F.size(F.split(F.col(col), ",")) * 1000 + F.length(F.col(col))
-    )
+    comma count, then length, then value asc (reference utils.py:177-185
+    picks the most-detailed address)."""
+    d = F.size(F.split(F.col(col), ",")) * 1000 + F.length(F.col(col))
     return (
         clustered.filter(F.col(col).isNotNull())
-        .groupBy(cluster_col)
+        .groupBy("cluster_id")
         .agg(_first(F.col(col), d, F.col(col)).alias(f"detailed_{col}"))
     )
 
@@ -126,7 +110,6 @@ def backfill_canonical(
     canonical: DataFrame,
     clustered: DataFrame,
     mode_cols: list[str],
-    cluster_col: str = "cluster_id",
     detail_cols: list[str] | None = None,
 ) -> DataFrame:
     """Fill the elected canonical row's missing/empty fields.
@@ -137,9 +120,9 @@ def backfill_canonical(
     winner keeps its own non-empty values; only gaps are filled.
     """
     out = canonical
-    modes = field_modes(clustered, mode_cols, cluster_col)
+    modes = field_modes(clustered, mode_cols)
     if modes is not None:
-        out = out.join(modes, cluster_col, "left")
+        out = out.join(modes, "cluster_id", "left")
         for c in mode_cols:
             filled = F.when(
                 F.col(c).isNull() | (F.length(F.col(c).cast("string")) == 0),
@@ -147,8 +130,8 @@ def backfill_canonical(
             ).otherwise(F.col(c))
             out = out.withColumn(c, filled).drop(f"mode_{c}")
     for c in detail_cols or []:
-        det = most_detailed(clustered, c, cluster_col)
-        out = out.join(det, cluster_col, "left")
+        det = most_detailed(clustered, c)
+        out = out.join(det, "cluster_id", "left")
         filled = F.when(
             F.col(c).isNull() | (F.length(F.col(c).cast("string")) == 0),
             F.col(f"detailed_{c}"),

@@ -21,6 +21,9 @@ from pyspark.sql import functions as F
 
 from entity_deduplication_spark.sources.io import stage
 
+# cap on large-star/small-star rounds; the loop stops at the fixpoint
+MAX_STAR_ROUNDS = 50
+
 
 def _large_star(e: DataFrame) -> DataFrame:
     """For each node u: m = min(N(u) ∪ {u}); emit (v, m) for v in N(u), v > u."""
@@ -68,7 +71,7 @@ def _staged(df: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
     return out, (int(obs.get["n"]), int(obs.get["h"]))
 
 
-def _union_find_labels(e: DataFrame, node_id: str) -> DataFrame:
+def _union_find_labels(e: DataFrame) -> DataFrame:
     """Small-graph fast path: one executor task runs union-find over the
     whole (small) edge set via applyInPandas — same min-member labels as
     the star rounds, ~1 job instead of O(log^2 n) round barriers.
@@ -109,34 +112,31 @@ def _union_find_labels(e: DataFrame, node_id: str) -> DataFrame:
     return (
         e.groupBy(F.lit(1).alias("_g"))
         .applyInPandas(_uf, schema=f"n {id_type}, c {id_type}")
-        .select(F.col("n").alias(node_id), F.col("c").alias("cluster_id"))
+        .select(F.col("n").alias("clip_id"), F.col("c").alias("cluster_id"))
     )
 
 
 def connected_components(
     edges: DataFrame,
     nodes: DataFrame | None = None,
-    id1: str = "id1",
-    id2: str = "id2",
-    node_id: str = "clip_id",
-    max_iterations: int = 50,
     small_graph_edges: int = 2_000_000,
 ) -> DataFrame:
-    """(node, cluster_id) for every node; cluster_id = min member id.
+    """(clip_id, cluster_id) for every node; cluster_id = min member id.
 
-    ``edges``: (id1, id2) undirected; ``nodes``: optional full node table so
-    unmatched records become singleton clusters (reference utils.py:106-111).
+    ``edges``: (id1, id2) undirected; ``nodes``: optional full ``clip_id``
+    table so unmatched records become singleton clusters (reference
+    utils.py:106-111).
     """
     e, sig = _staged(
-        edges.select(F.col(id1).alias("u"), F.col(id2).alias("v"))
+        edges.select(F.col("id1").alias("u"), F.col("id2").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
 
     if 0 < sig[0] <= small_graph_edges:
-        labels = _union_find_labels(e, node_id)
+        labels = _union_find_labels(e)
     else:
-        for _ in range(max_iterations):
+        for _ in range(MAX_STAR_ROUNDS):
             e, nxt = _staged(_small_star(_large_star(e)))
             if nxt == sig:
                 break
@@ -147,13 +147,13 @@ def connected_components(
         sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         labels = sym.groupBy("u").agg(F.min("v").alias("_mn"))
         labels = labels.select(
-            F.col("u").alias(node_id),
+            F.col("u").alias("clip_id"),
             F.least(F.col("u"), F.col("_mn")).alias("cluster_id"),
         )
     if nodes is not None:
-        all_nodes = nodes.select(F.col(node_id)).distinct()
-        labels = all_nodes.join(labels, node_id, "left").select(
-            node_id,
-            F.coalesce(F.col("cluster_id"), F.col(node_id)).alias("cluster_id"),
+        all_nodes = nodes.select("clip_id").distinct()
+        labels = all_nodes.join(labels, "clip_id", "left").select(
+            "clip_id",
+            F.coalesce(F.col("cluster_id"), F.col("clip_id")).alias("cluster_id"),
         )
     return labels

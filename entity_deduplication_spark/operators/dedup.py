@@ -161,16 +161,15 @@ def ngram_jaccard_clusters(
     """Connected components over the exact n-gram Jaccard pair graph."""
     pairs = ngram_jaccard_pairs(df, id_col, text_col, n, threshold)
     return connected_components(
-        pairs, nodes=df.select(F.col(id_col).alias("clip_id")), node_id="clip_id"
+        pairs, nodes=df.select(F.col(id_col).alias("clip_id"))
     ).withColumnRenamed("clip_id", id_col)
 
 
-def minhash_lsh_dedup(
-    df: DataFrame, id_col: str, text_col: str, cfg: DedupConfig | None = None
-) -> DataFrame:
+def minhash_lsh_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, cluster_id) via shingle -> MinHash -> LSH bands -> Jaccard
-    verify -> connected components. The scale path for text dedup."""
-    cfg = cfg or DedupConfig()
+    verify -> connected components, at the default ``DedupConfig``. The
+    scale path for text dedup."""
+    cfg = DedupConfig()
     # a small documents table is one parquet split -> the MinHash kernel
     # would run on ONE core; spread first (no-op on well-split inputs)
     sig = spread_partitions(df.select(F.col(id_col), F.col(text_col)), key=id_col).select(
@@ -196,14 +195,10 @@ def minhash_lsh_dedup(
     ).withColumnRenamed("clip_id", id_col)
 
 
-def simhash_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    cfg: DedupConfig | None = None,
-) -> DataFrame:
-    """(id1, id2, hamming_sim) pairs within the SimHash Hamming radius."""
-    cfg = cfg or DedupConfig()
+def simhash_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id1, id2, hamming_sim) pairs within the SimHash Hamming radius, at
+    the default ``DedupConfig``."""
+    cfg = DedupConfig()
     # spread the (possibly single-split) scan so the SimHash kernel
     # parallelizes — see minhash_lsh_dedup
     sig = spread_partitions(df.select(F.col(id_col), F.col(text_col)), key=id_col).select(
@@ -224,12 +219,8 @@ def embedding_cosine_pairs(
     vec_col: str,
     threshold: float = 0.95,
     method: str = "auto",
-    seed: int = 42,
-    target_miss: float = 1e-9,
-    block_size_limit: int = 100_000,
     grid_chunks: int = 8,
     n_rows: int | None = None,
-    min_band_bits: int = 4,
 ) -> DataFrame:
     """(id1, id2, cos_sim) embedding near-duplicate pairs above threshold.
 
@@ -238,18 +229,17 @@ def embedding_cosine_pairs(
     ``n_rows`` not given). RHP-LSH is only sub-quadratic when r is
     meaningful — at low thresholds (cos ~< 0.6) r collapses to 1-3
     bits, buckets approach n/2^r, and the "approximate" path degenerates
-    into a worse-constant all-pairs. Below ``min_band_bits`` the exact
-    grid path is chosen instead; above it, LSH.
+    into a worse-constant all-pairs. Below 4 bits the exact grid path is
+    chosen instead; above it, LSH.
 
     ``method="lsh"`` (the 100-TB path for real near-dup thresholds):
     random-hyperplane band keys auto-tuned from the threshold
     (operators.ann.tune_rhp_bands) so a true pair misses every bucket
-    w.p. <= ``target_miss`` — candidates come from salted bucket
-    equi-joins, then an exact JVM-side cosine verify. No cross join
-    anywhere in the plan. A band bucket larger than ``block_size_limit``
-    raises at execution time (on_oversize="error") rather than silently
-    truncating — silent truncation would void the stated recall
-    guarantee.
+    w.p. <= 1e-9 — candidates come from salted bucket equi-joins, then an
+    exact JVM-side cosine verify. No cross join anywhere in the plan. A
+    band bucket larger than 100,000 rows raises at execution time
+    (on_oversize="error") rather than silently truncating — silent
+    truncation would void the stated recall guarantee.
 
     ``method="exact"``: provably-complete blocked grid join — both sides
     are hashed into ``grid_chunks`` chunks, every chunk-pair cell is an
@@ -272,10 +262,10 @@ def embedding_cosine_pairs(
     if method in ("auto", "lsh"):
         # route AND execute on the same n-aware tuning — deciding the
         # route with the old selectivity rule but executing with the
-        # n-aware r would let the two models disagree near min_band_bits
+        # n-aware r would let the two models disagree near the 4-bit floor
         if n_rows is None:
             n_rows = df.count()  # parquet metadata count
-        r, b = tune_rhp_bands(threshold, target_miss, n_rows=n_rows)
+        r, b = tune_rhp_bands(threshold, n_rows=n_rows)
         if method == "auto":
             # LSH wins only when (a) bands are wide enough to be selective
             # AND (b) its expected random-collision verify work
@@ -285,7 +275,7 @@ def embedding_cosine_pairs(
             # disagree (low thresholds blow up b faster than 2^r and
             # route exact; real near-dup thresholds route LSH).
             method = (
-                "lsh" if (r >= min_band_bits and b < 2 ** (r - 1)) else "exact"
+                "lsh" if (r >= 4 and b < 2 ** (r - 1)) else "exact"
             )
     if method == "exact":
         return _embedding_pairs_grid(
@@ -294,7 +284,7 @@ def embedding_cosine_pairs(
     # spread first: a small embeddings table is 1-2 scan splits, which
     # would serialize the RHP matmul kernel onto one core
     keyed = stage(
-        rhp_band_keys(spread_partitions(df, key=id_col), id_col, vec_col, r, b, seed)
+        rhp_band_keys(spread_partitions(df, key=id_col), id_col, vec_col, r, b)
     )
     banded = keyed.select(
         F.col(id_col).alias("clip_id"),
@@ -303,7 +293,7 @@ def embedding_cosine_pairs(
     cand = block_self_join_pairs(
         banded,
         key_cols=["band_idx", "band_key"],
-        block_size_limit=block_size_limit,
+        block_size_limit=100_000,
         on_oversize="error",
     )
     feat = attach_pair_features(cand, keyed, [vec_col], id_col)

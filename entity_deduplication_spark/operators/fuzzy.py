@@ -36,6 +36,11 @@ from entity_deduplication_spark.operators.pairs import (
     block_self_join_pairs,
 )
 
+# semantic_blend_pairs' blend weights, as two explicit literals (not x and
+# 1 - x) so the DuckDB oracle can use the identical double constants
+SEMANTIC_WEIGHT = 0.7
+STRING_WEIGHT = 0.3
+
 
 def token_sorted(col: Column) -> Column:
     """Whitespace tokens sorted + re-joined — JVM-side (no UDF)."""
@@ -43,17 +48,13 @@ def token_sorted(col: Column) -> Column:
 
 
 def _candidates_with_text(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    block_key: Column,
-    block_size_limit: int,
+    df: DataFrame, id_col: str, text_col: str, block_key: Column
 ) -> DataFrame:
     keyed = df.select(
         F.col(id_col).alias("clip_id"), block_key.alias("block_key")
     )
     cand = block_self_join_pairs(
-        keyed, key_cols=["block_key"], block_size_limit=block_size_limit
+        keyed, key_cols=["block_key"], block_size_limit=10_000
     )
     texts = df.select(F.col(id_col), F.col(text_col).alias("text"))
     return attach_pair_features(cand, texts, ["text"], id_col)
@@ -72,16 +73,13 @@ def levenshtein_sim_pairs(
     text_col: str,
     block_key: Column,
     threshold: float = 0.7,
-    token_sort: bool = True,
-    block_size_limit: int = 10_000,
 ) -> DataFrame:
     """(id1, id2, lev_sim) for blocked pairs with token-sorted Levenshtein
     similarity >= threshold; lev_sim = 1 - lev/max(len) rounded to 4 dp."""
-    feat = _candidates_with_text(df, id_col, text_col, block_key, block_size_limit)
-    if token_sort:
-        feat = feat.withColumn("text_1", token_sorted(F.col("text_1"))).withColumn(
-            "text_2", token_sorted(F.col("text_2"))
-        )
+    feat = _candidates_with_text(df, id_col, text_col, block_key)
+    feat = feat.withColumn("text_1", token_sorted(F.col("text_1"))).withColumn(
+        "text_2", token_sorted(F.col("text_2"))
+    )
     sim = _lev_sim(F.col("text_1"), F.col("text_2"))
     return (
         feat.withColumn("lev_sim", F.round(sim, 4))
@@ -97,8 +95,6 @@ def semantic_blend_pairs(
     vec_col: str,
     block_key: Column,
     threshold: float = 0.35,
-    semantic_weight: float = 0.7,
-    string_weight: float = 0.3,
     block_size_limit: int = 200,
 ) -> DataFrame:
     """(id1, id2, cos_sim, lev_sim, blended_sim) — the reference's V9
@@ -133,11 +129,9 @@ def semantic_blend_pairs(
     scored = feat.withColumn(
         "cos_sim", cosine(F.col("vec_1"), F.col("vec_2"))
     ).withColumn("lev_sim", _lev_sim(F.col("text_1"), F.col("text_2")))
-    # explicit literal weights (not 1-x arithmetic) so the DuckDB oracle
-    # can use the identical double constants
     blended = (
-        F.lit(semantic_weight) * F.col("cos_sim")
-        + F.lit(string_weight) * F.col("lev_sim")
+        F.lit(SEMANTIC_WEIGHT) * F.col("cos_sim")
+        + F.lit(STRING_WEIGHT) * F.col("lev_sim")
     )
     return (
         scored.withColumn("blended_sim", blended)
@@ -157,13 +151,11 @@ def token_ratio_pairs(
     id_col: str,
     text_col: str,
     block_key: Column,
-    threshold: float = 85.0,
-    block_size_limit: int = 10_000,
 ) -> DataFrame:
     """(id1, id2, token_sort_ratio, token_set_ratio) for blocked pairs with
-    token_sort_ratio >= threshold (0-100 scale, rapidfuzz semantics —
-    reference rule_based.py:81)."""
-    feat = _candidates_with_text(df, id_col, text_col, block_key, block_size_limit)
+    token_sort_ratio >= 85 (0-100 scale, rapidfuzz semantics — reference
+    rule_based.py:81)."""
+    feat = _candidates_with_text(df, id_col, text_col, block_key)
     out = feat.withColumn(
         "token_sort_ratio",
         F.round(token_sort_ratio_udf()(F.col("text_1"), F.col("text_2")), 2),
@@ -171,6 +163,6 @@ def token_ratio_pairs(
         "token_set_ratio",
         F.round(token_set_ratio_udf()(F.col("text_1"), F.col("text_2")), 2),
     )
-    return out.filter(F.col("token_sort_ratio") >= threshold).select(
+    return out.filter(F.col("token_sort_ratio") >= 85.0).select(
         "id1", "id2", "token_sort_ratio", "token_set_ratio"
     )

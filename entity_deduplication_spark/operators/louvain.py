@@ -25,14 +25,13 @@ from pyspark.sql import functions as F
 from entity_deduplication_spark.operators.pairs import attach_pair_features
 
 
-def louvain_communities(
-    edges: list[tuple], resolution: float = 1.0, max_levels: int = 10
-) -> dict:
+def louvain_communities(edges: list[tuple]) -> dict:
     """node -> community label (min member node) for a weighted edge list.
 
-    From-scratch Louvain (Blondel et al. 2008): repeat {local-move passes
-    until stable, then aggregate communities into supernodes} until the
-    partition stops changing. ``edges``: (u, v, w) tuples, undirected.
+    From-scratch Louvain (Blondel et al. 2008) at resolution 1: repeat
+    {local-move passes until stable, then aggregate communities into
+    supernodes} until the partition stops changing, for at most 10
+    levels. ``edges``: (u, v, w) tuples, undirected.
     """
     # weighted adjacency with parallel edges summed; self-loops kept
     adj: dict = {}
@@ -45,7 +44,7 @@ def louvain_communities(
     # current-level state; `member_of[n]` maps ORIGINAL node -> supernode
     member_of = {n: n for n in nodes}
 
-    for _level in range(max_levels):
+    for _level in range(10):
         level_nodes = sorted(adj)
         # degree convention (networkx/python-louvain): a self-loop of
         # weight w contributes 2w to its node's degree; aggregated
@@ -73,10 +72,10 @@ def louvain_communities(
                     links[comm[nb]] = links.get(comm[nb], 0.0) + w
                 # detach n
                 sigma_tot[cn] -= k[n]
-                base = links.get(cn, 0.0) - resolution * k[n] * sigma_tot[cn] / two_m
+                base = links.get(cn, 0.0) - k[n] * sigma_tot[cn] / two_m
                 best_c, best_gain = cn, base
                 for c in sorted(links):
-                    gain = links[c] - resolution * k[n] * sigma_tot[c] / two_m
+                    gain = links[c] - k[n] * sigma_tot[c] / two_m
                     if gain > best_gain + 1e-12 or (
                         abs(gain - best_gain) <= 1e-12 and c < best_c
                     ):
@@ -125,11 +124,9 @@ def louvain_split_oversized(
     clusters: DataFrame,
     edges: DataFrame,
     max_size: int = 50,
-    resolution: float = 1.0,
-    node_id: str = "clip_id",
     max_edges_per_component: int = 2_000_000,
 ) -> DataFrame:
-    """(node, cluster_id) with every cluster > max_size re-partitioned
+    """(clip_id, cluster_id) with every cluster > max_size re-partitioned
     into its Louvain communities (new cluster id = community's min member,
     the engine-wide convention). Small clusters pass through untouched.
 
@@ -144,14 +141,14 @@ def louvain_split_oversized(
     """
     sizes = clusters.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("_sz"))
     flagged = clusters.join(sizes, "cluster_id")
-    keep = flagged.filter(F.col("_sz") <= max_size).select(node_id, "cluster_id")
-    big = flagged.filter(F.col("_sz") > max_size).select(node_id, "cluster_id")
+    keep = flagged.filter(F.col("_sz") <= max_size).select("clip_id", "cluster_id")
+    big = flagged.filter(F.col("_sz") > max_size).select("clip_id", "cluster_id")
     if big.isEmpty():
         return clusters
 
     # intra-cluster edges of oversized components, tagged with the cluster
     e = (
-        attach_pair_features(edges, big, ["cluster_id"], node_id)
+        attach_pair_features(edges, big, ["cluster_id"])
         .filter(F.col("cluster_id_1") == F.col("cluster_id_2"))
         .select(F.col("cluster_id_1").alias("_grp"), "id1", "id2", "score")
     )
@@ -181,36 +178,33 @@ def louvain_split_oversized(
             "id1", "id2", "score"
         )
         giant_out = split_oversized_clusters(
-            g_members.select(node_id, "cluster_id"),
-            g_edges,
-            max_size=max_size,
-            node_id=node_id,
+            g_members.select("clip_id", "cluster_id"), g_edges, max_size=max_size
         )
         big = big.filter(~F.col("cluster_id").isin(gset))
         e = e.filter(~F.col("_grp").isin(gset))
 
-    id_type = dict(clusters.dtypes)[node_id]
+    id_type = dict(clusters.dtypes)["clip_id"]
 
     def _kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         assign = louvain_communities(
-            list(zip(pdf["id1"], pdf["id2"], pdf["score"])), resolution
+            list(zip(pdf["id1"], pdf["id2"], pdf["score"]))
         )
         items = sorted(assign.items())
         return pd.DataFrame(
             {
-                node_id: [n for n, _ in items],
+                "clip_id": [n for n, _ in items],
                 "cluster_id": [c for _, c in items],
             }
         )
 
     split = e.groupBy("_grp").applyInPandas(
-        _kernel, schema=f"{node_id} {id_type}, cluster_id {id_type}"
+        _kernel, schema=f"clip_id {id_type}, cluster_id {id_type}"
     )
     # isolated members of an oversized cluster (no intra-cluster edge —
     # cannot happen when clusters came from these edges, but be total)
-    seen = split.select(node_id)
-    orphans = big.select(node_id).exceptAll(seen).withColumn(
-        "cluster_id", F.col(node_id)
+    seen = split.select("clip_id")
+    orphans = big.select("clip_id").exceptAll(seen).withColumn(
+        "cluster_id", F.col("clip_id")
     )
     out = keep.unionByName(split).unionByName(orphans)
     if giant_out is not None:

@@ -96,19 +96,18 @@ def pair_features(
     return pairs.withColumn("features", _feat(F.col(text1), F.col(text2)))
 
 
-def fit_logistic(
-    X: np.ndarray, y: np.ndarray, iters: int = 300, lr: float = 1.0
-) -> tuple[np.ndarray, float]:
-    """Deterministic full-batch GD logistic regression -> (weights, bias)."""
+def fit_logistic(X: np.ndarray, y: np.ndarray) -> tuple[np.ndarray, float]:
+    """Deterministic full-batch GD logistic regression -> (weights, bias):
+    300 iterations at learning rate 1."""
     w = np.zeros(X.shape[1])
     b = 0.0
     n = len(y)
-    for _ in range(iters):
+    for _ in range(300):
         z = X @ w + b
         p = 1.0 / (1.0 + np.exp(-np.clip(z, -30, 30)))
         g = p - y
-        w -= lr * (X.T @ g) / n
-        b -= lr * float(g.mean())
+        w -= (X.T @ g) / n
+        b -= float(g.mean())
     return w, b
 
 
@@ -134,14 +133,14 @@ def _collect_training_sample(
 
 
 def train_pair_scorer(
-    labeled: DataFrame, label_col: str = "label", max_rows: int = 10_000
+    labeled: DataFrame, max_rows: int = 10_000
 ) -> tuple[np.ndarray, float]:
     """Fit on a (features, label) DataFrame. At most ``max_rows`` rows are
     collected (deterministic hash-ordered sample — see
     _collect_training_sample); sort by features for order-independence."""
-    pdf = _collect_training_sample(labeled, label_col, max_rows)
+    pdf = _collect_training_sample(labeled, "label", max_rows)
     X = np.stack(pdf["features"].to_numpy())
-    y = pdf[label_col].to_numpy().astype(np.float64)
+    y = pdf["label"].to_numpy().astype(np.float64)
     order = np.lexsort(X.T[::-1])
     return fit_logistic(X[order], y[order])
 
@@ -170,28 +169,22 @@ def score_with_model(
 # feedforward classifier, re-done without any DL framework)
 # --------------------------------------------------------------------------
 
-def fit_mlp(
-    X: np.ndarray,
-    y: np.ndarray,
-    hidden: int = 16,
-    iters: int = 500,
-    lr: float = 0.5,
-    seed: int = 42,
-) -> dict:
-    """Deterministic full-batch GD for Dense(hidden, relu) ->
-    Dense(1, sigmoid) with BCE loss. Seeded init, fixed iteration count —
-    identical inputs give bit-identical weights (the reference's Keras
-    feedforward net, deep_learning.py:158-187, minus
+def fit_mlp(X: np.ndarray, y: np.ndarray) -> dict:
+    """Deterministic full-batch GD for Dense(16, relu) ->
+    Dense(1, sigmoid) with BCE loss: seeded init, 500 iterations at
+    learning rate 0.5 — identical inputs give bit-identical weights (the
+    reference's Keras feedforward net, deep_learning.py:158-187, minus
     BatchNorm/Dropout/Adam, which are stochastic-training conveniences
     orthogonal to the scoring semantics — documented deviation)."""
-    rng = np.random.default_rng(seed)
+    hidden, lr = 16, 0.5
+    rng = np.random.default_rng(42)
     d = X.shape[1]
     W1 = rng.standard_normal((d, hidden)) * np.sqrt(2.0 / d)
     b1 = np.zeros(hidden)
     w2 = rng.standard_normal(hidden) * np.sqrt(1.0 / hidden)
     b2 = 0.0
     n = len(y)
-    for _ in range(iters):
+    for _ in range(500):
         h = np.maximum(X @ W1 + b1, 0.0)  # (n, hidden) relu
         z = h @ w2 + b2
         p = 1.0 / (1.0 + np.exp(-np.clip(z, -30, 30)))
@@ -214,21 +207,14 @@ def mlp_forward(X: np.ndarray, params: dict) -> np.ndarray:
     return 1.0 / (1.0 + np.exp(-np.clip(z, -30, 30)))
 
 
-def train_mlp_scorer(
-    labeled: DataFrame,
-    label_col: str = "label",
-    hidden: int = 16,
-    iters: int = 500,
-    seed: int = 42,
-    max_rows: int = 10_000,
-) -> dict:
+def train_mlp_scorer(labeled: DataFrame) -> dict:
     """Fit the MLP on a bounded, deterministic driver sample (same
-    collection contract as train_pair_scorer)."""
-    pdf = _collect_training_sample(labeled, label_col, max_rows)
+    collection contract as train_pair_scorer, at 10,000 rows)."""
+    pdf = _collect_training_sample(labeled, "label", 10_000)
     X = np.stack(pdf["features"].to_numpy())
-    y = pdf[label_col].to_numpy().astype(np.float64)
+    y = pdf["label"].to_numpy().astype(np.float64)
     order = np.lexsort(X.T[::-1])
-    return fit_mlp(X[order], y[order], hidden=hidden, iters=iters, seed=seed)
+    return fit_mlp(X[order], y[order])
 
 
 def score_with_mlp(pairs_with_features: DataFrame, params: dict) -> DataFrame:
@@ -257,12 +243,6 @@ def generate_training_pairs(
     text_col: str,
     strong_key,
     group_key,
-    per_block_pairs: int = 5,
-    neg_pairs: int = 2000,
-    group_block_limit: int = 100,
-    hi_sim: float = 90.0,
-    challenge_band: tuple[float, float] = (60.0, 80.0),
-    seed: int = 42,
     hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """(id1, id2, label, tier) labeled training pairs, three tiers
@@ -272,23 +252,23 @@ def generate_training_pairs(
     * ``pos_key`` — pairs inside a shared non-empty ``strong_key`` block
       (the reference's domain/phone exact-agreement positives): members
       hash-ordered per block, consecutive pairs taken, capped at
-      ``per_block_pairs`` per block. label = 1.
+      5 per block. label = 1.
     * ``pos_sim`` / ``challenging`` — pairs inside ``group_key`` blocks
-      of size <= ``group_block_limit`` (the reference skips very large
-      prefix groups), scored with token_sort_ratio: > ``hi_sim`` is a
-      positive; inside ``challenge_band`` is a challenging pair whose
-      label is the pair-hash parity (the reference flips a coin —
-      np.random.choice([0,1]); hash parity keeps the 50/50 odds but is
-      reproducible under any partitioning). Scoring uses the batch DP
-      kernel, zero per-row Python.
+      of size <= 100 (the reference skips very large prefix groups),
+      scored with token_sort_ratio: > 90 is a positive; inside [60, 80]
+      is a challenging pair whose label is the pair-hash parity (the
+      reference flips a coin — np.random.choice([0,1]); hash parity keeps
+      the 50/50 odds but is reproducible under any partitioning). Scoring
+      uses the batch DP kernel, zero per-row Python.
     * ``neg`` — cross-block pairs with DIFFERENT strong keys and
       different 3-char text prefixes (the reference's negative
       heuristic), built by aligning hash-bucketed row numbers (bucket b
       row i pairs with bucket b+1 row i) — a distributed, seeded
-      stand-in for its random index draws, capped at ~``neg_pairs``.
+      stand-in for its random index draws, capped at ~2000.
 
-    Everything is deterministic (seeded hashes, no RNG) and every stage
-    is a bounded window/join — no driver-side loops or collects.
+    Everything is deterministic (hashes salted with 42 and 43, no RNG)
+    and every stage is a bounded window/join — no driver-side loops or
+    collects.
 
     ``hash_mode`` picks the shuffle hash for the block ordering and the
     negative-tier bucketing: ``"xxhash64"`` (default, the scale path) or
@@ -319,7 +299,7 @@ def generate_training_pairs(
 
     # --- tier 1: strong-key positives (chain pairs, capped per block)
     wk = Window.partitionBy("_sk").orderBy(
-        _shash(F.col("_id"), seed), F.col("_id")
+        _shash(F.col("_id"), 42), F.col("_id")
     )
     keyed = base.filter(
         F.col("_sk").isNotNull() & (F.length("_sk") > 0)
@@ -327,7 +307,7 @@ def generate_training_pairs(
     nxt = F.lead("_id").over(wk)
     pos_key = (
         keyed.withColumn("_next", nxt)
-        .filter(F.col("_next").isNotNull() & (F.col("_rn") <= per_block_pairs))
+        .filter(F.col("_next").isNotNull() & (F.col("_rn") <= 5))
         .select(
             F.least("_id", "_next").alias("id1"),
             F.greatest("_id", "_next").alias("id2"),
@@ -341,7 +321,7 @@ def generate_training_pairs(
     grouped = (
         base.filter(F.col("_gk").isNotNull() & (F.length("_gk") > 0))
         .withColumn("_bn", F.count(F.lit(1)).over(gw))
-        .filter((F.col("_bn") >= 2) & (F.col("_bn") <= group_block_limit))
+        .filter((F.col("_bn") >= 2) & (F.col("_bn") <= 100))
     )
     ga = grouped.select(
         "_gk", F.col("_id").alias("id1"), F.col("_txt").alias("_t1")
@@ -356,15 +336,14 @@ def generate_training_pairs(
             "_sim", token_sort_ratio_udf()(F.col("_t1"), F.col("_t2"))
         )
     )
-    lo, hi_band = challenge_band
     # one pass over the scored pairs: tagging both tiers in a single
     # select keeps exactly ONE ArrowEvalPython (DP kernel) in the plan —
     # two separate filter branches would each re-evaluate the UDF over
     # every grouped pair
     tier_tag = (
-        F.when(F.col("_sim") > hi_sim, F.lit("pos_sim"))
+        F.when(F.col("_sim") > 90.0, F.lit("pos_sim"))
         .when(
-            (F.col("_sim") >= lo) & (F.col("_sim") <= hi_band),
+            (F.col("_sim") >= 60.0) & (F.col("_sim") <= 80.0),
             F.lit("challenging"),
         )
     )
@@ -377,7 +356,7 @@ def generate_training_pairs(
             F.when(F.col("tier") == "pos_sim", F.lit(1))
             .otherwise(
                 F.pmod(
-                    F.xxhash64(F.col("id1"), F.col("id2"), F.lit(seed)),
+                    F.xxhash64(F.col("id1"), F.col("id2"), F.lit(42)),
                     F.lit(2),
                 ).cast("int")
             )
@@ -388,13 +367,13 @@ def generate_training_pairs(
 
     # --- tier 3: negatives from aligned hash buckets
     nb = 64
-    per_bucket = max(1, -(-neg_pairs // nb))  # ceil
+    per_bucket = -(-2000 // nb)  # ceil
     bw = Window.partitionBy("_bkt").orderBy(
-        _shash(F.col("_id"), seed + 1), F.col("_id")
+        _shash(F.col("_id"), 43), F.col("_id")
     )
     bucketed = (
         base.withColumn(
-            "_bkt", F.pmod(_shash(F.col("_id"), seed), F.lit(nb))
+            "_bkt", F.pmod(_shash(F.col("_id"), 42), F.lit(nb))
         )
         .withColumn("_rn", F.row_number().over(bw))
         .filter(F.col("_rn") <= per_bucket)

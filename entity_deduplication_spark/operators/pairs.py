@@ -15,17 +15,17 @@ from pyspark.sql.window import Window
 from entity_deduplication_spark.sources.io import stage
 
 
-def canonicalize_pairs(df: DataFrame, id1: str = "id1", id2: str = "id2") -> DataFrame:
+def canonicalize_pairs(df: DataFrame) -> DataFrame:
     """Enforce id1 < id2 and drop duplicates/self-pairs."""
     out = (
-        df.withColumn("_a", F.least(F.col(id1), F.col(id2)))
-        .withColumn("_b", F.greatest(F.col(id1), F.col(id2)))
-        .drop(id1, id2)
-        .withColumnRenamed("_a", id1)
-        .withColumnRenamed("_b", id2)
-        .filter(F.col(id1) != F.col(id2))
+        df.withColumn("_a", F.least(F.col("id1"), F.col("id2")))
+        .withColumn("_b", F.greatest(F.col("id1"), F.col("id2")))
+        .drop("id1", "id2")
+        .withColumnRenamed("_a", "id1")
+        .withColumnRenamed("_b", "id2")
+        .filter(F.col("id1") != F.col("id2"))
     )
-    return out.dropDuplicates([id1, id2])
+    return out.dropDuplicates(["id1", "id2"])
 
 
 def attach_pair_features(
@@ -49,7 +49,6 @@ def attach_pair_features(
 def block_self_join_pairs(
     keyed: DataFrame,
     key_cols: list[str],
-    id_col: str = "clip_id",
     block_size_limit: int | Column = 1000,
     hot_threshold: int = 256,
     salt_buckets: int = 16,
@@ -57,7 +56,7 @@ def block_self_join_pairs(
 ) -> DataFrame:
     """All unordered pairs within each block key, skew-aware.
 
-    ``keyed``: DataFrame with ``key_cols`` + ``id_col``.
+    ``keyed``: DataFrame with ``key_cols`` + ``clip_id``.
 
     Strategy (replaces the reference's block-size drop/sample,
     deterministic_feature.py:852-918, losslessly up to ``block_size_limit``):
@@ -113,7 +112,7 @@ def block_self_join_pairs(
     policy = on_oversize if isinstance(on_oversize, Column) else F.lit(on_oversize)
     # size, rank and successor share one partition/order spec, so Spark
     # computes all three in one Window operator (one exchange, one sort)
-    w = Window.partitionBy(*key_cols).orderBy(id_col)
+    w = Window.partitionBy(*key_cols).orderBy("clip_id")
     # Materialize the sized block table ONCE: it feeds up to five plan
     # subtrees (chain branch, cold self-join a/b, hot salted join a/b),
     # and Spark would re-evaluate the whole upstream banding chain
@@ -127,7 +126,7 @@ def block_self_join_pairs(
             ),
         )
         .withColumn("_rn", F.row_number().over(w))
-        .withColumn("_next", F.lead(F.col(id_col)).over(w))
+        .withColumn("_next", F.lead(F.col("clip_id")).over(w))
     )
     bn = F.col("_bn")
     # The rule is evaluated lazily after the stage, so a raise surfaces in
@@ -169,8 +168,8 @@ def block_self_join_pairs(
     paired = routed.filter((F.col("_route") == "pair") & (bn >= 2))
 
     def _pairs(part: DataFrame) -> DataFrame:
-        a = part.select(*key_cols, F.col(id_col).alias("id1"))
-        b = part.select(*key_cols, F.col(id_col).alias("id2"))
+        a = part.select(*key_cols, F.col("clip_id").alias("id1"))
+        b = part.select(*key_cols, F.col("clip_id").alias("id2"))
         return (
             a.join(b, on=key_cols)
             .filter(F.col("id1") < F.col("id2"))
@@ -181,12 +180,12 @@ def block_self_join_pairs(
 
     s = salt_buckets
     hot = paired.filter(bn > hot_threshold)
-    left = hot.withColumn("_salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(s)))
+    left = hot.withColumn("_salt", F.pmod(F.xxhash64(F.col("clip_id")), F.lit(s)))
     right = hot.withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(s - 1))))
     hot_pairs = (
-        left.select(*key_cols, "_salt", F.col(id_col).alias("id1"))
+        left.select(*key_cols, "_salt", F.col("clip_id").alias("id1"))
         .join(
-            right.select(*key_cols, "_salt", F.col(id_col).alias("id2")),
+            right.select(*key_cols, "_salt", F.col("clip_id").alias("id2")),
             on=[*key_cols, "_salt"],
         )
         .filter(F.col("id1") < F.col("id2"))
@@ -194,8 +193,8 @@ def block_self_join_pairs(
     )
 
     chain_pairs = routed.filter(
-        (F.col("_route") == "chain") & (F.col("_next") > F.col(id_col))
-    ).select(F.col(id_col).alias("id1"), F.col("_next").alias("id2"))
+        (F.col("_route") == "chain") & (F.col("_next") > F.col("clip_id"))
+    ).select(F.col("clip_id").alias("id1"), F.col("_next").alias("id2"))
 
     return (
         cold_pairs.unionByName(hot_pairs)
@@ -204,10 +203,9 @@ def block_self_join_pairs(
     )
 
 
-def chain_edges_within_block(
-    keyed: DataFrame, key_cols: list[str], id_col: str = "clip_id"
-) -> DataFrame:
-    """Linear chain edges (consecutive members by id) within each block.
+def chain_edges_within_block(keyed: DataFrame, key_cols: list[str]) -> DataFrame:
+    """Linear chain edges (consecutive members by ``clip_id``) within each
+    block.
 
     For *exact-equality* blocks no pairwise verification is needed, so a
     chain yields the identical connected components as the full clique
@@ -218,10 +216,10 @@ def chain_edges_within_block(
     A pair shared by two blocks comes out twice; callers dedup the union
     of their chain families once.
     """
-    w = Window.partitionBy(*key_cols).orderBy(id_col)
-    nxt = F.lead(F.col(id_col)).over(w)
+    w = Window.partitionBy(*key_cols).orderBy("clip_id")
+    nxt = F.lead(F.col("clip_id")).over(w)
     return (
         keyed.withColumn("_next", nxt)
         .filter(F.col("_next").isNotNull())
-        .select(F.col(id_col).alias("id1"), F.col("_next").alias("id2"))
+        .select(F.col("clip_id").alias("id1"), F.col("_next").alias("id2"))
     )

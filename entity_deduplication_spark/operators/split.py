@@ -29,11 +29,10 @@ def split_oversized_clusters(
     clusters: DataFrame,
     edges: DataFrame,
     max_size: int = 50,
-    node_id: str = "clip_id",
 ) -> DataFrame:
-    """(node, cluster_id) with every cluster <= max_size (best effort).
+    """(clip_id, cluster_id) with every cluster <= max_size (best effort).
 
-    ``clusters``: (node_id, cluster_id); ``edges``: (id1, id2, score).
+    ``clusters``: (clip_id, cluster_id); ``edges``: (id1, id2, score).
     Nodes of small clusters keep their assignment; oversized components
     are re-clustered on progressively stronger edges.
     """
@@ -41,27 +40,25 @@ def split_oversized_clusters(
     flagged = clusters.join(sizes, "cluster_id").withColumn(
         "oversized", F.col("sz") > max_size
     )
-    keep = flagged.filter(~F.col("oversized")).select(node_id, "cluster_id")
-    big_nodes = flagged.filter(F.col("oversized")).select(node_id)
+    keep = flagged.filter(~F.col("oversized")).select("clip_id", "cluster_id")
+    big_nodes = flagged.filter(F.col("oversized")).select("clip_id")
     if big_nodes.isEmpty():
         return clusters
 
     # consumed once per ladder rung
     big_edges = stage(
-        attach_pair_features(edges, big_nodes, [], node_id).select(
+        attach_pair_features(edges, big_nodes, []).select(
             "id1", "id2", "score"
         )
     )
     result = None
     for thr in _THRESHOLD_LADDER:
         strong = big_edges.filter(F.col("score") >= thr)
-        sub = connected_components(
-            strong.select("id1", "id2"), nodes=big_nodes, node_id=node_id
-        )
+        sub = connected_components(strong.select("id1", "id2"), nodes=big_nodes)
         sub_sizes = sub.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("sz"))
         still_big = sub.join(sub_sizes, "cluster_id").filter(F.col("sz") > max_size)
         if still_big.isEmpty():
             result = sub
             break
         result = sub  # keep best-so-far; next rung tightens further
-    return keep.unionByName(result.select(node_id, "cluster_id"))
+    return keep.unionByName(result.select("clip_id", "cluster_id"))

@@ -7,9 +7,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def cluster_size_histogram(clusters: DataFrame, cluster_col: str = "cluster_id") -> DataFrame:
+def cluster_size_histogram(clusters: DataFrame) -> DataFrame:
     """7-bin cluster-size histogram (reference utils.py:217-225)."""
-    sizes = clusters.groupBy(cluster_col).agg(F.count(F.lit(1)).alias("sz"))
+    sizes = clusters.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("sz"))
     bucket = (
         F.when(F.col("sz") == 1, "1")
         .when(F.col("sz") == 2, "2")
@@ -27,10 +27,10 @@ def cluster_size_histogram(clusters: DataFrame, cluster_col: str = "cluster_id")
     )
 
 
-def dedup_metrics(clusters: DataFrame, cluster_col: str = "cluster_id") -> DataFrame:
+def dedup_metrics(clusters: DataFrame) -> DataFrame:
     """One-row metrics frame: totals, dedup rate, cluster-size stats
     (reference utils.py:192-228)."""
-    sizes = clusters.groupBy(cluster_col).agg(F.count(F.lit(1)).alias("sz"))
+    sizes = clusters.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("sz"))
     return sizes.agg(
         F.sum("sz").alias("total_records"),
         F.count(F.lit(1)).alias("unique_entities"),
@@ -43,10 +43,7 @@ def dedup_metrics(clusters: DataFrame, cluster_col: str = "cluster_id") -> DataF
 
 
 def pair_confusion(
-    assign_a: DataFrame,
-    assign_b: DataFrame,
-    id_col: str = "clip_id",
-    cluster_col: str = "cluster_id",
+    assign_a: DataFrame, assign_b: DataFrame, id_col: str = "clip_id"
 ) -> DataFrame:
     """Pair-counting confusion between two clusterings of the same ids —
     one row: (n, ss, sd, ds, dd) over all C(n,2) id pairs where s/d =
@@ -62,10 +59,10 @@ def pair_confusion(
     from entity_deduplication_spark.sources.io import stage
 
     j = assign_a.select(
-        F.col(id_col).alias("_id"), F.col(cluster_col).alias("_ca")
+        F.col(id_col).alias("_id"), F.col("cluster_id").alias("_ca")
     ).join(
         assign_b.select(
-            F.col(id_col).alias("_id"), F.col(cluster_col).alias("_cb")
+            F.col(id_col).alias("_id"), F.col("cluster_id").alias("_cb")
         ),
         "_id",
     )
@@ -116,15 +113,12 @@ def pair_confusion(
 
 
 def rand_index(
-    assign_a: DataFrame,
-    assign_b: DataFrame,
-    id_col: str = "clip_id",
-    cluster_col: str = "cluster_id",
+    assign_a: DataFrame, assign_b: DataFrame, id_col: str = "clip_id"
 ) -> DataFrame:
     """One row (n, agree_pairs, total_pairs, rand_index, adjusted_rand) —
     exact (not sampled) pair-counting agreement between two clusterings;
     reference A7/A8 (utils.py:273-331) as a distributed operator."""
-    pc = pair_confusion(assign_a, assign_b, id_col, cluster_col)
+    pc = pair_confusion(assign_a, assign_b, id_col)
     total = (F.col("n").cast("double") * (F.col("n") - 1) / 2).cast("long")
     agree = F.col("ss") + F.col("dd")
     # ARI = 2(ss*dd - sd*ds) / ((ss+sd)(sd+dd) + (ss+ds)(ds+dd)); 1.0 when

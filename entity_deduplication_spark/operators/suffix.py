@@ -101,7 +101,6 @@ def substring_run_pairs(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     cand = block_self_join_pairs(
         blocks,
         key_cols=["fp"],
-        id_col="clip_id",
         block_size_limit=cfg.block_size_limit,
     )
     feat = attach_pair_features(cand, signatures, ["transcript_norm"])

@@ -34,6 +34,12 @@ _SIG_COLS = [
     "simhash",
 ]
 
+# evidence weights, shaped after the reference's feature-weight table
+# (deterministic_feature.py:80-102) re-targeted to audio
+TRANSCRIPT_WEIGHT = 0.9
+AUDIO_WEIGHT = 0.8
+SUBSTRING_RUN_WEIGHT = 0.8
+
 
 def score_pairs(feat: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Evidence-weighted score per pair -> (id1, id2, <evidence cols>, score).
@@ -49,15 +55,9 @@ def score_pairs(feat: DataFrame, cfg: DedupConfig) -> DataFrame:
       audio-Jaccard, SimHash-Hamming similarity and exact substring run;
     * each additional strong supporting signal adds +0.02, capped at 0.99.
     """
-    w = cfg.weights
     t_j = jaccard(F.col("shingles_1"), F.col("shingles_2"))
-    # degenerate-signature guard (see DedupConfig.min_audio_shingles)
-    a_ok = (F.size("audio_shingles_1") >= cfg.min_audio_shingles) & (
-        F.size("audio_shingles_2") >= cfg.min_audio_shingles
-    )
-    a_j = F.when(
-        a_ok, jaccard(F.col("audio_shingles_1"), F.col("audio_shingles_2"))
-    ).otherwise(F.lit(0.0))
+    # a degenerate audio set is already empty (plans.pipeline.build_signatures)
+    a_j = jaccard(F.col("audio_shingles_1"), F.col("audio_shingles_2"))
     s_h = hamming_similarity(F.col("simhash_1"), F.col("simhash_2"))
 
     scored = feat.withColumn("transcript_jaccard", t_j)
@@ -96,13 +96,13 @@ def score_pairs(feat: DataFrame, cfg: DedupConfig) -> DataFrame:
 
     primary = F.greatest(
         family(F.col("transcript_jaccard"), cfg.jaccard_threshold,
-               w["transcript_jaccard"]),
+               TRANSCRIPT_WEIGHT),
         family(F.col("audio_jaccard"), cfg.audio_jaccard_threshold,
-               w["audio_jaccard"]),
+               AUDIO_WEIGHT),
         # SimHash approximates text Jaccard — supporting evidence only
         # (never clears base alone; the oracle has no simhash family)
         F.col("simhash_sim") * F.lit(base * 0.9),
-        F.when(strong_r, F.lit(base) + F.lit(0.05) * w["substring_run"]).otherwise(
+        F.when(strong_r, F.lit(base) + F.lit(0.05) * SUBSTRING_RUN_WEIGHT).otherwise(
             F.lit(0.0)
         ),
     )

@@ -58,6 +58,9 @@ def build_signatures(clips: DataFrame, cfg: DedupConfig) -> DataFrame:
     ``bands``/``audio_bands``. Both exact-key digests are NULL for an empty
     key — "both clips are empty" is not duplicate evidence (the pandas
     oracle skips empty keys too) — and every consumer reads NULL as none.
+    Likewise ``audio_shingles`` is empty, with no ``audio_bands``, for a
+    blob that does not decode and for a degenerate set of fewer than
+    ``cfg.min_audio_shingles`` shingles, so its audio Jaccard is 0.
     """
     from entity_deduplication_spark.audio.decode import audio_signature_udf
     from entity_deduplication_spark.functions.hashing import text_signature_udf
@@ -72,7 +75,8 @@ def build_signatures(clips: DataFrame, cfg: DedupConfig) -> DataFrame:
         cfg.minhash_k,
         cfg.minhash_seed,
     )
-    no_bands = F.array().cast("array<bigint>")
+    empty = F.array().cast("array<bigint>")
+    audio_ok = F.size("_a.audio_shingles") >= cfg.min_audio_shingles
     sig = clips.select(
         "clip_id",
         normalize_text(F.col("transcript")).alias("transcript_norm"),
@@ -90,19 +94,21 @@ def build_signatures(clips: DataFrame, cfg: DedupConfig) -> DataFrame:
             F.length("transcript_norm") > 0, F.md5(F.col("transcript_norm"))
         ).alias("transcript_md5"),
         "shingles",
-        F.col("_a.audio_shingles").alias("audio_shingles"),
+        F.when(audio_ok, F.col("_a.audio_shingles"))
+        .otherwise(empty)
+        .alias("audio_shingles"),
         F.col("_t.simhash").alias("simhash"),
         F.when(
             F.size("shingles") > 0,
             band_keys(F.col("_t.minhash"), cfg.lsh_bands, cfg.lsh_rows),
         )
-        .otherwise(no_bands)
+        .otherwise(empty)
         .alias("bands"),
         F.when(
-            F.size("_a.audio_shingles") >= cfg.min_audio_shingles,
+            audio_ok,
             band_keys(F.col("_a.audio_minhash"), cfg.lsh_bands, cfg.lsh_rows),
         )
-        .otherwise(no_bands)
+        .otherwise(empty)
         .alias("audio_bands"),
         F.size(F.split(F.col("transcript_norm"), " ")).alias("n_words"),
     )
@@ -208,7 +214,6 @@ def candidate_pairs(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     pairs = block_self_join_pairs(
         unified,
         key_cols=["src", "band_idx", "band_key"],
-        id_col="clip_id",
         block_size_limit=F.when(is_fp, F.lit(cfg.fp_df_cap)).otherwise(
             F.lit(cfg.band_bucket_cap)
         ),

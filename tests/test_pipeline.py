@@ -186,6 +186,29 @@ def test_undecodable_audio_gives_no_audio_evidence(spark):
     assert got["truncated"]["bytes_md5"] == got["truncated_copy"]["bytes_md5"]
 
 
+def test_degenerate_audio_gives_no_audio_evidence(spark):
+    """Silence collapses to one audio shingle, so two unrelated silent
+    clips would be audio Jaccard 1.0: the signature stage empties a set
+    smaller than ``min_audio_shingles``, and verify rejects the pair."""
+    from entity_deduplication_spark.operators.verify import verified_edges
+
+    rows = [
+        (f"silent_{n}", encode_wav(np.zeros(n, dtype="float32"), 8000), _sentence(n))
+        for n in (1600, 2400)
+    ]
+    clips = spark.createDataFrame(
+        rows, "clip_id string, bytes binary, transcript string"
+    )
+    cfg = DedupConfig()
+    sig = build_signatures(clips, cfg)
+    for r in sig.select("audio_shingles", "audio_bands").collect():
+        assert r["audio_shingles"] == [] and r["audio_bands"] == []
+    pair = spark.createDataFrame(
+        [("silent_1600", "silent_2400")], "id1 string, id2 string"
+    )
+    assert verified_edges(pair, sig, cfg).count() == 0
+
+
 def test_checkpoint_stage_is_one_write_plus_lineage_row(spark, clips_1k, tmp_ckpt):
     """A fresh checkpointed stage runs its write's jobs plus one lineage
     append, and each stage's lineage row holds its table's row count."""
