@@ -115,20 +115,15 @@ def q_dedup_exact_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dedup_exact_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from entity_deduplication_spark.operators.canonical import elect_canonical
     from entity_deduplication_spark.operators.dedup import exact_dedup
 
     docs = _t(spark, sf_dir, "documents")
-    clustered = exact_dedup(docs, "doc_id", F.col("text")).join(docs, "doc_id")
-    w = Window.partitionBy("cluster_id").orderBy(
-        F.desc("n_chars"), F.asc("doc_id")
+    clustered = exact_dedup(docs, "doc_id", F.col("text")).join(
+        docs.select("doc_id", "n_chars"), "doc_id"
     )
-    return (
-        clustered.withColumn("rn", F.row_number().over(w))
-        .groupBy("cluster_id")
-        .agg(
-            F.count(F.lit(1)).alias("cluster_size"),
-            F.min(F.when(F.col("rn") == 1, F.col("doc_id"))).alias("canonical_doc_id"),
-        )
+    return elect_canonical(clustered, id_col="doc_id", order_col="n_chars").select(
+        "cluster_id", "cluster_size", F.col("doc_id").alias("canonical_doc_id")
     )
 
 

@@ -25,7 +25,7 @@ import time
 from entity_deduplication_spark.config import DedupConfig
 
 
-def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
+def parse_args(argv: list[str] | None) -> argparse.Namespace:
     p = argparse.ArgumentParser(prog="entity_deduplication_spark")
     p.add_argument("--input", required=True, help="clips parquet path / Iceberg table")
     p.add_argument("--output", required=True, help="output prefix (parquet dirs)")

@@ -74,7 +74,7 @@ def _perturb_noise(rng: np.random.Generator, pcm: np.ndarray, snr_db: float) -> 
 
 def generate_clips(
     n_clips: int,
-    seed: int = 42,
+    seed: int,
     dup_fraction: float = 0.30,
     id_offset: int = 0,
 ) -> tuple[pd.DataFrame, pd.DataFrame]:

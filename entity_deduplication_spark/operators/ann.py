@@ -26,7 +26,7 @@ from entity_deduplication_spark.operators.pairs import block_self_join_pairs
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    k: int = 10,
+    k: int,
 ) -> DataFrame:
     """Exact cosine top-k over ``embedding`` by ``vec_id``: (query_id,
     neighbor_id, cos_sim, rank).
@@ -98,10 +98,10 @@ def tune_rhp_bands(
 
 def rhp_band_keys(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    rows_per_band: int = 8,
-    n_bands: int = 8,
+    id_col: str,
+    vec_col: str,
+    rows_per_band: int,
+    n_bands: int,
 ) -> DataFrame:
     """(id, vec, band_keys array<bigint>) — one r-bit key per band.
 
@@ -148,9 +148,7 @@ def _banded(
     )
 
 
-def rhp_bucket_pairs(
-    df: DataFrame, n_planes: int = 32, bands: int = 4
-) -> DataFrame:
+def rhp_bucket_pairs(df: DataFrame, n_planes: int, bands: int) -> DataFrame:
     """Candidate pairs of ``vec_id``s whose ``embedding`` sign signatures
     agree on >= one band of bits."""
     banded = _banded(df, "vec_id", "embedding", n_planes, bands).select(
@@ -166,7 +164,8 @@ def lsh_topk(
     queries: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    k: int = 10,
+    *,
+    k: int,
     n_planes: int = 32,
     bands: int = 4,
 ) -> DataFrame:

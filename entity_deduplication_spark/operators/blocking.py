@@ -78,9 +78,9 @@ def simhash_block_pairs(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
 def block_stats(
     df: DataFrame,
     key_cols: list,
-    stoplist: dict | None = None,
+    stoplist: dict,
 ) -> DataFrame:
-    """Per-block (key..., n_ids, n_pairs) with optional stop-listed keys.
+    """Per-block (key..., n_ids, n_pairs) without stop-listed keys.
 
     The reference's email-domain block drops generic-provider domains
     before blocking (B4, deterministic_feature.py:365-377 stoplist
@@ -89,7 +89,7 @@ def block_stats(
     metric the reference logs per block (A6).
     """
     out = df
-    for col, values in (stoplist or {}).items():
+    for col, values in stoplist.items():
         out = out.filter(~F.col(col).isin(list(values)))
     return out.groupBy(*key_cols).agg(
         F.count(F.lit(1)).alias("n_ids"),
@@ -103,7 +103,7 @@ def key_equality_pairs(
     df: DataFrame,
     id_col: str,
     block_key,
-    key_name: str = "block_key",
+    key_name: str,
 ) -> DataFrame:
     """(id1, id2, <key_name>) pairs sharing an equality block key — the
     thin composite-recipe wrapper (reference B2/B3/B10-B13/B15 are all
@@ -121,7 +121,7 @@ def key_equality_pairs(
 def sorted_neighborhood_pairs(
     df: DataFrame,
     sort_col: str,
-    window: int = 20,
+    window: int,
     id_col: str = "clip_id",
 ) -> DataFrame:
     """Sorted-neighborhood blocking (reference B16,

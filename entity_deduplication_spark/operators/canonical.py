@@ -2,28 +2,17 @@
 
 Reference: utils.py:119-189 — most-complete row wins per cluster, plus
 ``cluster_size`` and member ``record_ids`` metadata (utils.py:152-153).
-Here: every per-cluster pick (the canonical row, a field's mode, the most
-detailed value) is one ``min_by`` aggregation over a deterministic order
-key, and the election computes the metadata in the same ``groupBy`` — one
-shuffle, no window, no join-back, no driver-side loops.
+Here the caller names the numeric rank column; every per-cluster pick
+(the canonical row, a field's mode, the most detailed value) is one
+``min_by`` aggregation over a deterministic order key, and the election
+computes the metadata in the same ``groupBy`` — one shuffle, no window,
+no join-back, no driver-side loops.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def completeness(df: DataFrame, cols: list[str]) -> F.Column:
-    """Per-row count of non-null/non-empty fields (reference utils.py:143-148)."""
-    score = F.lit(0)
-    for c in cols:
-        col = F.col(c)
-        present = col.isNotNull()
-        if dict(df.dtypes).get(c) == "string":
-            present = present & (F.length(col) > 0)
-        score = score + present.cast("int")
-    return score
 
 
 def _first(value: Column, desc: Column, asc: Column) -> Column:
@@ -35,25 +24,23 @@ def _first(value: Column, desc: Column, asc: Column) -> Column:
 def elect_canonical(
     clustered: DataFrame,
     id_col: str = "clip_id",
-    order_col: str | None = None,
+    *,
+    order_col: str,
 ) -> DataFrame:
     """One representative row per ``cluster_id`` + cluster_size + record_ids.
 
-    Ordering: completeness of the other columns desc (or the numeric
-    ``order_col`` desc, NULLs last), then id asc — deterministic under any
-    parallelism. Output: ``cluster_id``, the winner's other columns plus
-    ``_completeness``, then ``cluster_size`` and ``record_ids``.
+    Ordering: the numeric ``order_col`` desc (NULLs last), then id asc —
+    deterministic under any parallelism. The reference ranks by a
+    completeness score (utils.py:143-148); a caller that wants one passes
+    it as ``order_col``. Output: ``cluster_id``, the winner's other columns
+    plus ``_completeness`` (the rank value), then ``cluster_size`` and
+    ``record_ids``.
 
     Ids must be unique: a cluster that lists an id twice fails the job
     that runs the election, naming the cluster and the repeat count,
     instead of over-counting ``cluster_size``.
     """
-    if order_col is not None:
-        rank_expr = F.col(order_col)
-    else:
-        cols = [c for c in clustered.columns if c not in ("cluster_id", id_col)]
-        rank_expr = completeness(clustered, cols)
-    ranked = clustered.withColumn("_completeness", rank_expr)
+    ranked = clustered.withColumn("_completeness", F.col(order_col))
     rest = [c for c in ranked.columns if c != "cluster_id"]
     size = F.col("cluster_size")
     repeats = size - F.size(F.array_distinct("record_ids"))
@@ -110,7 +97,7 @@ def backfill_canonical(
     canonical: DataFrame,
     clustered: DataFrame,
     mode_cols: list[str],
-    detail_cols: list[str] | None = None,
+    detail_cols: list[str],
 ) -> DataFrame:
     """Fill the elected canonical row's missing/empty fields.
 
@@ -129,7 +116,7 @@ def backfill_canonical(
                 F.col(f"mode_{c}"),
             ).otherwise(F.col(c))
             out = out.withColumn(c, filled).drop(f"mode_{c}")
-    for c in detail_cols or []:
+    for c in detail_cols:
         det = most_detailed(clustered, c)
         out = out.join(det, "cluster_id", "left")
         filled = F.when(

@@ -118,13 +118,13 @@ def _union_find_labels(e: DataFrame) -> DataFrame:
 
 def connected_components(
     edges: DataFrame,
-    nodes: DataFrame | None = None,
+    nodes: DataFrame,
     small_graph_edges: int = 2_000_000,
 ) -> DataFrame:
     """(clip_id, cluster_id) for every node; cluster_id = min member id.
 
-    ``edges``: (id1, id2) undirected; ``nodes``: optional full ``clip_id``
-    table so unmatched records become singleton clusters (reference
+    ``edges``: (id1, id2) undirected; ``nodes``: the full ``clip_id``
+    table, so unmatched records become singleton clusters (reference
     utils.py:106-111).
     """
     e, sig = _staged(
@@ -150,10 +150,8 @@ def connected_components(
             F.col("u").alias("clip_id"),
             F.least(F.col("u"), F.col("_mn")).alias("cluster_id"),
         )
-    if nodes is not None:
-        all_nodes = nodes.select("clip_id").distinct()
-        labels = all_nodes.join(labels, "clip_id", "left").select(
-            "clip_id",
-            F.coalesce(F.col("cluster_id"), F.col("clip_id")).alias("cluster_id"),
-        )
-    return labels
+    all_nodes = nodes.select("clip_id").distinct()
+    return all_nodes.join(labels, "clip_id", "left").select(
+        "clip_id",
+        F.coalesce(F.col("cluster_id"), F.col("clip_id")).alias("cluster_id"),
+    )

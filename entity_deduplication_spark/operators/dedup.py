@@ -71,8 +71,8 @@ def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 3,
-    threshold: float = 0.5,
+    n: int,
+    threshold: float,
     max_gram_doc_freq: int = 10_000,
 ) -> DataFrame:
     """(id1, id2, jaccard) for word-n-gram Jaccard >= threshold.
@@ -156,7 +156,7 @@ def ngram_jaccard_pairs(
 
 
 def ngram_jaccard_clusters(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, threshold: float = 0.5
+    df: DataFrame, id_col: str, text_col: str, n: int, threshold: float
 ) -> DataFrame:
     """Connected components over the exact n-gram Jaccard pair graph."""
     pairs = ngram_jaccard_pairs(df, id_col, text_col, n, threshold)
@@ -217,7 +217,7 @@ def embedding_cosine_pairs(
     df: DataFrame,
     id_col: str,
     vec_col: str,
-    threshold: float = 0.95,
+    threshold: float,
     method: str = "auto",
     grid_chunks: int = 8,
     n_rows: int | None = None,

@@ -72,7 +72,7 @@ def levenshtein_sim_pairs(
     id_col: str,
     text_col: str,
     block_key: Column,
-    threshold: float = 0.7,
+    threshold: float,
 ) -> DataFrame:
     """(id1, id2, lev_sim) for blocked pairs with token-sorted Levenshtein
     similarity >= threshold; lev_sim = 1 - lev/max(len) rounded to 4 dp."""
@@ -94,7 +94,7 @@ def semantic_blend_pairs(
     text_col: str,
     vec_col: str,
     block_key: Column,
-    threshold: float = 0.35,
+    threshold: float,
     block_size_limit: int = 200,
 ) -> DataFrame:
     """(id1, id2, cos_sim, lev_sim, blended_sim) — the reference's V9

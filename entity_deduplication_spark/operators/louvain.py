@@ -123,7 +123,7 @@ def louvain_communities(edges: list[tuple]) -> dict:
 def louvain_split_oversized(
     clusters: DataFrame,
     edges: DataFrame,
-    max_size: int = 50,
+    max_size: int,
     max_edges_per_component: int = 2_000_000,
 ) -> DataFrame:
     """(clip_id, cluster_id) with every cluster > max_size re-partitioned

@@ -49,7 +49,7 @@ def attach_pair_features(
 def block_self_join_pairs(
     keyed: DataFrame,
     key_cols: list[str],
-    block_size_limit: int | Column = 1000,
+    block_size_limit: int | Column,
     hot_threshold: int = 256,
     salt_buckets: int = 16,
     on_oversize: str | Column = "truncate",

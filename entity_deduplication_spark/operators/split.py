@@ -28,7 +28,7 @@ _THRESHOLD_LADDER = [0.8, 0.85, 0.9, 0.95, 1.0]
 def split_oversized_clusters(
     clusters: DataFrame,
     edges: DataFrame,
-    max_size: int = 50,
+    max_size: int,
 ) -> DataFrame:
     """(clip_id, cluster_id) with every cluster <= max_size (best effort).
 

@@ -282,9 +282,7 @@ class DedupPipeline:
         )
         return self.run_from_signatures(sig, resume=resume)
 
-    def run_from_signatures(
-        self, sig: DataFrame, resume: bool = True
-    ) -> DedupResult:
+    def run_from_signatures(self, sig: DataFrame, resume: bool) -> DedupResult:
         """Block/verify/cluster an already-built signatures table.
 
         This is the batch re-cluster half of the streaming contract
@@ -313,6 +311,5 @@ class DedupPipeline:
             sig.select("clip_id", "transcript_norm", "n_words"), "clip_id"
         )
         canonical = elect_canonical(clustered, order_col="n_words")
-        metrics = dedup_metrics(clusters)
-        self.ckpt.write_metrics("final", metrics)
+        metrics = self.ckpt.write_metrics("final", dedup_metrics(clusters))
         return DedupResult(sig, cand, edges, clusters, canonical, metrics)

@@ -13,7 +13,7 @@ from pyspark.sql import SparkSession
 
 
 def get_spark(
-    app_name: str = "entity_deduplication_spark",
+    app_name: str,
     cores: int | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
@@ -65,11 +65,7 @@ def get_spark(
         # — ~16-byte pair rows fanning out to ms of compute each), so the
         # byte heuristic collapses them to 1-4 tasks. 64k keeps such
         # stages wide; on real data (partitions >> 1m) it is a no-op.
-        # Parameterised for cluster tuning.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_MIN_COALESCED_PARTITION", "64k"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # apply AQE when materializing persisted plans too (off by default
         # only to keep cached output partitioning stable): on a cluster

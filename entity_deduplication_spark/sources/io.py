@@ -55,7 +55,7 @@ def stage(df: DataFrame) -> DataFrame:
     return out
 
 
-def spread_partitions(df: DataFrame, key: str | None = None) -> DataFrame:
+def spread_partitions(df: DataFrame, key: str) -> DataFrame:
     """Repartition a source whose scan yields fewer partitions than the
     session's parallelism — a small parquet file is a single split, so an
     expensive downstream stage (sketch UDFs, explode+window chains) would
@@ -65,14 +65,14 @@ def spread_partitions(df: DataFrame, key: str | None = None) -> DataFrame:
     Scale-adaptive by construction: when the scan already yields >=
     defaultParallelism partitions (any non-trivial input) this is a no-op
     and no shuffle is added; only under-split inputs pay one small
-    round-trip. ``key`` makes the placement deterministic (hash of the id
-    column) rather than round-robin, which also skips round-robin's
+    round-trip. Rows are placed by a hash of the ``key`` column, so the
+    placement is deterministic and needs no round-robin
     sort-before-repartition pass."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
-    return df.repartition(target, key) if key else df.repartition(target)
+    return df.repartition(target, key)
 
 
 class CheckpointManager:
@@ -131,10 +131,19 @@ class CheckpointManager:
         self._append("_lineage", lineage)
         return self.spark.read.schema(df.schema).parquet(path)
 
-    def write_metrics(self, stage: str, metrics: DataFrame) -> None:
+    def write_metrics(self, name: str, metrics: DataFrame) -> DataFrame:
+        """Append ``metrics`` to ``_metrics`` under ``name`` and return it.
+
+        With a checkpoint dir the frame is computed once, by :func:`stage`,
+        and both the append and the returned frame read the staged rows;
+        without one it is returned as given, still lazy, so a caller that
+        never reads it pays nothing.
+        """
         if not self.base_dir:
-            return
-        self._append("_metrics", metrics.withColumn("stage", F.lit(stage)))
+            return metrics
+        staged = stage(metrics)
+        self._append("_metrics", staged.withColumn("stage", F.lit(name)))
+        return staged
 
     def _append(self, table: str, df: DataFrame) -> None:
         df.withColumn("run_ts", F.current_timestamp()).write.mode(

@@ -1,7 +1,9 @@
 """Every option has a caller: each defaulted parameter of a public engine
 function is bound by some call in the repository, and each ``DedupConfig``
 field is set by some ``DedupConfig(...)`` call. A value no caller sets is a
-constant (``DedupConfig`` keeps those as ``ClassVar`` settings).
+constant (``DedupConfig`` keeps those as ``ClassVar`` settings). Every
+default is also taken by some call: a parameter every call binds is
+required.
 
 Pure ``ast``, no Spark. A call is matched to a definition by its name; it
 binds a parameter by keyword or by position, and a call that unpacks
@@ -119,3 +121,27 @@ def test_every_dedup_config_field_is_set_by_some_call():
             set_by_calls.update(fields[: len(call.args)])
     unset = [f for f in fields if f not in set_by_calls]
     assert fields and not unset, f"DedupConfig fields no call sets: {unset}"
+
+
+def test_every_default_is_taken_by_some_call():
+    """A default exists only where some call omits its parameter: a call
+    that unpacks ``*args`` or ``**kwargs`` counts as binding everything,
+    so it takes no default."""
+    calls = defaultdict(list)
+    for name, call in _calls():
+        if None not in (k.arg for k in call.keywords) and not any(
+            isinstance(a, ast.Starred) for a in call.args
+        ):
+            calls[name].append(
+                ({k.arg for k in call.keywords}, len(call.args))
+            )
+    never_taken = [
+        f"{name}({param})"
+        for name, params in _public_defaults()
+        for param, position in params
+        if not any(
+            param not in keywords and (position is None or position >= n_args)
+            for keywords, n_args in calls[name]
+        )
+    ]
+    assert not never_taken, f"defaults no call takes: {never_taken}"

@@ -323,3 +323,19 @@ def test_checkpoint_uri_dir_is_reused_on_resume(
     assert (first, second, len(calls)) == (10, 10, 1)
     assert os.path.exists(os.path.join(tmp_ckpt, "ids", "_SUCCESS"))
     assert os.listdir(tmp_path) == []
+
+
+def test_checkpointed_metrics_are_computed_once(spark, result_1k, tmp_ckpt):
+    """With a checkpoint dir the run's metrics frame is staged once: a
+    read of ``res.metrics`` runs at most one job, and it holds the row
+    appended to ``_metrics``."""
+    res = DedupPipeline(spark, checkpoint_dir=tmp_ckpt).run_from_signatures(
+        result_1k.signatures.limit(100), resume=False
+    )
+    before = _last_job_id(spark)
+    row = res.metrics.first()
+    assert _last_job_id(spark) - before <= 1
+    (stored,) = spark.read.parquet(os.path.join(tmp_ckpt, "_metrics")).collect()
+    assert stored["stage"] == "final"
+    assert {c: stored[c] for c in res.metrics.columns} == row.asDict()
+    assert row["total_records"] == 100
