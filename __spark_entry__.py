@@ -346,12 +346,11 @@ def q_top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_blocking_prefix_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Name-prefix blocking stats (reference B7): block sizes + pair counts."""
+    from entity_deduplication_spark.operators.blocking import block_stats
+
     cust = _t(spark, sf_dir, "customer")
     keyed = cust.select(F.substring("c_name", 1, 16).alias("block_key"), "c_custkey")
-    return keyed.groupBy("block_key").agg(
-        F.count(F.lit(1)).alias("n_ids"),
-        (F.count(F.lit(1)) * (F.count(F.lit(1)) - 1) / 2).cast("long").alias("n_pairs"),
-    )
+    return block_stats(keyed, ["block_key"], stoplist={})
 
 
 def q_sorted_neighborhood_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -496,14 +495,16 @@ def q_agreement_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         ngram_jaccard_clusters,
     )
     from entity_deduplication_spark.operators.stats import rand_index
+    from entity_deduplication_spark.sources.io import stage
 
     docs = _t(spark, sf_dir, "documents")
+    # each clustering feeds two matrix cells: build it once
     strategies = {
-        "exact": exact_dedup(docs, "doc_id", F.col("text")),
-        "ngram": ngram_jaccard_clusters(
-            docs, "doc_id", "text", NGRAM_N, NGRAM_THRESHOLD
+        "exact": stage(exact_dedup(docs, "doc_id", F.col("text"))),
+        "ngram": stage(
+            ngram_jaccard_clusters(docs, "doc_id", "text", NGRAM_N, NGRAM_THRESHOLD)
         ),
-        "minhash_lsh": minhash_lsh_dedup(docs, "doc_id", "text"),
+        "minhash_lsh": stage(minhash_lsh_dedup(docs, "doc_id", "text")),
     }
     names = sorted(strategies)
     out = None

@@ -170,9 +170,7 @@ def generate_clips(
         truth.append(dict(clip_id=cid, true_cluster_id=cid))
 
     clips = pd.DataFrame(rows)
-    clips["dur_ms"] = (
-        clips["bytes"].map(len).astype("int64") * 0 + clips["dur_ms"]
-    ).astype("int32")
+    clips["dur_ms"] = clips["dur_ms"].astype("int32")
     clips["sr_hz"] = clips["sr_hz"].astype("int32")
     return clips, pd.DataFrame(truth)
 

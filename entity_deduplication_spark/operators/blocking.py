@@ -6,71 +6,94 @@ plan ending in a skew-aware self-equi-join (operators.pairs). Strategies:
 
 * exact-key blocks (B1/B6 analogues: bytes digest, normalized transcript),
 * MinHash-LSH band blocks (B14 — generalizes B8 token / B9 trigram blocks),
-* SimHash prefix blocks with bit-rotations (Hamming-LSH),
+* SimHash block-combination keys (Hamming-LSH),
 * sorted-neighborhood windows (B16).
+
+Band families are built here only: ``key_family``/``simhash_family`` make
+each family's ``(src, band_idx, band_key)`` structs and ``band_rows``
+explodes any mix of them, for one family (``lsh_band_pairs``,
+``simhash_block_pairs``) or all four (``plans.pipeline``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from entity_deduplication_spark.config import DedupConfig
+from entity_deduplication_spark.functions.hashing import simhash_hamming_band_structs
 from entity_deduplication_spark.operators.pairs import block_self_join_pairs
 from entity_deduplication_spark.sources.io import stage
+
+# the block key of a band row; ``src`` keeps equal keys of two families
+# apart
+BAND_KEY_COLS = ["src", "band_idx", "band_key"]
+
+
+def key_family(keys: Column, src: int, positional: bool) -> Column:
+    """A band family of ``array<struct(src, band_idx, band_key)>`` from an
+    ``array<bigint>`` of keys: ``band_idx`` is each key's position when
+    ``positional`` (LSH bands), else 0 (fingerprints, one shared index).
+    A NULL array gives no rows, like ``posexplode``."""
+    arr = F.coalesce(keys, F.array().cast("array<bigint>"))
+    if positional:
+        return F.transform(arr, lambda x, i: _band(src, i, x))
+    return F.transform(arr, lambda x: _band(src, F.lit(0), x))
+
+
+def simhash_family(simhash: Column, cfg: DedupConfig) -> Column:
+    """The SimHash band family (``src`` 2): one Hamming-LSH key per
+    ``(n_blocks - hamming_max)``-subset of the signature's blocks (Manku
+    et al., WWW'07). Two signatures within the Hamming radius share at
+    least one band (pigeonhole on clean blocks); see
+    ``simhash_hamming_band_structs``. Every row emits all its bands."""
+    structs = simhash_hamming_band_structs(
+        simhash, cfg.simhash_n_blocks, cfg.simhash_hamming_max
+    )
+    return F.transform(
+        F.array(*structs), lambda s: _band(2, s["band_idx"], s["band_key"])
+    )
+
+
+def _band(src: int, band_idx: Column, band_key: Column) -> Column:
+    return F.struct(
+        F.lit(src).alias("src"),
+        band_idx.cast("int").alias("band_idx"),
+        band_key.cast("bigint").alias("band_key"),
+    )
+
+
+def band_rows(signatures: DataFrame, *families: Column) -> DataFrame:
+    """(clip_id, src, band_idx, band_key) block rows of ``families`` from
+    ONE explode over their per-row concat — one scan of ``signatures``,
+    not a union of one scan per family."""
+    return signatures.select(
+        "clip_id", F.explode(F.concat(*families)).alias("rb")
+    ).select("clip_id", "rb.src", "rb.band_idx", "rb.band_key")
 
 
 def lsh_band_pairs(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Candidate pairs from MinHash-LSH band collisions.
 
     ``signatures`` must carry ``clip_id`` and ``bands`` = array<bigint> of
-    b band hashes (functions.hashing.band_keys). posexplode → (band_idx,
-    band_key) blocks → skew-aware self-join. Two rows collide if ANY band
-    matches — the ``dropDuplicates`` inside the self-join plus the
-    cross-band ``dropDuplicates`` keep each unordered pair once.
+    b band hashes (functions.hashing.band_keys). Two rows collide if ANY
+    band matches; the self-join keeps each unordered pair once.
     """
-    banded = signatures.select(
-        F.col("clip_id"), F.posexplode(F.col("bands")).alias("band_idx", "band_key")
-    )
     return block_self_join_pairs(
-        banded,
-        key_cols=["band_idx", "band_key"],
+        band_rows(signatures, key_family(F.col("bands"), 0, positional=True)),
+        key_cols=BAND_KEY_COLS,
         block_size_limit=cfg.block_size_limit,
     )
 
 
 def simhash_block_pairs(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Candidate pairs of ``clip_id``s whose ``simhash`` signatures share a
-    block-subset key.
-
-    Hamming-LSH via block combinations (Manku et al., WWW'07): the 64-bit
-    signature splits into ``cfg.simhash_n_blocks`` contiguous blocks and
-    every ``(n_blocks - hamming_max)``-subset of blocks forms a band key.
-    Any two signatures within the Hamming radius are GUARANTEED to share
-    at least one band (pigeonhole on clean blocks) — the rotated-prefix
-    scheme this replaces missed radius-3 pairs whose differing bits
-    landed in every prefix, and its 16-bit keyspace made random
-    collisions (and thus candidate volume) grow ∝ n². Verification
-    (exact bit_count) happens in operators.verify.
-    """
-    from entity_deduplication_spark.functions.hashing import (
-        simhash_hamming_band_structs,
-    )
-
-    structs = simhash_hamming_band_structs(
-        F.col("simhash"), cfg.simhash_n_blocks, cfg.simhash_hamming_max
-    )
-    banded = signatures.select(
-        F.col("clip_id"), F.explode(F.array(*structs)).alias("rb")
-    ).select(
-        "clip_id",
-        F.col("rb.band_idx").alias("band_idx"),
-        F.col("rb.band_key").alias("band_key"),
-    )
+    block-subset key (``simhash_family``). Verification (exact bit_count)
+    happens in the caller."""
     return block_self_join_pairs(
-        banded,
-        key_cols=["band_idx", "band_key"],
+        band_rows(signatures, simhash_family(F.col("simhash"), cfg)),
+        key_cols=BAND_KEY_COLS,
         block_size_limit=cfg.block_size_limit,
     )
 

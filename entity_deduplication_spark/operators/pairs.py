@@ -64,12 +64,13 @@ def block_self_join_pairs(
     * one window pass (one shuffle) sizes each block and ranks its
       members by id; the sized table is materialized once;
     * one per-row rule then routes each row (below);
-    * cold blocks (≤ hot_threshold) use a plain self-equi-join;
-    * hot blocks use a two-sided salted join: the left side keeps its own
-      salt ``pmod(xxhash64(id), s)``, the right side is exploded to all
-      ``s`` salts — every unordered pair is produced exactly once after
-      the ``id1 < id2`` filter, but the single hot task is split into
-      ``s`` tasks.
+    * the rows that pair meet in ONE self-equi-join on ``key_cols`` plus
+      a salt sized by their block: ``s = salt_buckets`` for a hot block
+      (> hot_threshold), else 1. The left side keeps its own salt
+      ``pmod(xxhash64(id), s)``, the right side is exploded to all ``s``
+      salts — every unordered pair is produced exactly once after the
+      ``id1 < id2`` filter, but a hot block's single task is split into
+      ``s`` tasks, and a cold block joins as if unsalted.
 
     ``block_size_limit`` and ``on_oversize`` are scalars or Columns (a
     Column may derive a per-family cap/policy from ``key_cols``, so one
@@ -113,11 +114,11 @@ def block_self_join_pairs(
     # size, rank and successor share one partition/order spec, so Spark
     # computes all three in one Window operator (one exchange, one sort)
     w = Window.partitionBy(*key_cols).orderBy("clip_id")
-    # Materialize the sized block table ONCE: it feeds up to five plan
-    # subtrees (chain branch, cold self-join a/b, hot salted join a/b),
-    # and Spark would re-evaluate the whole upstream banding chain
-    # (posexplode + shuffle + sort + window) per subtree. The table is
-    # linear in the band rows the window pass already shuffles.
+    # Materialize the sized block table ONCE: it feeds three plan
+    # subtrees (chain branch, both sides of the join), and Spark would
+    # re-evaluate the whole upstream banding chain (explode + shuffle +
+    # sort + window) per subtree. The table is linear in the band rows
+    # the window pass already shuffles.
     sized = stage(
         keyed.withColumn(
             "_bn",
@@ -167,27 +168,19 @@ def block_self_join_pairs(
     routed = sized.withColumn("_route", route)
     paired = routed.filter((F.col("_route") == "pair") & (bn >= 2))
 
-    def _pairs(part: DataFrame) -> DataFrame:
-        a = part.select(*key_cols, F.col("clip_id").alias("id1"))
-        b = part.select(*key_cols, F.col("clip_id").alias("id2"))
-        return (
-            a.join(b, on=key_cols)
-            .filter(F.col("id1") < F.col("id2"))
-            .select("id1", "id2")
-        )
-
-    cold_pairs = _pairs(paired.filter(bn <= hot_threshold))
-
-    s = salt_buckets
-    hot = paired.filter(bn > hot_threshold)
-    left = hot.withColumn("_salt", F.pmod(F.xxhash64(F.col("clip_id")), F.lit(s)))
-    right = hot.withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(s - 1))))
-    hot_pairs = (
-        left.select(*key_cols, "_salt", F.col("clip_id").alias("id1"))
-        .join(
-            right.select(*key_cols, "_salt", F.col("clip_id").alias("id2")),
-            on=[*key_cols, "_salt"],
-        )
+    s = F.when(bn > hot_threshold, F.lit(salt_buckets)).otherwise(F.lit(1))
+    left = paired.select(
+        *key_cols,
+        F.pmod(F.xxhash64(F.col("clip_id")), s).alias("_salt"),
+        F.col("clip_id").alias("id1"),
+    )
+    right = paired.select(
+        *key_cols,
+        F.explode(F.sequence(F.lit(0), s - 1)).alias("_salt"),
+        F.col("clip_id").alias("id2"),
+    )
+    block_pairs = (
+        left.join(right, on=[*key_cols, "_salt"])
         .filter(F.col("id1") < F.col("id2"))
         .select("id1", "id2")
     )
@@ -196,11 +189,7 @@ def block_self_join_pairs(
         (F.col("_route") == "chain") & (F.col("_next") > F.col("clip_id"))
     ).select(F.col("clip_id").alias("id1"), F.col("_next").alias("id2"))
 
-    return (
-        cold_pairs.unionByName(hot_pairs)
-        .unionByName(chain_pairs)
-        .dropDuplicates(["id1", "id2"])
-    )
+    return block_pairs.unionByName(chain_pairs).dropDuplicates(["id1", "id2"])
 
 
 def chain_edges_within_block(keyed: DataFrame, key_cols: list[str]) -> DataFrame:

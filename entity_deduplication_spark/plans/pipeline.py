@@ -23,12 +23,18 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from entity_deduplication_spark.config import DedupConfig
 from entity_deduplication_spark.functions.hashing import band_keys
 from entity_deduplication_spark.functions.text import normalize_text, word_shingles
+from entity_deduplication_spark.operators.blocking import (
+    BAND_KEY_COLS,
+    band_rows,
+    key_family,
+    simhash_family,
+)
 from entity_deduplication_spark.operators.canonical import elect_canonical
 from entity_deduplication_spark.operators.connected_components import (
     connected_components,
@@ -126,55 +132,19 @@ def unified_band_table(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     audit per-family bucket-size distributions (pair mass per family)
     without running the self-join.
 
-    All four families are emitted by ONE explode over a per-row concat of
-    per-family struct arrays, not a 4-way union of per-family scans: the
-    union re-scanned the signature table four times (4x the checkpoint
-    traversal, 4x the map tasks, 4x the per-task shuffle-writer setup
-    feeding the window exchange) for rows that one pass can produce.
-    Per-family element construction mirrors the old per-family plans
-    exactly: a NULL family array contributes no rows (posexplode
-    semantics, via coalesce-to-empty so one NULL family cannot null the
-    whole concat), and the SimHash family emits all its structs whenever
-    the row exists (explode of a non-null array literal).
+    All four families come from ONE explode (``blocking.band_rows``), not
+    a 4-way union of per-family scans: the union re-scanned the signature
+    table four times (4x the checkpoint traversal, 4x the map tasks, 4x
+    the per-task shuffle-writer setup feeding the window exchange) for
+    rows that one pass can produce.
     """
-    from entity_deduplication_spark.functions.hashing import (
-        simhash_hamming_band_structs,
+    return band_rows(
+        signatures,
+        key_family(F.col("bands"), 0, positional=True),
+        key_family(F.col("audio_bands"), 1, positional=True),
+        simhash_family(F.col("simhash"), cfg),
+        key_family(F.col("fps"), 3, positional=False),
     )
-
-    def _elem(src: int, band_idx: Column, band_key: Column) -> Column:
-        return F.struct(
-            F.lit(src).alias("src"),
-            band_idx.cast("int").alias("band_idx"),
-            band_key.cast("bigint").alias("band_key"),
-        )
-
-    def _fam(col: Column, src: int, positional: bool) -> Column:
-        # posexplode-equivalent (band_idx, band_key) structs; NULL -> empty
-        arr = F.coalesce(col, F.array().cast("array<bigint>"))
-        if positional:
-            return F.transform(arr, lambda x, i: _elem(src, i, x))
-        return F.transform(arr, lambda x: _elem(src, F.lit(0), x))
-
-    # simhash block-combination bands (guaranteed complete for
-    # Hamming <= hamming_max; see simhash_hamming_band_structs for why
-    # rotated prefixes were replaced)
-    sim_structs = simhash_hamming_band_structs(
-        F.col("simhash"), cfg.simhash_n_blocks, cfg.simhash_hamming_max
-    )
-    sim_fam = F.transform(
-        F.array(*sim_structs),
-        lambda s: _elem(2, s["band_idx"], s["band_key"]),
-    )
-
-    combined = F.concat(
-        _fam(F.col("bands"), 0, positional=True),
-        _fam(F.col("audio_bands"), 1, positional=True),
-        sim_fam,
-        _fam(F.col("fps"), 3, positional=False),
-    )
-    return signatures.select(
-        "clip_id", F.explode(combined).alias("rb")
-    ).select("clip_id", "rb.src", "rb.band_idx", "rb.band_key")
 
 
 def candidate_pairs(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -199,9 +169,6 @@ def candidate_pairs(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     # key (e.g. re-encodes of one clip with empty transcripts). Chains
     # keep the pair mass linear AND let connected components recover
     # such groups through verified-chain transitivity.
-    # Both caps (band_bucket_cap 64, fp_df_cap 16) sit below the default
-    # hot-block threshold (256), so every block that pairs in full is
-    # cold and the salted join path is unreachable from here.
     #
     # Per-family oversize policy as Columns, routed per row by the same
     # rule as a scalar policy: the substring-fingerprint family (src 3)
@@ -213,7 +180,7 @@ def candidate_pairs(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     is_fp = F.col("src") == F.lit(3)
     pairs = block_self_join_pairs(
         unified,
-        key_cols=["src", "band_idx", "band_key"],
+        key_cols=BAND_KEY_COLS,
         block_size_limit=F.when(is_fp, F.lit(cfg.fp_df_cap)).otherwise(
             F.lit(cfg.band_bucket_cap)
         ),
@@ -227,7 +194,7 @@ def candidate_pairs(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     return keyed.filter(~linked).select("id1", "id2")
 
 
-def exact_edges(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
+def exact_edges(signatures: DataFrame) -> DataFrame:
     """Chain edges over the ``EXACT_KEYS`` digests — verification-free,
     O(n) per block (B1/B6 analogues) — from one window blocked on
     ``(kind, digest)``: ``kind`` keeps a bytes digest from chaining with
@@ -298,7 +265,7 @@ class DedupPipeline:
         verified = verified_edges(cand, sig, cfg)
         edges = self.ckpt.get_or_compute(
             "edges",
-            lambda: verified.unionByName(exact_edges(sig, cfg)),
+            lambda: verified.unionByName(exact_edges(sig)),
             resume=resume,
         )
 

@@ -54,6 +54,26 @@ def test_block_self_join_salted_hot_path_lossless(spark):
     assert got == _brute_pairs(rows)
 
 
+def test_block_self_join_is_one_join(spark):
+    # hot and cold blocks pair through one join salted by block size, with
+    # the pairs of an unsalted join
+    rows = [("hot", f"id{i:03d}") for i in range(40)] + [
+        (f"c{i % 5}", f"xd{i:03d}") for i in range(20)
+    ]
+    df = spark.createDataFrame(rows, ["bk", "clip_id"])
+    salted = block_self_join_pairs(
+        df, ["bk"], block_size_limit=1000, hot_threshold=16, salt_buckets=4
+    )
+    plan = salted._jdf.queryExecution().optimizedPlan().toString()
+    assert len(re.findall(r"^[\s:+-]*Join ", plan, re.MULTILINE)) == 1, plan
+    plain = block_self_join_pairs(
+        df, ["bk"], block_size_limit=1000, hot_threshold=10**9, salt_buckets=1
+    )
+    got = {(r["id1"], r["id2"]) for r in salted.collect()}
+    assert got == {(r["id1"], r["id2"]) for r in plain.collect()}
+    assert got == _brute_pairs(rows)
+
+
 def test_block_size_limit_truncates(spark):
     rows = [("k", f"id{i:03d}") for i in range(30)]
     df = spark.createDataFrame(rows, ["bk", "clip_id"])

@@ -270,7 +270,7 @@ def test_candidate_pairs_hold_no_exact_linked_pair(spark):
             assert x is None or x != y, (a, b)
     assert ("n0", "n1") in got
 
-    edges = {(r["id1"], r["id2"]) for r in exact_edges(sig, cfg).collect()}
+    edges = {(r["id1"], r["id2"]) for r in exact_edges(sig).collect()}
     assert edges == {("b0", "b1"), ("b1", "b2"), ("t0", "t1"), ("t1", "t2")}
 
 
@@ -292,7 +292,7 @@ def test_exact_edges_chain_both_digests_in_one_window(spark):
     sig = spark.createDataFrame(
         rows, "clip_id string, bytes_md5 string, transcript_md5 string"
     )
-    got = exact_edges(sig, DedupConfig()).collect()
+    got = exact_edges(sig).collect()
     pairs = [(r["id1"], r["id2"]) for r in got]
     assert sorted(pairs) == [("a", "b"), ("b", "c"), ("d", "e")]
     assert {r["score"] for r in got} == {1.0}
