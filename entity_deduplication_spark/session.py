@@ -20,7 +20,8 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    cores: parallelism for local mode (defaults to $SPARK_GRAFT_CPUS or '*').
+    cores: parallelism for local mode (defaults to $SPARK_GRAFT_CPUS, else
+    the number of CPUs this process may run on).
     shuffle_partitions: defaults to max(cores, 32) locally; on a real
     cluster leave AQE to coalesce.
     """
@@ -43,20 +44,18 @@ def get_spark(
     os.environ.setdefault("ARROW_DEFAULT_MEMORY_POOL", "system")
 
     if cores is None:
+        # the CPUs this process may run on (taskset, cpuset), not the
+        # host's: the master and the parallelism below take the same count
         env = os.environ.get("SPARK_GRAFT_CPUS")
-        master = f"local[{env}]" if env else "local[*]"
-        n_cores = int(env) if env else (os.cpu_count() or 8)
-    else:
-        master = f"local[{cores}]"
-        n_cores = cores
+        cores = int(env) if env else len(os.sched_getaffinity(0))
     if shuffle_partitions is None:
-        shuffle_partitions = max(n_cores, 32)
+        shuffle_partitions = max(cores, 32)
 
     builder = (
-        SparkSession.builder.master(master)
+        SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.default.parallelism", str(n_cores))
+        .config("spark.default.parallelism", str(cores))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # AQE coalescing targets BYTES (minPartitionSize, default 1m), but
@@ -114,6 +113,18 @@ def get_spark(
             "spark.executorEnv.ARROW_DEFAULT_MEMORY_POOL",
             os.environ["ARROW_DEFAULT_MEMORY_POOL"],
         )
+        # driver JIT: C1 only, no C2 tier. A 1,000-clip CLI run is ~60 short
+        # jobs that end before C2-compiled Spark and Janino-generated
+        # classes pay back: per-thread /proc CPU of a cold full_dedup op at
+        # 4 cores put 40 of its ~89 JVM CPU-s on the C2 compiler threads.
+        # C1 only measured full_dedup cpu_s 92 -> 53 s and wall_s 30.9 ->
+        # 28.8 s (medians of 10 pairs), and at 8,000 clips cold and warm
+        # runs no slower (BENCH/LAYERS_r22.json). Spark puts this before a
+        # caller's spark.driver.extraJavaOptions, so both apply. Local mode
+        # runs the tasks in this JVM too; cluster executors keep tiered C2.
+        # An extra_conf of {"spark.driver.defaultJavaOptions": ""} restores
+        # C2 for a long-lived session.
+        .config("spark.driver.defaultJavaOptions", "-XX:TieredStopAtLevel=1")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
