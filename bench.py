@@ -194,8 +194,6 @@ def _noop(df) -> None:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
-    cpus_env = os.environ.get("SPARK_GRAFT_CPUS")
-    cores = int(cpus_env) if cpus_env else (os.cpu_count() or 8)
     # UI on (random port): needed for the occupancy collector's REST API
     spark = get_spark(
         app_name="dedup-bench",
@@ -208,6 +206,8 @@ def main() -> None:
             "spark.ui.retainedStages": "100000",
         },
     )
+    # get_spark decides the local core count; occupancy divides by it
+    cores = spark.sparkContext.defaultParallelism
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()  # warm
 
     timings: dict[str, float] = {}

@@ -118,13 +118,21 @@ def get_spark(
         # classes pay back: per-thread /proc CPU of a cold full_dedup op at
         # 4 cores put 40 of its ~89 JVM CPU-s on the C2 compiler threads.
         # C1 only measured full_dedup cpu_s 92 -> 53 s and wall_s 30.9 ->
-        # 28.8 s (medians of 10 pairs), and at 8,000 clips cold and warm
-        # runs no slower (BENCH/LAYERS_r22.json). Spark puts this before a
-        # caller's spark.driver.extraJavaOptions, so both apply. Local mode
-        # runs the tasks in this JVM too; cluster executors keep tiered C2.
-        # An extra_conf of {"spark.driver.defaultJavaOptions": ""} restores
-        # C2 for a long-lived session.
-        .config("spark.driver.defaultJavaOptions", "-XX:TieredStopAtLevel=1")
+        # 28.8 s (medians of 10 pairs, BENCH/LAYERS_r22.json). C2 wins
+        # long runs: at 150k clips C1 only took 291-293 s, tiered
+        # 197-245 s, so tools/scale_run.py and the test session pass
+        # {"spark.driver.defaultJavaOptions": ""} to get tiered C2 back.
+        # C1 only also shrinks the code cache from 240 MB to 48 MB; a
+        # long session fills that and recompiles what it evicts (C1
+        # compile time over tier-1: 63 s at 48 MB, 28 s at 240 MB), so
+        # the cache keeps the tiered size. Local mode runs the tasks in
+        # this JVM too. Spark puts this before a caller's
+        # spark.driver.extraJavaOptions, so both apply; it replaces any
+        # spark-defaults.conf value of spark.driver.defaultJavaOptions.
+        .config(
+            "spark.driver.defaultJavaOptions",
+            "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m",
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -14,7 +14,15 @@ TEST_DATA_DIR = os.path.join(DATA_DIR, "test")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="dedup-tests", cores=8, shuffle_partitions=16)
+    # one JVM serves every test, long enough for tiered C2 to pay back
+    # (the suite took 461 s tiered, 501 s C1-only, back to back at 4 cores);
+    # tests/test_session.py checks the C1-only default in its own JVM
+    s = get_spark(
+        app_name="dedup-tests",
+        cores=8,
+        shuffle_partitions=16,
+        extra_conf={"spark.driver.defaultJavaOptions": ""},
+    )
     yield s
     s.stop()
 

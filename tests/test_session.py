@@ -9,11 +9,8 @@ import pytest
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 C1_ONLY = "-XX:TieredStopAtLevel=1"
-
-
-def test_driver_jvm_runs_c1_only(spark):
-    mx = spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
-    assert C1_ONLY in list(mx.getInputArguments())
+# without tiering the JVM's default code cache is 48 MB, not 240 MB
+CODE_CACHE = "-XX:ReservedCodeCacheSize=240m"
 
 
 # Runs in a fresh interpreter: the master and the JVM's flags are fixed
@@ -59,6 +56,7 @@ def test_default_cores_follow_affinity_and_keep_caller_java_options():
     assert proc.returncode == 0, proc.stderr[-4000:]
     out = json.loads(proc.stdout.strip().splitlines()[-1])
     assert C1_ONLY in out["args"]
+    assert CODE_CACHE in out["args"]
     assert "-Ddedup.probe=1" in out["args"]
     assert out["master"] == "local[2]"
     assert out["parallelism"] == 2

@@ -178,6 +178,11 @@ def main() -> None:
             # first 800k attempt filled the disk with dead shuffles from
             # already-checkpointed stages)
             "spark.cleaner.periodicGC.interval": "1min",
+            # tiered C2 back (the session default is C1 only): a long,
+            # CPU-dense run is where C2's faster code pays back. At 150k
+            # clips on 4 cores C1 only took 291-293 s, tiered 197-245 s;
+            # at 50k the two tied (89-102 s)
+            "spark.driver.defaultJavaOptions": "",
             # NOTE: do NOT raise spark.sql.autoBroadcastJoinThreshold
             # here. The r4 attempt set it to 4 GB to keep the verify
             # payload joins broadcast — at 800k clips that broadcast the
