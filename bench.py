@@ -19,6 +19,11 @@ the MEDIAN, and each sample carries its own interference context —
   misses Python-worker cycles).
 * ``ext_load`` = host-wide busy cores NOT attributable to this process
   tree during the sample — direct co-tenant pressure.
+* ``steal`` = host-wide steal seconds during the sample (cycles the
+  hypervisor gave to other guests).
+
+Stage totals come from the status store and process-tree CPU from
+/proc (``tools/runstats.py``, ``perfbench/procs.py``); the UI stays off.
 
 So BENCH_r{N}.json is self-adjudicating: a slow sample with high
 occupancy and high external load is host noise; a slow sample with low
@@ -39,7 +44,6 @@ import os
 import statistics
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -49,6 +53,13 @@ import __spark_entry__ as entry_mod  # noqa: E402
 from entity_deduplication_spark.datagen import ensure_clips_parquet  # noqa: E402
 from entity_deduplication_spark.plans.pipeline import DedupPipeline  # noqa: E402
 from entity_deduplication_spark.session import get_spark  # noqa: E402
+from perfbench.procs import tree_cpu_s  # noqa: E402
+from tools.runstats import (  # noqa: E402
+    RETAIN_STAGES,
+    current_round,
+    host_cpu_s,
+    stage_totals,
+)
 
 BENCH_QUERIES = [
     "dedup_ngram_jaccard_pairs",
@@ -77,107 +88,27 @@ N_SAMPLES = int(os.environ.get("BENCH_SAMPLES", "3"))
 REPO = os.path.dirname(os.path.abspath(__file__))
 
 
-def _current_round() -> int:
-    """Infer the active round: one past the newest BENCH_r{N}.json the
-    driver has recorded (overridable via $SPARK_GRAFT_ROUND)."""
-    env = os.environ.get("SPARK_GRAFT_ROUND")
-    if env:
-        return int(env)
-    rounds = [0]
-    for f in os.listdir(REPO):
-        if f.startswith("BENCH_r") and f.endswith(".json"):
-            try:
-                rounds.append(int(f[len("BENCH_r"):-len(".json")]))
-            except ValueError:
-                continue
-    return max(rounds) + 1
-
-
-# ---------------------------------------------------------------------------
-# interference-context collectors (same decomposition as
-# tools/scaling_bench.py — see BENCH/BASELINE.md for the derivation)
-# ---------------------------------------------------------------------------
-
-def _stage_run_ms(sc) -> float:
-    """Cumulative executorRunTime (ms) over completed stages via the UI
-    REST API — the only public surface for per-stage task metrics."""
-    try:
-        url = (
-            f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}"
-            "/stages?status=complete"
-        )
-        with urllib.request.urlopen(url, timeout=30) as r:
-            stages = json.load(r)
-        return float(sum(s.get("executorRunTime", 0) for s in stages))
-    except Exception:
-        return float("nan")
-
-
-def _tree_cpu_s() -> float:
-    """CPU-seconds consumed by THIS process and all its descendants
-    (utime+stime+reaped children) — JVM, pyspark daemon/workers, driver."""
-    hz = os.sysconf("SC_CLK_TCK")
-    me = os.getpid()
-    ppid_of: dict[int, int] = {}
-    cpu_of: dict[int, int] = {}
-    for pid in os.listdir("/proc"):
-        if not pid.isdigit():
-            continue
-        try:
-            with open(f"/proc/{pid}/stat") as f:
-                rest = f.read().rsplit(")", 1)[1].split()
-        except OSError:
-            continue
-        p = int(pid)
-        ppid_of[p] = int(rest[1])
-        cpu_of[p] = int(rest[11]) + int(rest[12]) + int(rest[13]) + int(rest[14])
-    total = 0
-    for p in cpu_of:
-        q = p
-        seen = set()
-        while q > 1 and q not in seen:
-            if q == me:
-                total += cpu_of[p]
-                break
-            seen.add(q)
-            q = ppid_of.get(q, 0)
-    return total / hz
-
-
-def _host_busy_s() -> float:
-    """Host-wide busy CPU-seconds so far (all cores, all tenants)."""
-    hz = os.sysconf("SC_CLK_TCK")
-    with open("/proc/stat") as f:
-        vals = [int(x) for x in f.readline().split()[1:9]]
-    idle = vals[3] + vals[4]
-    return (sum(vals) - idle) / hz
-
-
 def _sample(spark: SparkSession, action, cores: int) -> dict:
     """Run ``action`` once with cleared cache; return wall + context."""
     spark.catalog.clearCache()
-    sc = spark.sparkContext
-    run0 = _stage_run_ms(sc)
-    tree0 = _tree_cpu_s()
-    busy0 = _host_busy_s()
+    run0, _ = stage_totals(spark)
+    tree0 = tree_cpu_s()
+    busy0, steal0 = host_cpu_s()
     t0 = time.time()
     action()
     wall = time.time() - t0
-    busy1 = _host_busy_s()
-    tree1 = _tree_cpu_s()
-    run1 = _stage_run_ms(sc)
-    # the UI's completed-stage store is bounded by spark.ui.retainedStages
-    # (raised in the bench session conf, but clamp anyway): a rollover
-    # between run0 and run1 would make the delta negative/undercounted
-    run_s = max(0.0, (run1 - run0)) / 1e3
+    busy1, steal1 = host_cpu_s()
+    tree1 = tree_cpu_s()
+    run1, _ = stage_totals(spark)
     tree = tree1 - tree0
-    occ = run_s / (wall * cores) if wall > 0 else 0.0
+    occ = (run1 - run0) / (wall * cores) if wall > 0 else 0.0
     ext = max(0.0, (busy1 - busy0) - tree) / wall if wall > 0 else 0.0
     return {
         "wall": round(wall, 3),
         "occ": round(occ, 3),
         "tree_cpu": round(tree, 1),
         "ext_load": round(ext, 1),
+        "steal": round(steal1 - steal0, 1),
     }
 
 
@@ -194,18 +125,7 @@ def _noop(df) -> None:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
-    # UI on (random port): needed for the occupancy collector's REST API
-    spark = get_spark(
-        app_name="dedup-bench",
-        extra_conf={
-            "spark.ui.enabled": "true",
-            "spark.ui.port": "0",
-            # occupancy reads cumulative executorRunTime from the UI's
-            # completed-stage store; the default retainedStages=1000 rolls
-            # over mid-bench and corrupts the delta (ADVICE r4)
-            "spark.ui.retainedStages": "100000",
-        },
-    )
+    spark = get_spark(app_name="dedup-bench", extra_conf=RETAIN_STAGES)
     # get_spark decides the local core count; occupancy divides by it
     cores = spark.sparkContext.defaultParallelism
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()  # warm
@@ -238,7 +158,7 @@ def main() -> None:
     # preemption-immune; tree_cpu = this job's CPU-s; ext_load =
     # co-tenant busy cores) goes to a side file — inlining it in round 4
     # overflowed the driver's tail capture and the artifact parsed null
-    rnd = _current_round()
+    rnd = current_round(REPO)
     detail_path = os.path.join(REPO, "BENCH", f"DETAIL_r{rnd:02d}.json")
     os.makedirs(os.path.dirname(detail_path), exist_ok=True)
     with open(detail_path, "w") as f:

@@ -13,6 +13,17 @@ Replays the reference CLI surface (reference run.py:24-43: --input,
 --output-dir, thresholds) on the Spark engine.
 Every stage checkpoint lands under --checkpoint-dir; rerunning with
 --resume continues from the last completed stage.
+
+Run without spark-submit, the CLI starts its own session through
+``session.get_spark``, whose driver JVM runs the C1 JIT only. A long run
+gets tiered C2 back through PySpark's launcher variable, whose ``--conf``s
+come after the builder's and win:
+
+    PYSPARK_SUBMIT_ARGS="--conf spark.driver.defaultJavaOptions= pyspark-shell" \
+        python -m entity_deduplication_spark.cli --input ... --output ...
+
+``spark.conf.get`` still reports the C1 value; read the JVM's flags from
+``ManagementFactory.getRuntimeMXBean().getInputArguments()``.
 """
 
 from __future__ import annotations

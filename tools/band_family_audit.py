@@ -7,6 +7,7 @@ emit, and the chain mass for over-cap buckets. Run at two sizes to see
 which family's pair mass grows super-linearly.
 
 Usage: python tools/band_family_audit.py [n_clips] [cores]
+(defaults 200_000 and the cores ``session.get_spark`` picks).
 """
 
 from __future__ import annotations
@@ -22,7 +23,7 @@ FAMILY = {0: "text_minhash", 1: "audio_minhash", 2: "simhash", 3: "fingerprint"}
 
 def main() -> None:
     n_clips = int(sys.argv[1]) if len(sys.argv) > 1 else 200_000
-    cores = int(sys.argv[2]) if len(sys.argv) > 2 else 32
+    cores = int(sys.argv[2]) if len(sys.argv) > 2 else None
 
     from pyspark.sql import functions as F
 
@@ -37,10 +38,9 @@ def main() -> None:
     from tools.scale_run import ensure_chunks
 
     chunk_paths = ensure_chunks(os.path.join(DATA_DIR, "scale_800k_v2"), n_clips)
-    spark = get_spark(
-        app_name=f"band-audit-{n_clips}",
-        cores=cores,
-        shuffle_partitions=cores * 8,
+    spark = get_spark(app_name=f"band-audit-{n_clips}", cores=cores)
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism * 8)
     )
     cfg = DedupConfig()
     clips = spark.read.parquet(*chunk_paths)

@@ -8,14 +8,15 @@ checkpoint I/O, driver-side state). It
 1. materializes N_CLIPS as independent chunk parquet files (parallel
    worker processes — one 32 GB pandas frame would not fit a driver),
    each chunk with its own planted duplicate structure;
-2. runs DedupPipeline over the whole directory at local[CORES] with the
-   occupancy/tree-CPU collector from tools/scaling_bench.py;
-3. appends the result to BENCH/SCALE_r{N}.json (current round inferred
-   from the newest driver-recorded BENCH_r{N}.json) and prints one JSON
-   line.
+2. runs DedupPipeline over the whole directory at local[CORES], with
+   occupancy from the status store's stage totals and process-tree CPU
+   (tools/runstats.py, perfbench/procs.py);
+3. appends the result to BENCH/SCALE_r{N}.json (``runstats.current_round``)
+   and prints one JSON line.
 
 Usage: python tools/scale_run.py [n_clips] [cores]
-(defaults 800_000 and $SPARK_GRAFT_CPUS or 32).
+(defaults 800_000 and the cores ``session.get_spark`` picks:
+$SPARK_GRAFT_CPUS, else the CPUs this process may run on).
 """
 
 from __future__ import annotations
@@ -24,28 +25,14 @@ import json
 import os
 import sys
 import time
-import urllib.request
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from perfbench.procs import tree_cpu_s  # noqa: E402
+from tools.runstats import RETAIN_STAGES, current_round, stage_totals  # noqa: E402
+
 CHUNK = 50_000
-
-
-def current_round() -> int:
-    """One past the newest BENCH_r{N}.json the driver has recorded
-    (overridable via $SPARK_GRAFT_ROUND) — same rule as bench.py."""
-    env = os.environ.get("SPARK_GRAFT_ROUND")
-    if env:
-        return int(env)
-    rounds = [0]
-    for f in os.listdir(REPO):
-        if f.startswith("BENCH_r") and f.endswith(".json"):
-            try:
-                rounds.append(int(f[len("BENCH_r"):-len(".json")]))
-            except ValueError:
-                continue
-    return max(rounds) + 1
 
 
 def _gen_chunk(args: tuple[str, int, int, int]) -> str:
@@ -72,23 +59,30 @@ def _gen_chunk(args: tuple[str, int, int, int]) -> str:
     return path
 
 
+def chunk_jobs(data_dir: str, n_clips: int) -> list[tuple[str, int, int, int]]:
+    """(path, rows, seed, id_offset) of each chunk covering ``n_clips``.
+
+    Chunk i holds clips [i * CHUNK, i * CHUNK + rows). A full chunk is
+    ``chunk_{i:03d}.parquet`` for every run size; a partial last chunk
+    carries its row count in the name, so no run reuses a file of
+    another size."""
+    jobs = []
+    for i in range(-(-n_clips // CHUNK)):
+        rows = min(CHUNK, n_clips - i * CHUNK)
+        name = f"chunk_{i:03d}" + ("" if rows == CHUNK else f"_n{rows}")
+        path = os.path.join(data_dir, name + ".parquet")
+        jobs.append((path, rows, 1000 + i, i * CHUNK))
+    return jobs
+
+
 def ensure_chunks(data_dir: str, n_clips: int) -> list[str]:
     """Materialize the chunk files covering ``n_clips`` and return their
-    paths — a shared chunk directory serves any run size that is a
-    multiple of CHUNK (the reader takes an explicit file list)."""
+    paths — a shared chunk directory serves every run size (the reader
+    takes an explicit file list)."""
     import concurrent.futures as cf
 
     os.makedirs(data_dir, exist_ok=True)
-    n_chunks = -(-n_clips // CHUNK)
-    jobs = [
-        (
-            os.path.join(data_dir, f"chunk_{i:03d}.parquet"),
-            min(CHUNK, n_clips - i * CHUNK),
-            1000 + i,
-            i * CHUNK,
-        )
-        for i in range(n_chunks)
-    ]
+    jobs = chunk_jobs(data_dir, n_clips)
     todo = [j for j in jobs if not os.path.exists(j[0])]
     if todo:
         t0 = time.time()
@@ -102,52 +96,11 @@ def ensure_chunks(data_dir: str, n_clips: int) -> list[str]:
     return [j[0] for j in jobs]
 
 
-def stage_run_ms(sc) -> float:
-    url = (
-        f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}"
-        "/stages?status=complete"
-    )
-    with urllib.request.urlopen(url, timeout=30) as r:
-        return float(sum(s.get("executorRunTime", 0) for s in json.load(r)))
-
-
-def tree_cpu_s() -> float:
-    hz = os.sysconf("SC_CLK_TCK")
-    me = os.getpid()
-    ppid_of: dict[int, int] = {}
-    cpu_of: dict[int, int] = {}
-    for pid in os.listdir("/proc"):
-        if not pid.isdigit():
-            continue
-        try:
-            with open(f"/proc/{pid}/stat") as f:
-                rest = f.read().rsplit(")", 1)[1].split()
-        except OSError:
-            continue
-        p = int(pid)
-        ppid_of[p] = int(rest[1])
-        cpu_of[p] = int(rest[11]) + int(rest[12]) + int(rest[13]) + int(rest[14])
-    total = 0
-    for p in cpu_of:
-        q, seen = p, set()
-        while q > 1 and q not in seen:
-            if q == me:
-                total += cpu_of[p]
-                break
-            seen.add(q)
-            q = ppid_of.get(q, 0)
-    return total / hz
-
-
 def main() -> None:
     n_clips = int(sys.argv[1]) if len(sys.argv) > 1 else 800_000
-    cores = (
-        int(sys.argv[2])
-        if len(sys.argv) > 2
-        else int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    cores = int(sys.argv[2]) if len(sys.argv) > 2 else None
     # shared chunk cache: any run size reads the prefix of chunk files
-    # it needs (last chunk may be partial only for non-multiples of CHUNK)
+    # it needs (a partial last chunk is named by its row count)
     # v2: chunk files carry per-chunk id_offset (globally unique clip_ids);
     # v1 chunks (scale_800000/) restarted ids per chunk and are invalid
     from entity_deduplication_spark.datagen import DATA_DIR
@@ -164,12 +117,8 @@ def main() -> None:
     spark = get_spark(
         app_name=f"scale-run-{n_clips}",
         cores=cores,
-        # wide shuffles at this scale: more reduce partitions keep each
-        # task's sort memory-resident (AQE coalesces the small ones)
-        shuffle_partitions=cores * 8,
         extra_conf={
-            "spark.ui.enabled": "true",
-            "spark.ui.port": "0",
+            **RETAIN_STAGES,
             # shuffle files live until their RDD is GC'd; in a single
             # 20+ min pipeline the default 30 min periodic GC never runs,
             # so every stage's shuffle output accumulates to job end.
@@ -196,17 +145,21 @@ def main() -> None:
             # cluster must do, since no executor holds a 10 GB build.
         },
     )
-    sc = spark.sparkContext
+    # get_spark decides the local core count; occupancy divides by it
+    cores = spark.sparkContext.defaultParallelism
+    # wide shuffles at this scale: more reduce partitions keep each
+    # task's sort memory-resident (AQE coalesces the small ones)
+    spark.conf.set("spark.sql.shuffle.partitions", str(cores * 8))
     clips = spark.read.parquet(*chunk_paths)
 
-    run0 = stage_run_ms(sc)
+    run0, _ = stage_totals(spark)
     tree0 = tree_cpu_s()
     t0 = time.time()
     res = DedupPipeline(spark).run(clips)
     res.clusters.write.mode("overwrite").format("noop").save()
     wall = time.time() - t0
     tree = tree_cpu_s() - tree0
-    run_s = (stage_run_ms(sc) - run0) / 1e3
+    run_s = stage_totals(spark)[0] - run0
     n_clusters = res.clusters.select("cluster_id").distinct().count()
 
     out = {
@@ -219,7 +172,7 @@ def main() -> None:
         "cpu_per_clip_ms": round(1000.0 * tree / n_clips, 2),
         "n_clusters": n_clusters,
     }
-    path = os.path.join(REPO, "BENCH", f"SCALE_r{current_round():02d}.json")
+    path = os.path.join(REPO, "BENCH", f"SCALE_r{current_round(REPO):02d}.json")
     hist = []
     if os.path.exists(path):
         with open(path) as f:

@@ -36,8 +36,9 @@ part:
 
     eff_engine = (occ_4N/occ_N) * (work_N/work_4N)
 
-/proc/stat deltas (steal + idle + capacity) are sampled around each run
-to corroborate the delivery factor with host-level tenant load.
+/proc/stat deltas (busy and steal, ``runstats.host_cpu_s``) are sampled
+around each run to corroborate the delivery factor with host-level
+tenant load.
 
 Measurement hygiene: levels INTERLEAVED across rounds; fresh JVM per
 sample; JIT warm-up on a small input; `clearCache()` before timing
@@ -66,63 +67,17 @@ LEVELS = [
 ROUNDS = int(os.environ.get("SCALING_ROUNDS", "5"))
 
 _CHILD = r"""
-import json, os, sys, time, urllib.request
+import json, os, sys, time
 sys.path.insert(0, os.getcwd())  # run_level starts this in the checkout
 from entity_deduplication_spark.session import get_spark
 from entity_deduplication_spark.datagen import ensure_clips_parquet
 from entity_deduplication_spark.plans.pipeline import DedupPipeline
+from perfbench.procs import tree_cpu_s
+from tools.runstats import RETAIN_STAGES, host_cpu_s, stage_totals
 
 cores, n_clips, warm_clips = int(sys.argv[1]), int(sys.argv[2]), int(sys.argv[3])
-# UI on (random port): its REST API is the only public surface for Spark's
-# per-stage executorCpuTime/executorRunTime task metrics
 os.environ.setdefault("SPARK_DRIVER_MEM", "48g")  # scale ladder needs the big heap
-spark = get_spark(
-    app_name=f"scaling-{cores}",
-    cores=cores,
-    extra_conf={"spark.ui.enabled": "true", "spark.ui.port": "0"},
-)
-sc = spark.sparkContext
-
-
-def stage_totals():
-    url = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}/stages?status=complete"
-    with urllib.request.urlopen(url, timeout=30) as r:
-        stages = json.load(r)
-    cpu_ns = sum(s.get("executorCpuTime", 0) for s in stages)
-    run_ms = sum(s.get("executorRunTime", 0) for s in stages)
-    return cpu_ns, run_ms
-
-
-def proc_stat():
-    with open("/proc/stat") as f:
-        parts = f.readline().split()
-    # user nice system idle iowait irq softirq steal
-    vals = [int(x) for x in parts[1:9]]
-    return {"total": sum(vals), "idle": vals[3] + vals[4], "steal": vals[7]}
-
-
-def tree_cpu_s():
-    # total CPU of THIS process group (python driver + JVM + pyspark
-    # daemon/workers): Spark's executorCpuTime is JVM-side only and a
-    # Python-UDF-heavy pipeline does much of its work in pyspark workers,
-    # invisible to it. Live processes contribute utime+stime; reaped dead
-    # children are in their parent's cutime+cstime (no double count).
-    pg = os.getpgid(0)
-    hz = os.sysconf("SC_CLK_TCK")
-    total = 0
-    for pid in os.listdir("/proc"):
-        if not pid.isdigit():
-            continue
-        try:
-            with open(f"/proc/{pid}/stat") as f:
-                rest = f.read().rsplit(")", 1)[1].split()
-        except OSError:
-            continue
-        if int(rest[2]) != pg:
-            continue
-        total += int(rest[11]) + int(rest[12]) + int(rest[13]) + int(rest[14])
-    return total / hz
-
+spark = get_spark(app_name=f"scaling-{cores}", cores=cores, extra_conf=RETAIN_STAGES)
 
 warm_path, _ = ensure_clips_parquet(warm_clips)
 warm = spark.read.parquet(warm_path)
@@ -134,29 +89,28 @@ clips = spark.read.parquet(clips_path)
 clips.count()
 spark.catalog.clearCache()
 
-cpu0, run0 = stage_totals()
+run0, cpu0 = stage_totals(spark)
+# this process and its descendants: the JVM, and the pyspark daemon and
+# Python workers, which sit in their own process group
 tree0 = tree_cpu_s()
-st0 = proc_stat()
+busy0, steal0 = host_cpu_s()
 t0 = time.time()
 res = DedupPipeline(spark).run(clips)
 res.clusters.write.mode("overwrite").format("noop").save()
 wall = time.time() - t0
-st1 = proc_stat()
+busy1, steal1 = host_cpu_s()
 tree1 = tree_cpu_s()
-cpu1, run1 = stage_totals()
+run1, cpu1 = stage_totals(spark)
 
-hz = os.sysconf("SC_CLK_TCK")
-ncpu = os.cpu_count()
 out = {
     "cores": cores,
     "wall": wall,
-    "exec_cpu_s": (cpu1 - cpu0) / 1e9,
-    "exec_run_s": (run1 - run0) / 1e3,
+    "exec_cpu_s": cpu1 - cpu0,
+    "exec_run_s": run1 - run0,
     "tree_cpu_s": tree1 - tree0,
-    "host_ncpu": ncpu,
-    "host_capacity_s": ncpu * wall,
-    "host_idle_s": (st1["idle"] - st0["idle"]) / hz,
-    "host_steal_s": (st1["steal"] - st0["steal"]) / hz,
+    "host_ncpu": os.cpu_count(),
+    "host_busy_s": busy1 - busy0,
+    "host_steal_s": steal1 - steal0,
 }
 print("RESULT " + json.dumps(out))
 spark.stop()
@@ -170,7 +124,6 @@ def run_level(cores: int) -> dict:
         text=True,
         timeout=5400,
         cwd=REPO,
-        start_new_session=True,  # own pgid -> tree_cpu_s scopes to this run
     )
     for line in out.stdout.splitlines():
         if line.startswith("RESULT "):
@@ -190,7 +143,6 @@ def main() -> None:
             s["jvm_oncpu"] = (
                 s["exec_cpu_s"] / s["exec_run_s"] if s["exec_run_s"] else 0.0
             )
-            s["host_busy_s"] = s["host_capacity_s"] - s["host_idle_s"]
             s["external_busy_s"] = max(0.0, s["host_busy_s"] - s["tree_cpu_s"])
             s["external_load_cores"] = s["external_busy_s"] / s["wall"]
             samples[cores].append(s)
