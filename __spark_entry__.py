@@ -651,29 +651,38 @@ def q_training_pairs_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _doc_pair_features(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """The ML scorers' input: document n-gram Jaccard candidates (>= 0.1)
+    with their pair feature vectors, staged, and the same pairs labeled
+    1.0 where jaccard >= 0.5."""
+    from entity_deduplication_spark.operators.dedup import ngram_jaccard_pairs
+    from entity_deduplication_spark.operators.ml import pair_features
+    from entity_deduplication_spark.operators.pairs import attach_pair_features
+    from entity_deduplication_spark.sources.io import stage
+
+    docs = _t(spark, sf_dir, "documents")
+    cand = ngram_jaccard_pairs(docs, "doc_id", "text", NGRAM_N, 0.1)
+    feat = attach_pair_features(cand, docs, ["text"], "doc_id")
+    # one materialization for the two consumers (driver-side fit +
+    # distributed scoring); they read only features and jaccard
+    feat = pair_features(feat, text1="text_1", text2="text_2")
+    feat = stage(feat.drop("text_1", "text_2"))
+    return feat, feat.withColumn("label", (F.col("jaccard") >= 0.5).cast("double"))
+
+
 def q_mlp_pair_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """From-scratch 1-hidden-layer MLP pair scorer (reference V8,
     deep_learning.py:115-187 feedforward net): distributed features,
     bounded deterministic driver fit, broadcast-weights Arrow scoring.
     Rows-only; pinned by pytest vs a driver-side numpy oracle."""
-    from entity_deduplication_spark.operators.dedup import ngram_jaccard_pairs
     from entity_deduplication_spark.operators.ml import (
-        pair_features,
         score_with_mlp,
         train_mlp_scorer,
     )
-    from entity_deduplication_spark.operators.pairs import attach_pair_features
 
-    docs = _t(spark, sf_dir, "documents")
-    cand = ngram_jaccard_pairs(docs, "doc_id", "text", NGRAM_N, 0.1)
-    feat = attach_pair_features(cand, docs, ["text"], "doc_id")
-    from entity_deduplication_spark.sources.io import stage
-
-    # one materialization for the two consumers (driver-side fit +
-    # distributed scoring); they read only features and jaccard
-    feat = pair_features(feat, text1="text_1", text2="text_2")
-    feat = stage(feat.drop("text_1", "text_2"))
-    labeled = feat.withColumn("label", (F.col("jaccard") >= 0.5).cast("double"))
+    feat, labeled = _doc_pair_features(spark, sf_dir)
     params = train_mlp_scorer(labeled)
     return score_with_mlp(feat, params).select("id1", "id2", "mlp_score")
 
@@ -710,26 +719,12 @@ def q_ml_pair_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-vectorized features, driver-side deterministic fit on the small
     labeled sample, broadcast-weights scoring. Rows-only (model output);
     gated by pytest vs a driver-side numpy oracle."""
-    from entity_deduplication_spark.operators.dedup import ngram_jaccard_pairs
     from entity_deduplication_spark.operators.ml import (
-        pair_features,
         score_with_model,
         train_pair_scorer,
     )
-    from entity_deduplication_spark.operators.pairs import attach_pair_features
 
-    docs = _t(spark, sf_dir, "documents")
-    cand = ngram_jaccard_pairs(docs, "doc_id", "text", NGRAM_N, 0.1)
-    feat = attach_pair_features(cand, docs, ["text"], "doc_id")
-    from entity_deduplication_spark.sources.io import stage
-
-    # one materialization for the two consumers (driver-side fit +
-    # distributed scoring); they read only features and jaccard
-    feat = pair_features(feat, text1="text_1", text2="text_2")
-    feat = stage(feat.drop("text_1", "text_2"))
-    labeled = feat.withColumn(
-        "label", (F.col("jaccard") >= 0.5).cast("double")
-    )
+    feat, labeled = _doc_pair_features(spark, sf_dir)
     w, b = train_pair_scorer(labeled)
     return score_with_model(feat, w, b).select("id1", "id2", "ml_score")
 

@@ -132,17 +132,24 @@ def _collect_training_sample(
     return sample.toPandas()
 
 
+def _fit_on_sample(labeled: DataFrame, fit, max_rows: int):
+    """``fit(X, y)`` on the bounded training sample of a (features,
+    label) DataFrame, its rows sorted by features so the fit does not
+    depend on the collection order."""
+    pdf = _collect_training_sample(labeled, "label", max_rows)
+    X = np.stack(pdf["features"].to_numpy())
+    y = pdf["label"].to_numpy().astype(np.float64)
+    order = np.lexsort(X.T[::-1])
+    return fit(X[order], y[order])
+
+
 def train_pair_scorer(
     labeled: DataFrame, max_rows: int = 10_000
 ) -> tuple[np.ndarray, float]:
     """Fit on a (features, label) DataFrame. At most ``max_rows`` rows are
     collected (deterministic hash-ordered sample — see
     _collect_training_sample); sort by features for order-independence."""
-    pdf = _collect_training_sample(labeled, "label", max_rows)
-    X = np.stack(pdf["features"].to_numpy())
-    y = pdf["label"].to_numpy().astype(np.float64)
-    order = np.lexsort(X.T[::-1])
-    return fit_logistic(X[order], y[order])
+    return _fit_on_sample(labeled, fit_logistic, max_rows)
 
 
 def score_with_model(
@@ -210,11 +217,7 @@ def mlp_forward(X: np.ndarray, params: dict) -> np.ndarray:
 def train_mlp_scorer(labeled: DataFrame) -> dict:
     """Fit the MLP on a bounded, deterministic driver sample (same
     collection contract as train_pair_scorer, at 10,000 rows)."""
-    pdf = _collect_training_sample(labeled, "label", 10_000)
-    X = np.stack(pdf["features"].to_numpy())
-    y = pdf["label"].to_numpy().astype(np.float64)
-    order = np.lexsort(X.T[::-1])
-    return fit_mlp(X[order], y[order])
+    return _fit_on_sample(labeled, fit_mlp, 10_000)
 
 
 def score_with_mlp(pairs_with_features: DataFrame, params: dict) -> DataFrame:

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from entity_deduplication_spark.config import DedupConfig
@@ -147,6 +147,34 @@ def unified_band_table(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     )
 
 
+def band_oversize_rule(cfg: DedupConfig) -> tuple[Column, Column]:
+    """(block_size_limit, on_oversize) of the unified band table as
+    Columns, decided per row by the band family ``src``.
+
+    on_oversize="chain": saturated band buckets emit O(n) chain
+    candidates instead of all pairs (see DedupConfig.band_bucket_cap) —
+    full enumeration would emit C(n, 2) pairs per degenerate bucket
+    (super-linear on low-entropy payloads, exactly what a
+    1000-executor verify shuffle cannot afford), while skipping
+    outright (round 4's policy) silently LOSES any real duplicate
+    group > cap whose members share every band key and have no exact
+    key (e.g. re-encodes of one clip with empty transcripts). Chains
+    keep the pair mass linear AND let connected components recover
+    such groups through verified-chain transitivity.
+
+    The substring-fingerprint family (src 3) uses a LOWER cap
+    (fp_df_cap) with SKIP — a fingerprint shared by many clips is a
+    stopword-like common phrase whose bucket grows ∝ corpus size (see
+    DedupConfig.fp_df_cap); the minhash/simhash families keep
+    chain-at-cap, which also covers duplicate-flood recovery for the
+    rows a fp-skip drops."""
+    is_fp = F.col("src") == F.lit(3)
+    return (
+        F.when(is_fp, F.lit(cfg.fp_df_cap)).otherwise(F.lit(cfg.band_bucket_cap)),
+        F.when(is_fp, F.lit("skip")).otherwise(F.lit("chain")),
+    )
+
+
 def candidate_pairs(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     """The pairs verification must decide: candidates from ALL blocking
     strategies via one unified block table -> one skew-aware self-join,
@@ -159,32 +187,9 @@ def candidate_pairs(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     instead of three times (one shuffle chain instead of three).
     """
     unified = unified_band_table(signatures, cfg)
-    # on_oversize="chain": saturated band buckets emit O(n) chain
-    # candidates instead of all pairs (see DedupConfig.band_bucket_cap) —
-    # full enumeration would emit C(n, 2) pairs per degenerate bucket
-    # (super-linear on low-entropy payloads, exactly what a
-    # 1000-executor verify shuffle cannot afford), while skipping
-    # outright (round 4's policy) silently LOSES any real duplicate
-    # group > cap whose members share every band key and have no exact
-    # key (e.g. re-encodes of one clip with empty transcripts). Chains
-    # keep the pair mass linear AND let connected components recover
-    # such groups through verified-chain transitivity.
-    #
-    # Per-family oversize policy as Columns, routed per row by the same
-    # rule as a scalar policy: the substring-fingerprint family (src 3)
-    # uses a LOWER cap (fp_df_cap) with SKIP — a fingerprint shared by
-    # many clips is a stopword-like common phrase whose bucket grows ∝
-    # corpus size (see DedupConfig.fp_df_cap); the minhash/simhash
-    # families keep chain-at-cap, which also covers duplicate-flood
-    # recovery for the rows a fp-skip drops.
-    is_fp = F.col("src") == F.lit(3)
+    limit, policy = band_oversize_rule(cfg)
     pairs = block_self_join_pairs(
-        unified,
-        key_cols=BAND_KEY_COLS,
-        block_size_limit=F.when(is_fp, F.lit(cfg.fp_df_cap)).otherwise(
-            F.lit(cfg.band_bucket_cap)
-        ),
-        on_oversize=F.when(is_fp, F.lit("skip")).otherwise(F.lit("chain")),
+        unified, key_cols=BAND_KEY_COLS, block_size_limit=limit, on_oversize=policy
     )
     # greatest skips NULLs: true iff some digest is equal and non-NULL
     linked = F.greatest(

@@ -2,7 +2,8 @@
 
 Local-mode testing stands in for a multi-executor cluster; every setting
 here is also correct on a real cluster (AQE, skew-join splitting, Arrow
-batching). ``cores`` is the N-vs-4N scaling knob used by bench.py.
+batching). ``cores`` is the N-vs-kN scaling knob: tools/scale_run.py
+takes one sample per core level.
 """
 
 from __future__ import annotations

@@ -28,16 +28,16 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from entity_deduplication_spark.config import DedupConfig
-    from entity_deduplication_spark.datagen import DATA_DIR
     from entity_deduplication_spark.plans.pipeline import (
+        band_oversize_rule,
         build_signatures,
         unified_band_table,
     )
     from entity_deduplication_spark.session import get_spark
     from entity_deduplication_spark.sources.io import stage
-    from tools.scale_run import ensure_chunks
+    from tools.scale_run import chunk_cache
 
-    chunk_paths = ensure_chunks(os.path.join(DATA_DIR, "scale_800k_v2"), n_clips)
+    chunk_paths = chunk_cache(n_clips)
     spark = get_spark(app_name=f"band-audit-{n_clips}", cores=cores)
     spark.conf.set(
         "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism * 8)
@@ -51,16 +51,13 @@ def main() -> None:
     sizes = unified.groupBy("src", "band_idx", "band_key").agg(
         F.count(F.lit(1)).alias("bn")
     )
-    # mirror candidate_pairs' per-family policy: fingerprint (src 3) uses
-    # fp_df_cap with skip; everything else chains above band_bucket_cap
-    cap_col = F.when(F.col("src") == 3, F.lit(cfg.fp_df_cap)).otherwise(
-        F.lit(cap)
-    )
+    # candidate_pairs' per-family cap and oversize policy
+    limit, policy = band_oversize_rule(cfg)
     full = F.when(
-        F.col("bn") <= cap_col, (F.col("bn") * (F.col("bn") - 1) / 2)
+        F.col("bn") <= limit, (F.col("bn") * (F.col("bn") - 1) / 2)
     ).otherwise(F.lit(0.0))
     chain = F.when(
-        (F.col("bn") > cap_col) & (F.col("src") != 3), F.col("bn") - 1
+        (F.col("bn") > limit) & (policy == "chain"), F.col("bn") - 1
     ).otherwise(F.lit(0.0))
     agg = (
         sizes.filter(F.col("bn") >= 2)

@@ -1,4 +1,4 @@
-"""Run accounting for bench.py and the scale tools.
+"""Run accounting for bench.py and tools/scale_run.py.
 
 * ``stage_totals``: executor run and CPU time summed over the session's
   completed stages, read from Spark's in-process status store (the UI

@@ -1,28 +1,49 @@
-"""One 10x-scale validation run of the flagship pipeline (~800k clips).
+"""Scale samples of the flagship pipeline, one per core level.
 
-All routine scale claims are plan audits + 96k-clip measurements; this
-tool runs the full audio dedup pipeline ONCE at ~10x that size to catch
-any constant that grows with n (CC iteration count, band-table size,
-checkpoint I/O, driver-side state). It
+Usage: python tools/scale_run.py <n_clips> [cores ...]
 
-1. materializes N_CLIPS as independent chunk parquet files (parallel
-   worker processes — one 32 GB pandas frame would not fit a driver),
-   each chunk with its own planted duplicate structure;
-2. runs DedupPipeline over the whole directory at local[CORES], with
-   occupancy from the status store's stage totals and process-tree CPU
-   (tools/runstats.py, perfbench/procs.py);
-3. appends the result to BENCH/SCALE_r{N}.json (``runstats.current_round``)
-   and prints one JSON line.
+The tool materializes ``n_clips`` as chunk parquet files (``chunk_cache``:
+a shared cache from which every run size reads the prefix it needs) and
+starts no Spark itself. Each core level then runs once, in turn, in a
+fresh interpreter and JVM (``fresh_sample`` of ``run_sample``):
+``DedupPipeline`` over the chunk files at local[cores], or at the cores
+``session.get_spark`` picks when no level is given. Each sample is
+appended to BENCH/SCALE_rNN.json (``runstats.current_round``) and
+printed as one RESULT line:
 
-Usage: python tools/scale_run.py [n_clips] [cores]
-(defaults 800_000 and the cores ``session.get_spark`` picks:
-$SPARK_GRAFT_CPUS, else the CPUs this process may run on).
+    wall_s, clips_per_sec     the run, read plan to clusters written
+    exec_run_s, exec_cpu_s    executor run and CPU time of its stages
+                              (``runstats.stage_totals``)
+    tree_cpu_s                CPU of the JVM, the pyspark daemon and the
+                              Python workers (``perfbench.procs``)
+    occupancy = exec_run_s / (wall_s * cores)
+                              how full the engine keeps its task slots; a
+                              preempted task still holds its slot
+    delivery  = tree_cpu_s / exec_run_s
+                              CPU the host delivered per occupied
+                              slot-second: the host's share, not the plan's
+    host_busy_s, host_steal_s host-wide /proc/stat deltas
+    n_clusters
+
+So wall_s = tree_cpu_s / (cores * occupancy * delivery), and between the
+smallest level N and the largest level kN (work = tree_cpu_s):
+
+    eff_wall   = (clips_per_sec_kN / clips_per_sec_N) / k
+               = (occ_kN / occ_N) * (del_kN / del_N) / (work_kN / work_N)
+    eff_engine = (occ_kN / occ_N) / (work_kN / work_N)
+
+eff_engine is the part co-tenants do not move. With two or more levels
+the tool prints one SUMMARY line: per-level medians over every sample of
+``n_clips`` in the round's file, and both efficiencies from those
+medians. Re-run the command to add samples. The tool exits non-zero if
+those samples disagree on ``n_clusters``: the pipeline is deterministic.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -30,9 +51,16 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from perfbench.procs import tree_cpu_s  # noqa: E402
-from tools.runstats import RETAIN_STAGES, current_round, stage_totals  # noqa: E402
+from tools.runstats import (  # noqa: E402
+    RETAIN_STAGES,
+    current_round,
+    host_cpu_s,
+    stage_totals,
+)
 
 CHUNK = 50_000
+# per-level medians of the summary
+MEDIANS = ("wall_s", "clips_per_sec", "occupancy", "delivery", "tree_cpu_s")
 
 
 def _gen_chunk(args: tuple[str, int, int, int]) -> str:
@@ -96,18 +124,19 @@ def ensure_chunks(data_dir: str, n_clips: int) -> list[str]:
     return [j[0] for j in jobs]
 
 
-def main() -> None:
-    n_clips = int(sys.argv[1]) if len(sys.argv) > 1 else 800_000
-    cores = int(sys.argv[2]) if len(sys.argv) > 2 else None
-    # shared chunk cache: any run size reads the prefix of chunk files
-    # it needs (a partial last chunk is named by its row count)
-    # v2: chunk files carry per-chunk id_offset (globally unique clip_ids);
-    # v1 chunks (scale_800000/) restarted ids per chunk and are invalid
+def chunk_cache(n_clips: int) -> list[str]:
+    """The shared chunk cache's files covering ``n_clips``, built where
+    missing. v2 chunks carry per-chunk id offsets (globally unique
+    clip_ids); the v1 chunks (scale_800000/) restarted ids per chunk."""
     from entity_deduplication_spark.datagen import DATA_DIR
 
-    data_dir = os.path.join(DATA_DIR, "scale_800k_v2")
-    chunk_paths = ensure_chunks(data_dir, n_clips)
+    return ensure_chunks(os.path.join(DATA_DIR, "scale_800k_v2"), n_clips)
 
+
+def run_sample(chunk_paths: list[str], n_clips: int, cores: int | None) -> dict:
+    """One timed pipeline run in a new Spark session of this process;
+    run it in a fresh interpreter (``fresh_sample``) so every sample pays
+    the same cold JVM."""
     from entity_deduplication_spark.plans.pipeline import DedupPipeline
     from entity_deduplication_spark.session import get_spark
 
@@ -152,36 +181,88 @@ def main() -> None:
     spark.conf.set("spark.sql.shuffle.partitions", str(cores * 8))
     clips = spark.read.parquet(*chunk_paths)
 
-    run0, _ = stage_totals(spark)
+    run0, cpu0 = stage_totals(spark)
     tree0 = tree_cpu_s()
+    busy0, steal0 = host_cpu_s()
     t0 = time.time()
     res = DedupPipeline(spark).run(clips)
     res.clusters.write.mode("overwrite").format("noop").save()
     wall = time.time() - t0
+    busy1, steal1 = host_cpu_s()
     tree = tree_cpu_s() - tree0
-    run_s = stage_totals(spark)[0] - run0
+    run1, cpu1 = stage_totals(spark)
+    run_s = run1 - run0
     n_clusters = res.clusters.select("cluster_id").distinct().count()
-
-    out = {
+    spark.stop()
+    return {
         "n_clips": n_clips,
         "cores": cores,
         "wall_s": round(wall, 1),
         "clips_per_sec": round(n_clips / wall, 1),
-        "occupancy": round(run_s / (wall * cores), 3),
+        "exec_run_s": round(run_s, 1),
+        "exec_cpu_s": round(cpu1 - cpu0, 1),
         "tree_cpu_s": round(tree, 1),
-        "cpu_per_clip_ms": round(1000.0 * tree / n_clips, 2),
+        "occupancy": round(run_s / (wall * cores), 3),
+        "delivery": round(tree / run_s, 3),
+        "host_busy_s": round(busy1 - busy0, 1),
+        "host_steal_s": round(steal1 - steal0, 1),
         "n_clusters": n_clusters,
     }
+
+
+def fresh_sample(chunk_paths: list[str], n_clips: int, cores: int | None) -> dict:
+    """``run_sample`` in a newly spawned interpreter, which starts its
+    own JVM and exits with it."""
+    import concurrent.futures as cf
+    import multiprocessing
+
+    with cf.ProcessPoolExecutor(
+        max_workers=1, mp_context=multiprocessing.get_context("spawn")
+    ) as ex:
+        return ex.submit(run_sample, chunk_paths, n_clips, cores).result()
+
+
+def summarize(samples: list[dict], levels: list[int]) -> dict:
+    """Per-level medians of ``samples`` (one n_clips) and the N-vs-kN
+    efficiencies between the smallest and the largest of ``levels``."""
+    med = {}
+    for c in levels:
+        at = [s for s in samples if s["cores"] == c]
+        med[c] = {k: round(statistics.median(s[k] for s in at), 3) for k in MEDIANS}
+        med[c]["samples"] = len(at)
+    n, kn = med[min(levels)], med[max(levels)]
+    work = kn["tree_cpu_s"] / n["tree_cpu_s"]
+    speedup = kn["clips_per_sec"] / n["clips_per_sec"]
+    return {
+        "levels": {str(c): med[c] for c in levels},
+        "eff_engine": round(kn["occupancy"] / n["occupancy"] / work, 3),
+        "eff_wall": round(speedup / (max(levels) / min(levels)), 3),
+    }
+
+
+def main() -> None:
+    if len(sys.argv) < 2:
+        sys.exit("usage: python tools/scale_run.py <n_clips> [cores ...]")
+    n_clips = int(sys.argv[1])
+    levels = [int(c) for c in sys.argv[2:]]
+    chunk_paths = chunk_cache(n_clips)
     path = os.path.join(REPO, "BENCH", f"SCALE_r{current_round(REPO):02d}.json")
     hist = []
     if os.path.exists(path):
         with open(path) as f:
             hist = json.load(f)
-    hist.append(out)
-    with open(path, "w") as f:
-        json.dump(hist, f, indent=1)
-    print("RESULT " + json.dumps(out))
-    spark.stop()
+    for cores in levels or [None]:
+        sample = fresh_sample(chunk_paths, n_clips, cores)
+        hist.append(sample)
+        with open(path, "w") as f:
+            json.dump(hist, f, indent=1)
+        print("RESULT " + json.dumps(sample), flush=True)
+    same = [s for s in hist if s["n_clips"] == n_clips]
+    if len(set(levels)) > 1:
+        print("SUMMARY " + json.dumps(summarize(same, sorted(set(levels)))))
+    clusters = sorted({s["n_clusters"] for s in same})
+    if len(clusters) > 1:
+        sys.exit(f"n_clusters disagree at n_clips={n_clips}: {clusters}")
 
 
 if __name__ == "__main__":
